@@ -21,10 +21,11 @@ import graft.streaming.{CorpusCleanStream, MetricsListener, StreamingPipeline}
   *      LSH index);
   *   2. `near_pipeline_rows_per_sec` — the reference's actual deployed
   *      workload (README.md:255-261 instruments exactly this pipe over JMX):
-  *      three CDC topics → watermarked dedup ×3 → two ±2 s stream-stream
-  *      interval joins → filter/decode/fan-out → per-batch balance fold into
-  *      the upsert store ([[graft.streaming.StreamingPipeline.dualSink]] —
-  *      the production multi-sink shape);
+  *      three CDC topics → one keyed state per receipt for the watermarked
+  *      dedup ×3 and both ±2 s joins → filter/decode/fan-out → per-batch
+  *      balance fold into the upsert store
+  *      ([[graft.streaming.StreamingPipeline.dualSink]] — the production
+  *      multi-sink shape);
   *   3. `ann_serve_queries_per_sec` — the streamed ANN serving tier
   *      ([[graft.operators.Embeddings.rerankProbeSink]]: query micro-batches
   *      answered from the pre-built IVF∘PQ index via retrieve-then-rerank);
@@ -136,11 +137,12 @@ object StreamBench {
     * three CDC topics ([[SyntheticCdc]], verbatim redelivery included — the
     * same feed the `near_*` oracle queries pin), each topic fed time-ordered
     * (the CDC commit-order contract) in `chunks` micro-batches through the
-    * FULL streaming plan — dedup ×3, both ±2 s interval joins, decode +
-    * double-entry fan-out — with the per-batch balance deltas folded into
-    * the in-memory upsert store ([[StreamingPipeline.dualSink]]).
-    * `rowsIn` counts all three topics; `rowsOut` the emitted transfer legs;
-    * state is the dedup + join buffers the watermark bounds.
+    * FULL streaming plan — dedup ×3 and both ±2 s joins in ONE keyed state
+    * per receipt ([[graft.operators.ReceiptState]]), decode + double-entry
+    * fan-out — with the per-batch balance deltas folded into the in-memory
+    * upsert store ([[StreamingPipeline.dualSink]]). `rowsIn` counts all
+    * three topics; `rowsOut` the emitted transfer legs; state is the
+    * per-receipt members the watermark bounds, one operator.
     */
   def runNearPipeline(spark: SparkSession, sfDir: String, chunks: Int): Result = {
     import spark.implicits._

@@ -57,7 +57,8 @@ object ConnectedComponents {
   /** Label every vertex with the min id reachable from it.
     *
     * @param edges    undirected edge list (direction is ignored; self-loops
-    *                 and duplicates are tolerated)
+    *                 and duplicates are tolerated; an edge with a NULL
+    *                 endpoint is dropped)
     * @param srcCol   source-id column name (castable to long)
     * @param dstCol   destination-id column name
     * @param vertices optional extra vertex universe (first column, castable to
@@ -87,8 +88,12 @@ object ConnectedComponents {
     // and the rest of the universe attaches as singletons at the END via one
     // anti-join. At 100 TB the corpus is V and the dedup evidence is ≪ V, so
     // rounds must scale with the evidence, not the corpus.
+    // An edge with a NULL endpoint joins nothing: it is dropped before the
+    // explode, so NULL never becomes a vertex and the edge gives its non-NULL
+    // endpoint no self-loop. The filter pipelines into the cut's job.
     val selfSym = Lineage.cut(
       edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+        .filter(col("u").isNotNull && col("v").isNotNull)
         .select(explode(array(
           struct(col("u"), col("v")),
           struct(col("v").as("u"), col("u").as("v")),

@@ -13,8 +13,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window store (TokenBalance.java:82-90). Ids are per-stream —
   * `receipt_id` for receipts/outcomes and `(receipt_id, index_in_action_receipt)`
   * for actions (TokenBalance.java:96-113); the string prefixes the reference adds
-  * ("receipts-", …) only exist because all three streams share one store — in
-  * Spark each stream has its own state, so the natural keys suffice.
+  * ("receipts-", …) only exist because all three streams share one store. The
+  * streaming token pipeline keeps that shape without the prefixes: its dedup ×3
+  * and both joins share one state per `receipt_id`, with the topic as part of
+  * each member's id ([[ReceiptState]]). These operators serve every other
+  * stream, and the batch token pipeline.
   *
   * Spark-first mapping (SURVEY.md §2 #3):
   *   - batch: `dropDuplicates(idCols)` — a hash aggregate, map-side partial.

@@ -896,59 +896,9 @@ object Embeddings {
           col("n_scored"), col("n_edges"))
     }.reduce(_.unionByName(_))
 
-  /** BEAM SEARCH over a kNN graph — the SERVING query path that makes the
-    * NN-Descent/HNSW-family index investment pay off (the graph analogue of
-    * [[ivfPqRerankFromIndex]]'s retrieve stage): seeded from the IVF probe
-    * (each query's `nProbe` nearest centroids, self excluded BEFORE ranking
-    * so every query keeps `nProbe` live entry points), the search runs
-    * `rounds` bounded expansion waves — frontier = current per-query
-    * top-`beam` of everything scored so far, expansion = frontier ⋈ the
-    * graph's edge list, fresh candidates = expanded nodes never scored for
-    * that query (anti-join against the visited set), each rescored with the
-    * exact cosine. Greedy best-first with full visited memory, so the
-    * result is deterministic and hash-checkable.
-    *
-    * Scale shape: every step is an equi-join or a bounded heap. The frontier
-    * is queries×beam rows (broadcast into the edge join — the corpus-sized
-    * side is the edge list, touched by key), the visited set is bounded by
-    * queries×(nProbe + rounds·beam·k) rows, and scoring joins candidates to
-    * the vector store by id (point lookups, the [[exactRerank]] shape). No
-    * stage touches all vectors except the id-keyed score join's build side;
-    * nothing is quadratic in the corpus. Per-wave [[Lineage]] cuts
-    * materialize the visited set once (it is read by the next beam, the
-    * anti-join, and the union — the [[nnDescentRound]] chaining pattern).
-    *
-    * Returns one (label, visitedSoFar, freshlyScored) triple per stage so
-    * the recall gate can price each wave: n_scored = |freshlyScored| is the
-    * number of exact distance evaluations the wave paid — the serving-cost
-    * axis of the ladder.
-    *
-    * ENTRY-PATH TRADEOFF (NSW + IVF seed vs HNSW's layer hierarchy): this
-    * graph is single-layer, entered through the IVF centroid probe — the
-    * probe does the same job as HNSW's upper layers (land the search near
-    * the target before local expansion) at cost O(C) per query against C
-    * broadcast centroids. That substitution holds while C stays
-    * broadcast-small and cells stay balanced: probe cost grows linearly in
-    * C, and keeping cells at a fixed size under corpus growth n forces
-    * C ∝ n. HNSW's log-layer stack replaces that linear entry scan with
-    * O(log n) hops, so the crossover is where C(n) stops fitting a
-    * broadcast / the per-query centroid scan dominates the beam waves —
-    * around C in the hundreds of thousands. Below that (any harness scale,
-    * and most single-tenant corpora), the flat probe is simpler, trains
-    * nothing extra, and its cost is priced by `q_graph_search_recall`'s
-    * seed row; past it, add layers (each layer is this same operator over a
-    * sampled node subset, entered from the layer above — the recursion HNSW
-    * hard-codes).
-    */
-  def graphSearchStages(vectors: DataFrame, queries: DataFrame, graph: DataFrame,
-                        centroids: DataFrame, nProbe: Int, beam: Int,
-                        rounds: Int): Seq[(String, DataFrame, DataFrame)] = {
-    val (visited0, entries) = graphSearchSeed(vectors, queries, centroids, nProbe)
-    graphSearchWaves(vectors, queries, graph, visited0, entries, beam, rounds)
-  }
-
-  /** [[graphSearchStages]] for a consumer that reads ONLY the final visited
-    * set (the pure-serve path): per-round `fresh` frames are left lazy (their
+  /** [[graphSearchSeed]] + [[graphSearchWaves]] for a consumer that reads
+    * ONLY the final visited set (the pure-serve path): per-round `fresh`
+    * frames are left lazy (their
     * sole consumer is the score join feeding the round's visited cut) and the
     * last round's visited is left lazy too (its sole consumer is the caller's
     * one top-k job) — the serve pays `rounds − 1` checkpoint jobs instead of
@@ -964,8 +914,8 @@ object Embeddings {
   }
 
   /** The beam-INDEPENDENT seed of the search — the IVF entry probe and its
-    * exact scores, cut once: (visited₀, entries). Hoisted out of
-    * [[graphSearchStages]] so [[graphSearchSweep]] pays it once across all
+    * exact scores, cut once: (visited₀, entries). Kept apart from
+    * [[graphSearchWaves]] so [[graphSearchSweep]] pays it once across all
     * widths (the oracle hoists its twin, `gsProbeCtes`, identically).
     */
   private[graft] def graphSearchSeed(vectors: DataFrame, queries: DataFrame,
@@ -993,7 +943,52 @@ object Embeddings {
     (Lineage.cut(scored), entries)
   }
 
-  /** The per-width expansion waves over a pre-seeded visited set. */
+  /** BEAM SEARCH over a kNN graph — the SERVING query path that makes the
+    * NN-Descent/HNSW-family index investment pay off (the graph analogue of
+    * [[ivfPqRerankFromIndex]]'s retrieve stage): seeded from the IVF probe
+    * (each query's `nProbe` nearest centroids, self excluded BEFORE ranking
+    * so every query keeps `nProbe` live entry points), the search runs
+    * `rounds` bounded expansion waves — frontier = current per-query
+    * top-`beam` of everything scored so far, expansion = frontier ⋈ the
+    * graph's edge list, fresh candidates = expanded nodes never scored for
+    * that query (anti-join against the visited set), each rescored with the
+    * exact cosine. Greedy best-first with full visited memory, so the
+    * result is deterministic and hash-checkable.
+    *
+    * Scale shape: every step is an equi-join or a bounded heap. The frontier
+    * is queries×beam rows (broadcast into the edge join — the corpus-sized
+    * side is the edge list, touched by key), the visited set is bounded by
+    * queries×(nProbe + rounds·beam·k) rows, and scoring joins candidates to
+    * the vector store by id (point lookups, the [[exactRerank]] shape). No
+    * stage touches all vectors except the id-keyed score join's build side;
+    * nothing is quadratic in the corpus. Per-wave [[Lineage]] cuts
+    * materialize the visited set once (it is read by the next beam, the
+    * anti-join, and the union — the [[nnDescentRound]] chaining pattern).
+    *
+    * [[graphSearchSeed]] makes the entry probe; this runs the per-width
+    * expansion waves over its visited set. Returns one (label,
+    * visitedSoFar, freshlyScored) triple per stage so
+    * the recall gate can price each wave: n_scored = |freshlyScored| is the
+    * number of exact distance evaluations the wave paid — the serving-cost
+    * axis of the ladder.
+    *
+    * ENTRY-PATH TRADEOFF (NSW + IVF seed vs HNSW's layer hierarchy): this
+    * graph is single-layer, entered through the IVF centroid probe — the
+    * probe does the same job as HNSW's upper layers (land the search near
+    * the target before local expansion) at cost O(C) per query against C
+    * broadcast centroids. That substitution holds while C stays
+    * broadcast-small and cells stay balanced: probe cost grows linearly in
+    * C, and keeping cells at a fixed size under corpus growth n forces
+    * C ∝ n. HNSW's log-layer stack replaces that linear entry scan with
+    * O(log n) hops, so the crossover is where C(n) stops fitting a
+    * broadcast / the per-query centroid scan dominates the beam waves —
+    * around C in the hundreds of thousands. Below that (any harness scale,
+    * and most single-tenant corpora), the flat probe is simpler, trains
+    * nothing extra, and its cost is priced by `q_graph_search_recall`'s
+    * seed row; past it, add layers (each layer is this same operator over a
+    * sampled node subset, entered from the layer above — the recursion HNSW
+    * hard-codes).
+    */
   private def graphSearchWaves(vectors: DataFrame, queries: DataFrame,
                                graph: DataFrame, visited0: DataFrame,
                                entries: DataFrame, beam: Int, rounds: Int,
@@ -1041,7 +1036,7 @@ object Embeddings {
     stages.result()
   }
 
-  /** The serving cut of [[graphSearchStages]]: per-query top-`k` of
+  /** The serving cut of [[graphSearchFinal]]: per-query top-`k` of
     * everything the search scored, as (query_id, neighbor_id, rank).
     */
   def graphSearch(vectors: DataFrame, queries: DataFrame, graph: DataFrame,
@@ -1138,7 +1133,7 @@ object Embeddings {
     * without ever rebuilding.
     *
     * Scale shape: one beam search for the batch (bounded, see
-    * [[graphSearchStages]]), then the re-prune touches ONLY the affected
+    * [[graphSearchWaves]]), then the re-prune touches ONLY the affected
     * nodes (≤ batch × k of them): their current edges come from one
     * broadcast semi-join against the edge list, scoring is id-keyed point
     * lookups, and the cut to `k` is the bounded TopK heap. Untouched nodes'

@@ -12,9 +12,14 @@ import graft.schema.NearSchemas
   *   decode + fan-out into 0–2 double-entry transfer legs → (a) transfer sink,
   *   (b) group-by affected account → fold into per-account running balances.
   *
-  * Every stage is a pure `DataFrame => DataFrame`, so the identical plan runs in
+  * Every stage is a pure `DataFrame => DataFrame`, so the same calls run in
   * batch mode (tests, backfill/replay — the reference's application-reset path,
   * README.md:199-205) and under Structured Streaming (see graft.streaming).
+  * One stage dispatches on `isStreaming`: [[receiptOutcomeActions]] (dedup ×3
+  * and both joins, #3–#5). In batch it is three [[Dedup.exact]] aggregates and
+  * two equi-joins; on three streams it is ONE keyed state per receipt
+  * ([[ReceiptState]]), because a streaming plan pays per stateful operator ×
+  * partition every trigger.
   *
   * Scale notes: the joins are equi-joins on `receipt_id` — at 100 TB these are
   * shuffle hash/sort-merge joins co-partitioned on the key across all three
@@ -41,22 +46,33 @@ object TokenPipeline {
 
   // ---------------------------------------------------------------- dedup (#3)
 
-  def dedupReceipts(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("r_event_time", eventTime(col("included_in_block_timestamp")))
-    Dedup(withTime, "r_event_time", cfg.dedupDelay, Seq("receipt_id"))
-  }
+  private def receiptTime(df: DataFrame): DataFrame =
+    df.withColumn("r_event_time", eventTime(col("included_in_block_timestamp")))
+  private def outcomeTime(df: DataFrame): DataFrame =
+    df.withColumn("o_event_time", eventTime(col("executed_in_block_timestamp")))
+  private def actionTime(df: DataFrame): DataFrame =
+    df.withColumn("a_event_time", eventTime(col("receipt_included_in_block_timestamp")))
 
-  def dedupOutcomes(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("o_event_time", eventTime(col("executed_in_block_timestamp")))
-    Dedup(withTime, "o_event_time", cfg.dedupDelay, Seq("receipt_id"))
-  }
+  def dedupReceipts(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(receiptTime(df), "r_event_time", cfg.dedupDelay, Seq("receipt_id"))
 
-  def dedupActions(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("a_event_time", eventTime(col("receipt_included_in_block_timestamp")))
-    Dedup(withTime, "a_event_time", cfg.dedupDelay, Seq("receipt_id", "index_in_action_receipt"))
-  }
+  def dedupOutcomes(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(outcomeTime(df), "o_event_time", cfg.dedupDelay, Seq("receipt_id"))
+
+  def dedupActions(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(actionTime(df), "a_event_time", cfg.dedupDelay, Seq("receipt_id", "index_in_action_receipt"))
 
   // ------------------------------------------------------- interval joins (#4, #5)
+
+  // the columns each side contributes to the joined record, in output order
+  private val ReceiptCols = Seq("receipt_id", "included_in_block_hash",
+    "included_in_chunk_hash", "index_in_chunk", "included_in_block_timestamp",
+    "predecessor_account_id", "receiver_account_id",
+    "originated_from_transaction_hash", "r_event_time")
+  private val OutcomeCols = Seq("gas_burnt", "tokens_burnt", "executor_account_id",
+    "status", "shard_id", "o_event_time")
+  private val ActionCols = Seq("index_in_action_receipt", "action_kind", "args",
+    "a_event_time")
 
   /** Two ±tolerance equi-joins on `receipt_id`, producing the flat
     * receipt⊎outcome⊎action record (the reference nests the three structs only
@@ -70,19 +86,9 @@ object TokenPipeline {
              cfg: Config): DataFrame = {
     val tol = expr(s"INTERVAL ${cfg.joinToleranceMs} MILLISECONDS")
 
-    val r = receipts.select(
-      col("receipt_id"), col("included_in_block_hash"), col("included_in_chunk_hash"),
-      col("index_in_chunk"), col("included_in_block_timestamp"),
-      col("predecessor_account_id"), col("receiver_account_id"),
-      col("originated_from_transaction_hash"), col("r_event_time"))
-
-    val o = outcomes.select(
-      col("receipt_id").as("o_receipt_id"), col("gas_burnt"), col("tokens_burnt"),
-      col("executor_account_id"), col("status"), col("shard_id"), col("o_event_time"))
-
-    val a = actions.select(
-      col("receipt_id").as("a_receipt_id"), col("index_in_action_receipt"),
-      col("action_kind"), col("args"), col("a_event_time"))
+    val r = receipts.select(ReceiptCols.map(col): _*)
+    val o = outcomes.select(col("receipt_id").as("o_receipt_id") +: OutcomeCols.map(col): _*)
+    val a = actions.select(col("receipt_id").as("a_receipt_id") +: ActionCols.map(col): _*)
 
     r.join(o,
         col("receipt_id") === col("o_receipt_id") &&
@@ -226,13 +232,25 @@ object TokenPipeline {
 
   // -------------------------------------------------------------- composition
 
+  /** Raw CDC frames → the deduplicated, joined receipt⊎outcome⊎action
+    * record: the one stage where batch and streaming plans differ. Batch:
+    * [[Dedup.exact]] per topic and [[joined]]. Three streaming topics:
+    * [[ReceiptState]], one keyed state per receipt for the dedup ×3 and both
+    * joins. Any other mix (e.g. stream-static) keeps the per-stage operators.
+    */
+  def receiptOutcomeActions(receipts: DataFrame, outcomes: DataFrame,
+                            actions: DataFrame, cfg: Config): DataFrame =
+    if (receipts.isStreaming && outcomes.isStreaming && actions.isStreaming)
+      ReceiptState(receiptTime(receipts), outcomeTime(outcomes), actionTime(actions),
+        ReceiptCols, OutcomeCols, ActionCols, cfg)
+    else
+      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
+        dedupActions(actions, cfg), cfg)
+
   /** End-to-end: raw CDC frames → transfer legs. */
   def transfersFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
                        cfg: Config): DataFrame =
-    transfers(
-      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
-             dedupActions(actions, cfg), cfg),
-      cfg)
+    transfers(receiptOutcomeActions(receipts, outcomes, actions, cfg), cfg)
 
   /** End-to-end: raw CDC frames → per-account balances. */
   def balancesFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
@@ -244,7 +262,5 @@ object TokenPipeline {
     */
   def multiTokenBalancesFromRaw(receipts: DataFrame, outcomes: DataFrame,
                                 actions: DataFrame, cfg: Config): DataFrame =
-    balancesByToken(transfersAllTokens(
-      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
-             dedupActions(actions, cfg), cfg)))
+    balancesByToken(transfersAllTokens(receiptOutcomeActions(receipts, outcomes, actions, cfg)))
 }

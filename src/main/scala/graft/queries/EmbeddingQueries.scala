@@ -1982,8 +1982,9 @@ object EmbeddingQueries {
 
   /** One scored-expansion block of the beam-search oracle: score `src`'s
     * (query_id, neighbor_id) pairs with the shared sequential-double cosine
-    * (the exact arithmetic [[Embeddings.graphSearchStages]]' score join
-    * runs, so stored scores are bit-identical across engines).
+    * (the exact arithmetic the score joins of `Embeddings.graphSearchSeed`
+    * and `Embeddings.graphSearchWaves` run, so stored scores are
+    * bit-identical across engines).
     */
   private def gsScoreCte(name: String, src: String,
                          qtab: String = "q"): String =

@@ -12,17 +12,25 @@ import graft.sinks.BalanceUpsert
   * actual execution model (reference: TokenBalance.java:92-122,279-333).
   *
   * The pipeline stages in [[TokenPipeline]] are pure `DataFrame => DataFrame`
-  * and dispatch on `isStreaming` only inside [[graft.operators.Dedup]], so the
-  * SAME plan runs in batch (backfill/replay) and streaming; the parity suite
-  * asserts stream ≡ batch on the fixture feed. Under streaming:
+  * and dispatch on `isStreaming` at ONE stage,
+  * [[TokenPipeline.receiptOutcomeActions]], so the same call runs in batch
+  * (backfill/replay) and streaming; the parity suites assert stream ≡ batch.
+  * Under streaming:
   *
-  *   - dedup (#3) becomes `withWatermark` + `dropDuplicatesWithinWatermark`
-  *     (keep-first, bounded state — the RocksDB window store analogue);
-  *   - the two ±2 s joins (#4, #5) become watermarked stream-stream interval
-  *     joins with bounded join state;
-  *   - the balance fold (#13/#14) cannot be an unbounded streaming aggregate
-  *     after a stream-stream join in one plan (unsupported combination), so it
-  *     runs as the Spark-idiomatic equivalent of the reference's
+  *   - dedup ×3 (#3) and the two ±2 s joins (#4, #5) are ONE keyed stateful
+  *     operator ([[graft.operators.ReceiptState]]): the three watermarked
+  *     topics are unioned, keyed by `receipt_id`, and a single
+  *     `flatMapGroupsWithState` keeps the first delivery per (topic, key),
+  *     emits each joined triple once when its last member arrives, and
+  *     evicts a key once the watermark passes its max event time + the
+  *     dedup delay — the reference's one shared window store
+  *     (TokenBalance.java:82-90). Per-trigger cost scales with stateful
+  *     operators × partitions: the per-stage form (dedup ×3 + two interval
+  *     joins) committed 44 state stores per trigger at 4 partitions, this
+  *     one commits 4;
+  *   - the balance fold (#13/#14) is not a second stateful operator (an
+  *     unbounded aggregate would add one more store per partition per
+  *     trigger); it runs as the Spark-idiomatic equivalent of the reference's
   *     KTable→JDBC-upsert pair: per micro-batch, aggregate the batch's
   *     transfers into per-account deltas and merge them into the idempotent
   *     upsert sink ([[BalanceUpsert]]) — the running state lives in the sink,
@@ -50,10 +58,10 @@ object StreamingPipeline {
     * eviction (a KTable never expires; reference TokenBalance.java:279-331).
     *
     * Valid when the input is already a transfer stream (e.g. consumed from
-    * the transfers topic, the reference's own topology split): Spark cannot
-    * place an unbounded aggregate after a stream-stream join in one plan —
-    * for the fused single-plan variant use [[dualSink]], which keeps the
-    * running state in the sink instead. Start the returned writer with
+    * the transfers topic, the reference's own topology split): in one plan
+    * with [[transfers]] it would be a second stateful operator — for the
+    * single-plan variant use [[dualSink]], which keeps the running state in
+    * the sink instead. Start the returned writer with
     * `.start()` after adding sink options; pair with the reference's RocksDB
     * state backend via
     * `spark.sql.streaming.stateStore.providerClass=

@@ -32,6 +32,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
   }
 
+  test("an edge with a NULL endpoint is dropped, not labeled") {
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), None), (None, Some(4L)), (None, None))
+    val ccOf = (verts: Option[Seq[Long]]) => ConnectedComponents.run(
+      edges.toDF("a", "b"), "a", "b", verts.map(_.toDF("doc_id")))
+      .as[(Option[Long], Option[Long])].collect().toMap
+    // no NULL vertex, and 3 and 4 join nothing through their NULL edges
+    assert(ccOf(None) === Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L)))
+    assert(ccOf(Some(Seq(1L, 2L, 3L, 4L))) === Map(Some(1L) -> Some(1L),
+      Some(2L) -> Some(1L), Some(3L) -> Some(3L), Some(4L) -> Some(4L)))
+  }
+
   test("a long path converges within the iteration bound (pointer jumping)") {
     val n = 64L
     val edges = (1L until n).map(i => (i, i + 1))

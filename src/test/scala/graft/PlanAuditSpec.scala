@@ -87,7 +87,7 @@ class PlanAuditSpec extends SparkSpec {
     // probe (queries × C broadcast entry vectors) is the documented O(q·C)
     // design; the recall/sweep twins add the knnExact broadcast-query
     // baseline. The search waves themselves are pure equi-joins + bounded
-    // heaps (see Embeddings.graphSearchStages).
+    // heaps (see Embeddings.graphSearchWaves).
     "q_graph_search_indexed", "q_graph_search_recall", "q_graph_sweep",
     // Index MAINTENANCE gates: their lineages legitimately contain a build —
     // the store/live-side seed's O(n·C) broadcast-centroid assignment probe,

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalacheck.{Gen, Prop, Shrink, Test => SCTest}
 
 import graft.operators.TokenPipeline
 import graft.schema.NearSchemas
@@ -27,18 +28,37 @@ class StreamingParitySpec extends SparkSpec {
   import spark.implicits._
   import TokenFixture.cfg
 
+  private type Feeds = (Seq[String], Seq[String], Seq[String])
+
+  private lazy val fixtureFeeds: Feeds =
+    (TokenFixture.receipts(spark).toJSON.collect().toSeq,
+     TokenFixture.outcomes(spark).toJSON.collect().toSeq,
+     TokenFixture.actions(spark).toJSON.collect().toSeq)
+
   /** Feed three MemoryStreams with the given JSON feeds in `nChunks` pieces,
     * run the full pipeline, return (collected transfer rows, balance store).
     */
-  private def runStreaming(name: String, nChunks: Int,
-                           feeds: (Seq[String], Seq[String], Seq[String]) =
-                             (TokenFixture.receipts(spark).toJSON.collect().toSeq,
-                              TokenFixture.outcomes(spark).toJSON.collect().toSeq,
-                              TokenFixture.actions(spark).toJSON.collect().toSeq))
+  private def runStreaming(name: String, nChunks: Int, feeds: Feeds = fixtureFeeds)
       : (Set[String], Map[String, BalanceUpsert.BalanceRow]) = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def chunks(xs: Seq[String]): Seq[Seq[String]] = {
+      val size = math.max(1, math.ceil(xs.size.toDouble / nChunks).toInt)
+      xs.grouped(size).toSeq
+    }
+    val (r, o, a) = (chunks(feeds._1), chunks(feeds._2), chunks(feeds._3))
+    val steps = (0 until Seq(r.size, o.size, a.size).max).map { i =>
+      (r.lift(i).getOrElse(Nil), o.lift(i).getOrElse(Nil), a.lift(i).getOrElse(Nil))
+    }
+    val (legs, store) = runSteps(name, steps)
+    (legs.toSet, store)
+  }
 
-    val (rJson, oJson, aJson) = feeds
+  /** Run the full pipeline over `steps`, one delivery per step (each topic's
+    * rows of that step, then one `processAllAvailable`); return (every
+    * emitted transfer row, in emission order, and the balance store).
+    */
+  private def runSteps(name: String, steps: Seq[Feeds])
+      : (Seq[String], Map[String, BalanceUpsert.BalanceRow]) = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val rIn = MemoryStream[String]
     val oIn = MemoryStream[String]
@@ -56,7 +76,7 @@ class StreamingParitySpec extends SparkSpec {
     // both come out of the same foreachBatch — the production multi-sink
     // shape (see StreamingPipeline.dualSink).
     val store = new BalanceUpsert.MemoryStore
-    val txRows = scala.collection.mutable.Set.empty[String]
+    val txRows = scala.collection.mutable.ArrayBuffer.empty[String]
     val query = StreamingPipeline.dualSink(tx,
       Files.createTempDirectory(s"$name-ck").toString) { transfers =>
       txRows.synchronized { txRows ++= transfers.toJSON.collect() }
@@ -64,21 +84,15 @@ class StreamingParitySpec extends SparkSpec {
       store.upsertAll(deltas.collect().toSeq.map(BalanceUpsert.BalanceRow.fromRow))
     }
 
-    def chunks(xs: Seq[String]): Seq[Seq[String]] = {
-      val size = math.max(1, math.ceil(xs.size.toDouble / nChunks).toInt)
-      xs.grouped(size).toSeq
-    }
-    val feed = (chunks(rJson), chunks(oJson), chunks(aJson))
-    val n = Seq(feed._1.size, feed._2.size, feed._3.size).max
-    (0 until n).foreach { i =>
-      feed._1.lift(i).foreach(c => rIn.addData(c))
-      feed._2.lift(i).foreach(c => oIn.addData(c))
-      feed._3.lift(i).foreach(c => aIn.addData(c))
+    steps.foreach { case (r, o, a) =>
+      if (r.nonEmpty) rIn.addData(r)
+      if (o.nonEmpty) oIn.addData(o)
+      if (a.nonEmpty) aIn.addData(a)
       query.processAllAvailable()
     }
     query.stop()
 
-    (txRows.synchronized(txRows.toSet), store.snapshot)
+    (txRows.synchronized(txRows.toSeq), store.snapshot)
   }
 
   private def canonical(df: DataFrame): Set[String] = df.toJSON.collect().toSet
@@ -104,6 +118,77 @@ class StreamingParitySpec extends SparkSpec {
       assert((s.blockTimestamp.compareTo(b.blockTimestamp), s.indexInChunk, s.receiptId)
         === ((0, b.indexInChunk, b.receiptId)), s"provenance of $acct")
     }
+  }
+
+  /** One topic's rows in a random arrival order, cut into `n` deliveries at
+    * random points, plus up to 3 redeliveries of its rows into random
+    * deliveries (before or after the first copy).
+    */
+  private def deliveries(rows: Seq[String], n: Int): Gen[Seq[Seq[String]]] = for {
+    keys <- Gen.listOfN(rows.size, Gen.choose(0, Int.MaxValue))
+    cuts <- Gen.listOfN(n - 1, Gen.choose(0, rows.size))
+    k <- Gen.choose(0, 3)
+    redo <- Gen.listOfN(k, Gen.zip(Gen.oneOf(rows), Gen.choose(0, n - 1)))
+  } yield {
+    val order = rows.zip(keys).sortBy(_._2).map(_._1)
+    val bounds = (0 +: cuts.sorted) :+ rows.size
+    (0 until n).map { i =>
+      order.slice(bounds(i), bounds(i + 1)) ++ redo.collect { case (r, `i`) => r }
+    }
+  }
+
+  /** Deliveries of the fixture feed: each topic permuted and cut on its own,
+    * so the members of one ±2 s window arrive in every relative order and
+    * redeliveries cross batch boundaries and topics. The fixture spans 100 s
+    * of event time, inside the 60-min watermark delay, so no order is late.
+    */
+  private val schedules: Gen[Seq[Feeds]] = for {
+    n <- Gen.choose(1, 4)
+    r <- deliveries(fixtureFeeds._1, n)
+    o <- deliveries(fixtureFeeds._2, n)
+    a <- deliveries(fixtureFeeds._3, n)
+  } yield (0 until n).map(i => (r(i), o(i), a(i)))
+
+  /** A failing schedule shrinks by dropping whole deliveries, then single rows. */
+  private implicit val shrinkSchedule: Shrink[Seq[Feeds]] = Shrink.withLazyList { steps =>
+    def topics(f: Feeds) = Seq(f._1, f._2, f._3)
+    val fewerSteps = steps.indices.to(LazyList).map(i => steps.patch(i, Nil, 1))
+    val fewerRows = for {
+      i <- steps.indices.to(LazyList)
+      t <- (0 until 3).to(LazyList)
+      j <- topics(steps(i))(t).indices.to(LazyList)
+    } yield {
+      val ts = topics(steps(i)).updated(t, topics(steps(i))(t).patch(j, Nil, 1))
+      steps.updated(i, (ts(0), ts(1), ts(2)))
+    }
+    fewerSteps ++ fewerRows
+  }
+
+  test("property: streamed legs and balances equal batch under any delivery schedule") {
+    var runs = 0
+    val prop = Prop.forAll(schedules) { steps =>
+      runs += 1
+      val (legs, store) = runSteps(s"tx_prop_$runs", steps)
+      def topic(t: Int, schema: org.apache.spark.sql.types.StructType) =
+        StreamingPipeline.parseJson(steps.flatMap(s => Seq(s._1, s._2, s._3)(t)).toDF("value"), schema)
+      val batch = TokenPipeline.transfersFromRaw(topic(0, NearSchemas.receipts),
+        topic(1, NearSchemas.executionOutcomes), topic(2, NearSchemas.actionReceiptActions),
+        cfg).cache()
+      try {
+        val balances = TokenPipeline.balances(batch).collect()
+          .map(BalanceUpsert.BalanceRow.fromRow).map(b => b.account -> b).toMap
+        legs.sorted == batch.toJSON.collect().toSeq.sorted &&
+          store.keySet == balances.keySet &&
+          balances.forall { case (acct, b) =>
+            val s = store(acct)
+            s.balance.compareTo(b.balance) == 0 && s.receiptId == b.receiptId &&
+              s.blockTimestamp.compareTo(b.blockTimestamp) == 0
+          }
+      } finally { batch.unpersist(); () }
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6).withInitialSeed(20261017L), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("reset + replay reproduces identical results (deterministic recovery)") {
