@@ -1,38 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Each query is fully materialized through the `noop`
-  * sink — a bare `.count()` would let Catalyst prune projection-only queries
-  * down to a parquet metadata scan and time nothing. A warm-up query is run
-  * (and not reported) so the first measured query isn't charged session
-  * start-up / codegen warm-up, and each query is timed as the MIN of three
-  * runs: one-off JIT/GC stalls otherwise land on whichever query they hit
-  * (r2 charged a 15 s compile stall to a 0.2 s projection; r6 charged a
-  * phantom 3.9 s to a 0.3 s window query even at min-of-2). A failing query
-  * is reported by name in `errors` (not silently timed as a fast success).
+/** Benchmark main: runs the registered queries against SPARK_GRAFT_SF_DIR
+  * and prints one JSON line. Usage: `runMain graft.Bench [names…]` — with
+  * no names every query runs (the full benchmark line); names select a
+  * subset, so a change can be A/B-priced on the queries it touches. Each
+  * query is fully materialized through the `noop` sink
+  * ([[SparkEntry.materialize]]). A warm-up query is run (and not reported)
+  * so the first measured query isn't charged session start-up / codegen
+  * warm-up, and each query is timed as the MIN of three runs: one-off JIT/GC
+  * stalls otherwise land on whichever query they hit (r2 charged a 15 s
+  * compile stall to a 0.2 s projection; r6 charged a phantom 3.9 s to a
+  * 0.3 s window query even at min-of-2). A failing query is reported by
+  * name in `errors` (not silently timed as a fast success).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val names = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     def materialize(name: String): Either[String, Unit] =
-      try Right(SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save())
+      try Right(SparkEntry.materialize(spark, name, sfDir))
       catch { case e: Throwable =>
         Left(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200))
       }
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
     names.headOption.foreach(materialize) // warm-up, unreported
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

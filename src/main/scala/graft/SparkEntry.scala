@@ -29,6 +29,22 @@ object SparkEntry {
     spark
   }
 
+  /** The one place a session is made — every graft main and the test
+    * suites call it: `local[cpus]` with one shuffle partition per core, UI
+    * off, WARN logging, then [[configure]]. `cpus` defaults to `SPARK_GRAFT_CPUS` when
+    * set, else the cores the JVM sees.
+    */
+  def session(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+                .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    configure(spark)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the reference's full dataflow (dedup → ±2 s joins → filter → double-entry
     * fan-out) over the synthetic CDC feed.
@@ -42,6 +58,25 @@ object SparkEntry {
       EmbeddingQueries.queries ++ MediaQueries.queries ++ CurationQueries.queries).map {
       case (k, f) => k -> ((s: SparkSession, dir: String) => f(configure(s), dir))
     }
+
+  /** The registered names a query-name filter selects: every name, sorted,
+    * for an empty filter, else the filter's names in its order. An unknown
+    * name fails loudly — a typo'd filter must not time or dump nothing and
+    * let a downstream gate pass vacuously.
+    */
+  def select(filter: Seq[String]): Seq[String] = {
+    val registered = queries.keySet
+    val unknown = filter.filterNot(registered)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (filter.isEmpty) registered.toSeq.sorted else filter.distinct
+  }
+
+  /** Run one registered query to completion through the `noop` sink — a bare
+    * `.count()` would let Catalyst prune projection-only queries down to a
+    * parquet metadata scan and time nothing.
+    */
+  def materialize(spark: SparkSession, name: String, sfDir: String): Unit =
+    queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

@@ -438,9 +438,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "10").toInt
-    // SPARK_GRAFT_ROCKSDB=1 runs the same five pipelines on the RocksDB
+    // SPARK_GRAFT_ROCKSDB=1 runs the same seven pipelines on the RocksDB
     // state-store provider — the reference's actual state backend
     // (TokenBalance.java:89 uses a persistent RocksDB window store), so the
     // measured analogue exists beside the default in-memory/HDFS-backed
@@ -449,17 +448,12 @@ object StreamBench {
     // what bounds state by disk instead of executor heap.
     val rocksdb = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")
     val backend = if (rocksdb) "rocksdb" else "hdfs"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session()
+    // a session conf read at query start, so setting it before any query
+    // starts covers all of them
     if (rocksdb)
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     println(runCorpusClean(spark, sfDir, chunks).json("stream_clean_rows_per_sec", sfDir, backend))
     println(runNearPipeline(spark, sfDir, chunks).json("near_pipeline_rows_per_sec", sfDir, backend))

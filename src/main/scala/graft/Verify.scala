@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,26 +7,12 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // iteration (the driver always passes exactly two args → full dump)
     val Array(sfDir, outDir) = args.take(2)
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    // a typo'd filter name must fail loudly, not dump nothing and let the
-    // downstream gate pass vacuously
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown query name(s) in filter: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.select(args.drop(2).flatMap(_.split(",")).toSeq)
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

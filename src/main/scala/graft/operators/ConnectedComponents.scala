@@ -50,7 +50,8 @@ import org.apache.spark.sql.functions._
   * the distinct vertices. No salting needed; salting the min-label
   * aggregation would only re-shard what map-side combine already bounds at
   * (#map partitions × #distinct labels) rows. Re-price with
-  * `sbt "Test/runMain graft.CcSkewBench"` when this file changes.
+  * `SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.CcSkewBench"` when this file
+  * changes.
   */
 object ConnectedComponents {
 

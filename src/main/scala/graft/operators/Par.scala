@@ -18,12 +18,12 @@ import scala.concurrent.duration.Duration
   * is the difference between utilizing the executors and draining them
   * between jobs.
   *
-  * Beyond the flat barrier ([[checkpointAll]]), [[ckpt]]/[[await]] expose the
-  * futures directly so a caller can express a DATAFLOW: a stage that needs
-  * only one of the base frames (`fut.map(...)`) starts the moment that frame
-  * lands, overlapping with the still-running siblings — e.g. the decision
-  * table's hash-canonical windows run while the shingle join and the
-  * iterative connected-components rounds are still in flight.
+  * [[ckpt]]/[[await]] expose the futures directly so a caller can express a
+  * DATAFLOW: a stage that needs only one of the base frames (`fut.map(...)`)
+  * starts the moment that frame lands, overlapping with the still-running
+  * siblings — e.g. the decision table's hash-canonical windows run while the
+  * shingle join and the iterative connected-components rounds are still in
+  * flight.
   *
   * `SparkSession` job submission is thread-safe; results are unchanged (the
   * frames are independent by contract). Exceptions propagate from whichever
@@ -31,33 +31,19 @@ import scala.concurrent.duration.Duration
   */
 object Par {
 
-  /** `GRAFT_PAR_SERIAL=1` degrades the whole future graph to strict
-    * program-order execution (every `Future`/`map`/`for` body runs inline on
-    * the calling thread) — the measurement baseline for pricing the overlap.
-    * Measured on `Explain q_dedup_decision <sf0.1> time2` (warm run 2,
-    * local[32], r9): serial 7.13 s vs overlapped 5.20 s — the dataflow buys
-    * **1.37×** at sf0.1, i.e. the side signals (hash-canonical windows,
-    * containment aggregation) and the slower base materializations really do
-    * hide under the CC rounds rather than adding to them. Re-price after any
-    * scheduler/AQE behavior change; if the two numbers converge, the
-    * machinery has silently stopped helping and should be removed.
-    *
-    * Captured ONCE at class-load: toggling the env var inside a long-lived
-    * session (e.g. between two Explain runs in one JVM) has no effect — set
-    * it before the JVM starts.
-    */
-  private[graft] val serial: Boolean =
-    sys.env.get("GRAFT_PAR_SERIAL").contains("1")
-
   /** Shared pool for materialization threads — the threads only BLOCK on
     * Spark actions (the work happens on Spark's scheduler), so the global
     * pool's cores-sized default is plenty.
+    *
+    * Priced against strict program order (every future body run inline on
+    * the calling thread, the since-deleted `GRAFT_PAR_SERIAL=1` baseline) on
+    * `Explain q_dedup_decision <sf0.1> 2`, warm run 2, local[4] on 4 vCPUs,
+    * three alternating runs each: serial 12.94 / 16.40 / 16.84 s vs
+    * overlapped 12.92 / 18.15 / 13.75 s, medians 16.40 vs 13.75 s — a
+    * difference inside the runs' own spread, so unresolved at 4 cores. At
+    * local[32] (r9) the same pair read 7.13 vs 5.20 s (1.37×).
     */
-  implicit val ec: ExecutionContext =
-    if (serial) new ExecutionContext {
-      def execute(r: Runnable): Unit = r.run()
-      def reportFailure(t: Throwable): Unit = throw t
-    } else ExecutionContext.global
+  implicit val ec: ExecutionContext = ExecutionContext.global
 
   /** Submit an eager localCheckpoint on a pool thread (a [[Lineage]] cut,
     * so plan audits see through it).
@@ -65,12 +51,4 @@ object Par {
   def ckpt(df: DataFrame): Future[DataFrame] = Future(Lineage.cut(df))
 
   def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
-
-  /** Eagerly localCheckpoint every frame, submitting the materialization jobs
-    * concurrently; returns the checkpointed frames in input order.
-    */
-  def checkpointAll(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    val futs = dfs.map(ckpt)
-    futs.map(await)
-  }
 }

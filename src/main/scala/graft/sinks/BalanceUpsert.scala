@@ -3,7 +3,7 @@ package graft.sinks
 import java.math.{BigDecimal => JBigDecimal}
 import java.sql.Connection
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 
 /** The balance upsert sink (SURVEY.md §2 #15).
   *
@@ -88,7 +88,7 @@ object BalanceUpsert {
   }
 
   /** Bind one [[BalanceRow]] into the [[upsertSql]] positional slots
-    * ([[columns]] order) — the ONE binding used by every JDBC executor here.
+    * ([[columns]] order) — the ONE binding both exactly-once executors share.
     */
   private def bindRow(st: java.sql.PreparedStatement, b: BalanceRow): Unit = {
     st.setString(1, b.account)
@@ -99,35 +99,6 @@ object BalanceUpsert {
     st.setInt(6, b.indexInChunk)
     st.setString(7, b.transactionHash)
     st.setString(8, b.receiptId)
-  }
-
-  /** JDBC executor for one micro-batch of deltas: per-partition connections,
-    * statement batching. Used from `foreachBatch`; `connect` must be a
-    * serializable factory (driver-class + URL captured by value).
-    */
-  def upsertBatchJdbc(batch: DataFrame, table: String,
-                      connect: () => Connection, batchSize: Int = 500): Unit = {
-    val sql = upsertSql(table)
-    batch.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn = connect()
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
-          try {
-            var n = 0
-            rows.foreach { r =>
-              bindRow(st, BalanceRow.fromRow(r))
-              st.addBatch()
-              n += 1
-              if (n % batchSize == 0) st.executeBatch()
-            }
-            st.executeBatch()
-          } finally st.close()
-          conn.commit()
-        } finally conn.close()
-      }
-    }
   }
 
   /** EXACTLY-ONCE upgrade of the at-least-once upsert story (the gap the
@@ -325,8 +296,6 @@ object BalanceUpsert {
         true
       }
     }
-    def appliedBatches: Set[(String, Long)] = synchronized(journal.toSet)
-    def appliedSlices: Set[(String, Long, Int)] = synchronized(sliceJournal.toSet)
   }
 
   /** In-memory reference implementation of the same merge — the unit-test

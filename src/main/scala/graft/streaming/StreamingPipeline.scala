@@ -79,29 +79,13 @@ object StreamingPipeline {
   def multiTokenBalancesUpdateMode(transferStream: DataFrame): DataFrame =
     TokenPipeline.balancesByToken(transferStream)
 
-  /** Balance changelog → in-memory store (local runs / tests). Per-batch
-    * deltas via the same `TokenPipeline.balances` aggregate, merged by
-    * [[BalanceUpsert.merge]]. `collect` is safe here: deltas are O(#accounts
-    * touched per micro-batch), already aggregated.
-    */
-  def balancesToStore(transferStream: DataFrame, store: BalanceUpsert.MemoryStore,
-                      checkpointDir: String): StreamingQuery =
-    transferStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        store.upsertAll(
-          TokenPipeline.balances(batch).collect().toSeq.map(BalanceUpsert.BalanceRow.fromRow))
-      }
-      .start()
-
   /** One streaming query, two sinks — the reference topology's shape (the
     * transfer topic and the balance table hang off one stream,
     * TokenBalance.java:276,333). `foreachBatch` is the idiomatic Spark
     * multi-sink: the micro-batch is staged once, the transfer sink sees the
     * append rows, the balance sink sees that batch's per-account deltas.
     *
-    * Prefer this over starting [[balancesToStore]] and a transfer writer as
+    * Prefer this over starting a balance writer and a transfer writer as
     * two separate queries on the same source: two queries re-execute the
     * whole pipeline twice, and single-consumer test sources (MemoryStream)
     * trim committed batches, so a second query on the same instance can lose
@@ -123,19 +107,8 @@ object StreamingPipeline {
       }
       .start()
 
-  /** Balance changelog → JDBC upsert (deployment path; same merge, in SQL). */
-  def balancesToJdbc(transferStream: DataFrame, table: String,
-                     connect: () => java.sql.Connection,
-                     checkpointDir: String): StreamingQuery =
-    transferStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        BalanceUpsert.upsertBatchJdbc(TokenPipeline.balances(batch), table, connect)
-      }
-      .start()
-
-  /** [[balancesToJdbc]] upgraded to EXACTLY-ONCE, PARTITION-PARALLEL: each
+  /** Balance changelog → JDBC upsert, EXACTLY-ONCE and PARTITION-PARALLEL
+    * (the deployment path; [[BalanceUpsert.upsertSql]]'s merge, in SQL): each
     * micro-batch's per-account deltas are hashed into `numSlices`
     * DATA-derived slices (`pmod(hash(account), n)` — never a physical
     * partition id, so the same account lands in the same slice on every
@@ -144,8 +117,9 @@ object StreamingPipeline {
     * [[BalanceUpsert.upsertSliceExactlyOnce]] in its own transaction over
     * its own connection — no driver-side collect anywhere on the path, and
     * sink throughput scales with `numSlices` (the driver-side
-    * single-connection form was the one remaining production-path
-    * bottleneck at 100× key cardinality; the protocol itself is unchanged).
+    * single-connection form, [[BalanceUpsert.upsertBatchExactlyOnce]] under
+    * per-batch claims, bottlenecks at 100× key cardinality; the protocol is
+    * the same).
     *
     * Redelivery safety is PER SLICE: a checkpoint-replayed batch re-runs
     * every slice, committed slices fail their claim and are skipped whole,
@@ -205,33 +179,6 @@ object StreamingPipeline {
           finally conn.close()
           ()
         }
-        ()
-      }
-      .start()
-  }
-
-  /** The driver-side single-connection exactly-once form — per-BATCH claims
-    * through [[BalanceUpsert.upsertBatchExactlyOnce]], deltas collected to
-    * the driver (bounded: O(#accounts touched), already aggregated —
-    * [[balancesToStore]]'s argument). Kept for single-writer targets (e.g.
-    * an embedded store that admits one connection); the scale path is
-    * [[balancesToJdbcExactlyOnce]].
-    */
-  def balancesToJdbcExactlyOnceDriver(transferStream: DataFrame, table: String,
-                                      journal: String, sinkId: String,
-                                      connect: () => java.sql.Connection,
-                                      checkpointDir: String): StreamingQuery = {
-    val claimKey = s"$sinkId@$checkpointDir"
-    transferStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val rows = TokenPipeline.balances(batch).collect().toSeq
-          .map(BalanceUpsert.BalanceRow.fromRow)
-        val conn = connect()
-        try BalanceUpsert.upsertBatchExactlyOnce(
-          rows, table, journal, claimKey, batchId, conn)
-        finally conn.close()
         ()
       }
       .start()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.ConnectedComponents
 
 /** Re-pricing harness for the mega-component skew note in
@@ -14,12 +13,7 @@ import graft.operators.ConnectedComponents
 object CcSkewBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     import spark.implicits._
 
     def time(label: String)(f: => Long): Unit = {
