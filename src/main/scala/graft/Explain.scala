@@ -41,12 +41,16 @@ object Explain {
             si.taskMetrics.inputMetrics.recordsRead
           // the first graft frame of the submission callsite names the
           // operator/future body the stage belongs to — the bare callsite is
-          // just the action (localCheckpoint / future dispatch) and ambiguous
+          // just the action (localCheckpoint / future dispatch) and ambiguous;
+          // a stage cut on a Par pool thread has no graft frame there and
+          // carries the caller's frame, set by Par.ckpt, as its name
           val where = si.details.split('\n')
             .find(l => l.contains("graft.") && !l.contains("graft.Explain") &&
               !l.contains("graft.SparkEntry") && !l.contains("Lineage.scala") &&
               !l.contains("Par.scala"))
-            .map(_.trim.replaceAll("^at ", "")).getOrElse("")
+            .map(_.trim.replaceAll("^at ", ""))
+            .orElse(Some(si.name).filter(_.startsWith("graft.")))
+            .getOrElse("")
           // t0/t1 are submit/complete offsets from the run start — adjacent
           // stages with overlapping [t0, t1] windows really ran concurrently,
           // which a duration alone cannot show

@@ -11,7 +11,7 @@ import graft.operators.{TextDedup, TokenPipeline}
 import graft.schema.NearSchemas
 import graft.sinks.BalanceUpsert
 import graft.sources.{SyntheticCdc, Tables}
-import graft.streaming.{CorpusCleanStream, MetricsListener, StreamingPipeline}
+import graft.streaming.{CorpusCleanStream, EachBatch, MetricsListener, StreamingPipeline}
 
 /** Streaming throughput bench — ONE JSON line per pipeline, seven pipelines:
   *
@@ -27,8 +27,9 @@ import graft.streaming.{CorpusCleanStream, MetricsListener, StreamingPipeline}
   *      ([[graft.streaming.StreamingPipeline.dualSink]] — the production
   *      multi-sink shape);
   *   3. `ann_serve_queries_per_sec` — the streamed ANN serving tier
-  *      ([[graft.operators.Embeddings.rerankProbeSink]]: query micro-batches
-  *      answered from the pre-built IVF∘PQ index via retrieve-then-rerank);
+  *      ([[graft.operators.Embeddings.ivfPqRerankFromIndex]] per query
+  *      micro-batch: answered from the pre-built IVF∘PQ index via
+  *      retrieve-then-rerank);
   *   4. `graph_serve_queries_per_sec` — graph-ANN serving (beam search over
   *      the pre-built NN-Descent graph, [[runGraphServe]]);
   *   5. `graph_ingest_rows_per_sec` — graph-index MAINTENANCE (streamed
@@ -196,9 +197,10 @@ object StreamBench {
   /** The streamed ANN serving tier: the sf embeddings table's vectors ALL
     * replayed as a query stream against the PERSISTED IVF∘PQ index of the
     * same corpus, each micro-batch answered through the full
-    * retrieve-then-rerank plan ([[graft.operators.Embeddings.rerankProbeSink]]
-    * — ADC pool from codes alone, exact rerank fetching queries×r float rows
-    * from the static store). The index frames are the
+    * retrieve-then-rerank plan
+    * ([[graft.operators.Embeddings.ivfPqRerankFromIndex]] — ADC pool from
+    * codes alone, exact rerank fetching queries×r float rows from the static
+    * store). The index frames are the
     * [[graft.queries.EmbeddingQueries.pqIndex]] artifact READ-BACKS — the
     * same parquet parts every batch serving gate scans, so the streamed line
     * prices the same artifact reads (the build, if not already ensured this
@@ -223,12 +225,10 @@ object StreamBench {
     val chunkSize = math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)
     val in = MemoryStream[(Long, Array[Float])]
     var rowsOut = 0L
-    val q = Embeddings.rerankProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), idx.codes, idx.assigned,
-      idx.centroids, idx.codebook, store, nProbe = NProbe, r = RerankR, k = K,
-      Files.createTempDirectory("annserve-ck").toString) { res =>
-      rowsOut += res.count()
-      ()
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      Files.createTempDirectory("annserve-ck").toString) { (batch, _) =>
+      rowsOut += Embeddings.ivfPqRerankFromIndex(idx.codes, idx.assigned, batch,
+        idx.centroids, idx.codebook, store, NProbe, RerankR, K).count()
     }
     measured(spark) {
       try {
@@ -243,7 +243,8 @@ object StreamBench {
 
   /** Graph-ANN serving: query micro-batches answered from the PERSISTED
     * NN-Descent index via beam search
-    * ([[graft.operators.Embeddings.graphProbeSink]]) — the serving tier
+    * ([[graft.operators.Embeddings.graphSearch]] per query micro-batch) —
+    * the serving tier
     * measured at the same parameter lock as `q_graph_search_indexed`, over
     * the same [[graft.queries.EmbeddingQueries.gsIndex]] artifact read-backs
     * that gate scans (edge list + entry vectors from parquet; any build runs
@@ -262,12 +263,10 @@ object StreamBench {
     val chunkSize = math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)
     val in = MemoryStream[(Long, Array[Float])]
     var rowsOut = 0L
-    val q = Embeddings.graphProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), graph, corpus, entries,
-      nProbe = NProbe, beam = GsBeam, rounds = GsRounds, k = K,
-      Files.createTempDirectory("graphserve-ck").toString) { res =>
-      rowsOut += res.count()
-      ()
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      Files.createTempDirectory("graphserve-ck").toString) { (batch, _) =>
+      rowsOut += Embeddings.graphSearch(corpus, batch, graph, entries,
+        NProbe, GsBeam, GsRounds, K).count()
     }
     measured(spark) {
       try {
@@ -418,13 +417,10 @@ object StreamBench {
     val served = PitStream.serveFeatures(in.toDF(), "60 seconds",
       graft.queries.AnalyticQueries.PitStalenessUs)
     var rowsOut = 0L
-    val q = served.writeStream.outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("pitserve-ck").toString)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[PitStream.Served], _: Long) =>
-        rowsOut += b.count()
-        ()
-      }
-      .start()
+    val q = EachBatch(served.toDF(),
+      Files.createTempDirectory("pitserve-ck").toString) { (b, _) =>
+      rowsOut += b.count()
+    }
     measured(spark) {
       try {
         feed.grouped(chunkSize).foreach { chunk =>

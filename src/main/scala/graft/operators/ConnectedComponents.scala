@@ -166,62 +166,26 @@ object ConnectedComponents {
     * exactly the distributed algorithm's label convention, which is what
     * lets the streaming snapshot be compared against [[run]] row-for-row.
     * Path-compressed; unions are IDEMPOTENT, so at-least-once redelivery of
-    * a pair batch is harmless by construction. State is O(#vertices ever
-    * seen in a pair) — the near-dup evidence, orders below the corpus.
-    */
-  final class IncrementalUnionFind {
-    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def add(x: Long): Unit = synchronized { parent.getOrElseUpdate(x, x); () }
-    /** Logically read-only but path-compresses `parent` internally —
-      * synchronized on the same monitor as every other accessor, so a
-      * driver thread serving lookups never races the foreachBatch thread's
-      * unions (the [[CompactedUnionFind]] review catch, applied to the
-      * sibling it was copied from).
-      */
-    def find(x: Long): Long = synchronized { findLocked(x) }
-    private def findLocked(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x
-      else {
-        val r = findLocked(p)
-        parent(x) = r
-        r
-      }
-    }
-    def union(a: Long, b: Long): Unit = synchronized {
-      val (ra, rb) = (findLocked(a), findLocked(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    def size: Int = synchronized { parent.size }
-    /** (vertex → min-label component) for every vertex seen so far. */
-    def snapshot: Map[Long, Long] = synchronized {
-      parent.keys.toSeq.map(v => v -> find(v)).toMap
-    }
-  }
-
-  /** DELTA union-find over a COMPACTED label base — the distributed
-    * escalation seam of the streaming maintainer
-    * ([[graft.streaming.GroupStream]]): when "docs ever matched" outgrows
-    * one driver, the accumulated pair log is compacted by a periodic batch
-    * [[run]] pass into a distributed (id, comp) label table, and the
-    * low-latency tier restarts FLAT on top of it. `base` resolves a vertex
-    * to its compacted label (a point-read into that table in production; a
-    * map in specs); a vertex the base has never seen resolves to itself.
-    * Driver state is then only the DELTA — one parent edge per compacted
-    * label or fresh vertex moved SINCE the compaction — so driver memory is
-    * bounded by post-compaction evidence, not by all history
-    * ([[deltaSize]] makes the bound measurable).
+    * a pair batch is harmless by construction.
     *
-    * Labels keep the batch convention (component minimum): a delta union
-    * attaches the larger root under the smaller, so a fresh vertex with an
-    * id below an old component's label becomes the new label exactly as a
-    * batch re-run over the full log would decide. The merged labeling
-    * materializes distributively without rescanning the pair log: relabel
-    * the compacted table with [[relabels]] (one broadcastable left join —
+    * `base` resolves a vertex to a COMPACTED label (a point-read into a
+    * distributed (id, comp) table in production; a map in specs); a vertex
+    * the base has never seen resolves to itself. With an empty base
+    * (`_ => None`) every vertex is fresh and [[freshSnapshot]] is the whole
+    * labeling, O(#vertices ever seen in a pair). Over a compacted base it is
+    * the distributed escalation seam: when "docs ever matched" outgrows one
+    * driver, a periodic batch [[run]] pass compacts the accumulated pair log
+    * into the label table and the low-latency tier restarts FLAT on top of
+    * it. Driver state is then only the DELTA — one parent edge per compacted
+    * label or fresh vertex moved SINCE the compaction — so driver memory is
+    * bounded by post-compaction evidence, not by all history ([[deltaSize]]
+    * makes the bound measurable). A fresh vertex with an id below an old
+    * component's label becomes the new label exactly as a batch re-run over
+    * the full log would decide. The merged labeling materializes
+    * distributively without rescanning the pair log: relabel the compacted
+    * table with [[relabels]] (one broadcastable left join —
     * [[graft.streaming.GroupStream.mergedLabels]]) and append
     * [[freshSnapshot]] for vertices first seen after the compaction.
-    * Unions stay idempotent, so at-least-once redelivery needs no journal,
-    * same as the un-compacted tier.
     */
   final class CompactedUnionFind(base: Long => Option[Long]) {
     private val parent = scala.collection.mutable.HashMap.empty[Long, Long]

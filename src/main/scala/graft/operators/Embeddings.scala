@@ -1287,18 +1287,19 @@ object Embeddings {
       .unionByName(repaired.select(col("query_id"), col("neighbor_id"), col("rank")))
   }
 
-  /** Streaming graph-index MAINTENANCE — [[indexIngestSink]]'s contract for
-    * the graph family: newly-arriving vectors are inserted per micro-batch
-    * with [[graphInsert]] against the caller's CURRENT (store, graph), and
-    * the updated pair is handed back to swap in (cut, so cross-batch lineage
-    * never accumulates; persist/bucket the frames in production). The batch
+  /** Streaming graph-index MAINTENANCE: newly-arriving vectors are inserted
+    * per micro-batch with [[graphInsert]] against the caller's CURRENT
+    * (store, graph), and the updated pair is handed back to swap in (cut, so
+    * cross-batch lineage never accumulates; persist/bucket the frames in
+    * production). The batch
     * operator is the per-trigger body, so a streamed sequence of inserts
     * equals the same inserts applied in batch (spec-asserted).
     *
     * Redelivery-safe by an already-present anti-join (review catch): this
-    * sink read-modify-writes accumulated state, so `foreachBatch`'s
-    * at-least-once redelivery of a batch whose swap already landed would
-    * otherwise double-insert (duplicate store rows, > k edges per node).
+    * sink read-modify-writes accumulated state, so
+    * [[graft.streaming.EachBatch]]'s at-least-once redelivery of a batch
+    * whose swap already landed would otherwise double-insert (duplicate
+    * store rows, > k edges per node).
     * Vectors whose ids are already in the store are dropped before the
     * insert, making a replayed batch a no-op — the id-based analogue of the
     * balance sink's journaled claim.
@@ -1308,21 +1309,17 @@ object Embeddings {
                       checkpointDir: String)
                      (current: () => (DataFrame, DataFrame))
                      (onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectorStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (store, graph) = current()
-        val fresh = Lineage.cut(batch.toDF().select(store.columns.map(col): _*)
-          .join(store.select("vec_id"), Seq("vec_id"), "left_anti"))
-        if (!fresh.isEmpty) {
-          val updated = Lineage.cut(rebucket(graphInsert(store, graph, fresh,
-            centroids, nProbe, beam, rounds, k)))
-          val grownStore = Lineage.cut(rebucket(store.unionByName(fresh)))
-          onBatch(grownStore, updated)
-        }
+    graft.streaming.EachBatch(vectorStream, checkpointDir) { (batch, _) =>
+      val (store, graph) = current()
+      val fresh = Lineage.cut(batch.select(store.columns.map(col): _*)
+        .join(store.select("vec_id"), Seq("vec_id"), "left_anti"))
+      if (!fresh.isEmpty) {
+        val updated = Lineage.cut(rebucket(graphInsert(store, graph, fresh,
+          centroids, nProbe, beam, rounds, k)))
+        val grownStore = Lineage.cut(rebucket(store.unionByName(fresh)))
+        onBatch(grownStore, updated)
       }
-      .start()
+    }
 
   /** Re-bucket an ACCUMULATED frame to the session's default parallelism
     * before checkpointing it as the next maintained state. Load-bearing for
@@ -1357,45 +1354,17 @@ object Embeddings {
   def graphTombstoneSink(idStream: DataFrame, k: Int, checkpointDir: String)
                         (current: () => (DataFrame, DataFrame))
                         (onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    idStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (store, graph) = current()
-        val tomb = Lineage.cut(batch.toDF().select(col("vec_id"))
-          .join(store.select("vec_id"), Seq("vec_id"), "left_semi"))
-        if (!tomb.isEmpty) {
-          val compacted = Lineage.cut(rebucket(graphDelete(store, graph, tomb, k)))
-          val shrunkStore = Lineage.cut(rebucket(
-            store.join(tomb, Seq("vec_id"), "left_anti")))
-          onBatch(shrunkStore, compacted)
-        }
+    graft.streaming.EachBatch(idStream, checkpointDir) { (batch, _) =>
+      val (store, graph) = current()
+      val tomb = Lineage.cut(batch.select(col("vec_id"))
+        .join(store.select("vec_id"), Seq("vec_id"), "left_semi"))
+      if (!tomb.isEmpty) {
+        val compacted = Lineage.cut(rebucket(graphDelete(store, graph, tomb, k)))
+        val shrunkStore = Lineage.cut(rebucket(
+          store.join(tomb, Seq("vec_id"), "left_anti")))
+        onBatch(shrunkStore, compacted)
       }
-      .start()
-
-  /** Stream-served graph-ANN search — [[rerankProbeSink]]'s contract for the
-    * graph index family: each query micro-batch is answered by
-    * [[graphSearch]] against a PRE-BUILT static kNN graph and vector store
-    * (build once with [[knnGraphSeed]] + [[nnDescentRound]], keep the floats
-    * bucketed by id for the point-lookup score joins). Per-trigger working
-    * set = graph edges + the id-keyed store rows the search touches; per-
-    * batch plans see static frames, so streamed answers are exactly the
-    * batch search's (spec-asserted).
-    */
-  def graphProbeSink(queryStream: DataFrame, graph: DataFrame,
-                     vectorStore: DataFrame, centroids: DataFrame,
-                     nProbe: Int, beam: Int, rounds: Int, k: Int,
-                     checkpointDir: String)
-                    (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          onBatch(graphSearch(vectorStore, batch.toDF(), graph, centroids,
-            nProbe, beam, rounds, k))
-      }
-      .start()
+    }
 
   /** Sign-random-projection (hyperplane) LSH — the second blocking family
     * next to IVF, and the embedding-space analogue of SimHash: each vector is
@@ -1593,97 +1562,6 @@ object Embeddings {
     recallOf(cosineNearDupPairs(sample, threshold),
       srpNearDupPairsMultiProbe(vectors, nBits, threshold))
   }
-
-  /** Stream-static ANN serving: an unbounded stream of query vectors probed
-    * per micro-batch against a STATIC corpus — the enrichment/serving shape
-    * (index built once, queries arrive forever). Each trigger runs the
-    * batch [[ivfTopKWith]] plan on that batch's queries: the corpus side is a
-    * static DataFrame (persist it, or pre-materialize `ivfAssign` — nothing
-    * here re-shuffles the corpus per trigger beyond what the batch plan does),
-    * the per-batch query set is small and broadcast, and no streaming state
-    * accrues — `foreachBatch` is the idiomatic stream-static bridge because
-    * the probe's window ranking isn't expressible inside a streaming plan.
-    */
-  def annProbeSink(queryStream: DataFrame, vectors: DataFrame, centroids: DataFrame,
-                   nProbe: Int, k: Int, checkpointDir: String)
-                  (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) onBatch(ivfTopKWith(vectors, batch.toDF(), centroids, nProbe, k))
-      }
-      .start()
-
-  /** Stream-static IVF∘PQ serving: [[annProbeSink]]'s shape, but each
-    * micro-batch is answered from a PRE-BUILT codes index
-    * ([[ivfPqTopKFromIndex]]) — the per-trigger working set is codes +
-    * assignments + codebook + centroids, and the float corpus is touched by
-    * NO trigger (build it once with [[pqEncode]]/[[ivfAssign]], keep it
-    * growing with [[indexIngestSink]], persist/bucket the frames). This is
-    * the round-8 batch serving shape in the engine's streaming identity:
-    * index once, queries arrive forever.
-    */
-  def ivfPqProbeSink(queryStream: DataFrame, codes: DataFrame, assigned: DataFrame,
-                     centroids: DataFrame, codebook: DataFrame, nProbe: Int, k: Int,
-                     checkpointDir: String)
-                    (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          onBatch(ivfPqTopKFromIndex(codes, assigned, batch.toDF(), centroids,
-            codebook, nProbe, k))
-      }
-      .start()
-
-  /** Stream-served retrieve-then-rerank — [[ivfPqProbeSink]] with the refine
-    * stage: each query micro-batch retrieves its ADC top-`r` pool from the
-    * pre-built codes index, then exact-reranks against the static float
-    * `vectorStore` ([[ivfPqRerankFromIndex]]). Per-trigger working set =
-    * index + codebook + centroids + the queries×r store rows the candidate
-    * equi-join fetches; per-batch plans see static frames, so streamed
-    * answers are exactly the batch rerank's (spec-asserted).
-    */
-  def rerankProbeSink(queryStream: DataFrame, codes: DataFrame, assigned: DataFrame,
-                      centroids: DataFrame, codebook: DataFrame,
-                      vectorStore: DataFrame, nProbe: Int, r: Int, k: Int,
-                      checkpointDir: String)
-                     (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          onBatch(ivfPqRerankFromIndex(codes, assigned, batch.toDF(), centroids,
-            codebook, vectorStore, nProbe, r, k))
-      }
-      .start()
-
-  /** Streaming IVF∘PQ index MAINTENANCE — the build-side complement of
-    * [[ivfPqProbeSink]]: newly-arriving vectors are encoded per micro-batch
-    * against the FROZEN codebook and centroid set, and the resulting
-    * (vec_id, m, code) and (vec_id, cent_id) rows are handed to the caller
-    * to append to the serving index (a parquet/bucketed table in
-    * production). Both derivations are stateless row-local functions of the
-    * batch against broadcast constants, so streamed index rows are exactly
-    * the batch [[pqEncode]]/[[ivfAssign]] rows (spec-asserted) and no
-    * streaming state accrues. Freezing the quantizers is the standard
-    * serving contract (retraining re-encodes offline, then swaps); it is
-    * what keeps codes comparable across the whole index.
-    */
-  def indexIngestSink(vectorStream: DataFrame, centroids: DataFrame,
-                      codebook: DataFrame, checkpointDir: String)
-                     (onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectorStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          onBatch(pqEncode(batch.toDF(), codebook), ivfAssign(batch.toDF(), centroids))
-      }
-      .start()
 
   /** Recall of the IVF path vs the exact path: per query, |IVF ∩ exact| and k
     * (integers — oracle-friendly; global recall = Σhits / Σk).
@@ -1979,8 +1857,9 @@ object Embeddings {
   /** [[ivfPqTopK]] over explicit centroids and codebook — the BUILD+SERVE
     * convenience form: encodes/assigns `vectors` then delegates to
     * [[ivfPqTopKFromIndex]]. Production (and the streaming probe) should
-    * build the index ONCE ([[pqEncode]]/[[ivfAssign]], or incrementally via
-    * [[indexIngestSink]]), materialize it, and call the from-index form
+    * build the index ONCE ([[pqEncode]]/[[ivfAssign]], or incrementally by
+    * running both per micro-batch through [[graft.streaming.EachBatch]]),
+    * materialize it, and call the from-index form
     * directly — this wrapper re-plans the build with every call.
     */
   def ivfPqTopKWith(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,

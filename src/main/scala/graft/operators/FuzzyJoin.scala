@@ -51,7 +51,7 @@ object FuzzyJoin {
     * self-join): every probe row matched against the [[variantIndex]] by the
     * same lossless blocking, then exact-verified. Batch-local by
     * construction, so the streaming form is just this operator applied per
-    * micro-batch (see `FuzzyProbeSpec`). Output: (probe_id, ref_id, dist).
+    * micro-batch through `graft.streaming.EachBatch` (see `FuzzyProbeSpec`). Output: (probe_id, ref_id, dist).
     */
   def probePairs(probe: DataFrame, idCol: String, strCol: String,
                  index: DataFrame): DataFrame =

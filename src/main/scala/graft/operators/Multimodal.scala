@@ -127,7 +127,8 @@ object Multimodal {
     * are the first redundancy a video pipeline drops). The lag window spans k
     * frames per document, so no sort scales with the corpus; stateless across
     * payloads, so the same plan serves batch tables and per-micro-batch
-    * streaming ingest ([[graft.streaming.MediaIngestStream]]).
+    * streaming ingest through [[graft.streaming.EachBatch]]
+    * (`MediaIngestStreamSpec`).
     */
   def keyframes(df: DataFrame, idCol: String, payloadCol: String,
                 k: Int, threshold: Double): DataFrame = {

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *     index of every window hash the corpus contains; an arriving document
   *     is scrubbed of any span the corpus already has (an arriving doc is a
   *     different doc by definition, so membership alone marks duplication).
-  *     Batch-local per probe row — which is what makes the streaming twin
-  *     (`graft.streaming.SpanScrubStream`) exactly this operator per
-  *     micro-batch, no cross-batch state.
+  *     Batch-local per probe row — so streaming ingest is exactly this
+  *     operator per micro-batch through `graft.streaming.EachBatch`, no
+  *     cross-batch state (`SpanScrubStreamSpec`).
   *
   * Scale shape (both forms): narrow stride-1 window fan-out keyed by md5,
   * ONE shuffle on the window hash (groupBy or semi-join), narrow

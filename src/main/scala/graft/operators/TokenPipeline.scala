@@ -197,6 +197,14 @@ object TokenPipeline {
     * deterministic tiebreaker beyond the reference's (timestamp, index) pair —
     * two transfers tying on both would otherwise make argmax pick an
     * arbitrary row (and the oracle an arbitrary but different one).
+    *
+    * Over a transfer STREAM the same call is the KTable changelog in its
+    * native Spark form: an unbounded aggregation that, started in UPDATE
+    * output mode, emits each trigger's changed accounts with state
+    * O(#accounts) and no eviction (reference TokenBalance.java:279-331;
+    * `UpdateModeBalancesSpec`). In one plan with the transfer stream it
+    * would be a second stateful operator, so the single-plan form folds per
+    * micro-batch instead (`StreamingPipeline.dualSink`).
     */
   private def balanceAggs = Seq(
     sum("affected_amount").cast(Amount).as("balance"),

@@ -18,8 +18,8 @@ import org.apache.spark.sql.Row
   * associative across batches, so retries of an uncommitted batch after
   * failure are the only duplication risk (same as the reference's
   * at-least-once + idempotent-upsert story). The exactly-once upgrade —
-  * transactional batch-id journaling — is implemented at
-  * [[upsertBatchExactlyOnce]] / [[journalDdl]] and executed end-to-end
+  * transactional (batch, slice) journaling — is implemented at
+  * [[upsertSliceExactlyOnce]] / [[sliceJournalDdl]] and executed end-to-end
   * against DuckDB in `BalanceUpsertDuckDbSpec`.
   */
 object BalanceUpsert {
@@ -88,7 +88,7 @@ object BalanceUpsert {
   }
 
   /** Bind one [[BalanceRow]] into the [[upsertSql]] positional slots
-    * ([[columns]] order) — the ONE binding both exactly-once executors share.
+    * ([[columns]] order).
     */
   private def bindRow(st: java.sql.PreparedStatement, b: BalanceRow): Unit = {
     st.setString(1, b.account)
@@ -106,11 +106,11 @@ object BalanceUpsert {
     * upserts committed but whose CHECKPOINT commit did not — on restart the
     * engine redelivers the same `batchId` and the additive
     * `balance += EXCLUDED.balance` merge double-applies it. The classical
-    * fix is transactional batch-id journaling: claim `(sink_id, batch_id)`
+    * fix is transactional journaling: claim `(sink_id, batch_id, slice_id)`
     * in a journal table INSIDE the same database transaction as the
-    * upserts, so either both commit or neither, and a redelivered batch
-    * fails the claim and is skipped whole. `batchId` is Structured
-    * Streaming's `foreachBatch` batch id — stable across restarts for a
+    * upserts, so either both commit or neither, and a redelivered slice
+    * fails the claim and is skipped whole. `batchId` is the
+    * `graft.streaming.EachBatch` batch id — stable across restarts for a
     * redelivered batch by the checkpoint contract, which is exactly what
     * makes the claim key sound. Batch ids are only meaningful RELATIVE TO a
     * checkpoint (a fresh checkpoint restarts them at 0), so `sink_id` must
@@ -120,38 +120,59 @@ object BalanceUpsert {
     * lives with at-least-once + idempotent provenance, README.md:273-297;
     * balances are additive, so it needs this journal for true exactness
     * too.)
+    *
+    * Each slice of a micro-batch commits (or skips on redelivery)
+    * independently in its own transaction; a single-connection sink is
+    * slice 0 of the same protocol. A slice is a
+    * DATA-derived shard — `pmod(hash(account), n)` — never a physical
+    * partition id: the same account lands in the same slice on every
+    * (re)delivery and every task retry, which is what makes the 3-part key
+    * sound (the TaskContext-pairing hazard recorded in CLAUDE.md never
+    * arises because no scheduling-dependent id enters the key).
     */
-  def journalDdl(journal: String): String =
+  def sliceJournalDdl(journal: String): String =
     s"""CREATE TABLE IF NOT EXISTS $journal (
-        sink_id VARCHAR, batch_id BIGINT, n_rows BIGINT,
-        PRIMARY KEY (sink_id, batch_id))"""
+        sink_id VARCHAR, batch_id BIGINT, slice_id INTEGER, n_rows BIGINT,
+        PRIMARY KEY (sink_id, batch_id, slice_id))"""
 
-  /** The claim statement: 1 row changed = this batch is ours to apply, 0 =
-    * already applied by a previous (possibly crashed-after-commit) attempt.
+  /** The slice claim: 1 row changed = this (batch, slice) is ours to apply,
+    * 0 = a previous (possibly crashed-after-commit) attempt already did.
     */
-  def journalClaimSql(journal: String): String =
-    s"""INSERT INTO $journal (sink_id, batch_id, n_rows) VALUES (?, ?, ?)
-        ON CONFLICT (sink_id, batch_id) DO NOTHING"""
+  def sliceClaimSql(journal: String): String =
+    s"""INSERT INTO $journal (sink_id, batch_id, slice_id, n_rows)
+        VALUES (?, ?, ?, ?)
+        ON CONFLICT (sink_id, batch_id, slice_id) DO NOTHING"""
 
-  /** The claim-then-apply transaction shared by the batch-level and
-    * slice-level exactly-once executors: bind + run the claim, and on a
-    * fresh claim run every upsert, all in ONE transaction on `conn`.
+  /** Apply ONE SLICE of a micro-batch exactly once: claim the (sink, batch,
+    * slice) key and, on a fresh claim, run every upsert, all in ONE
+    * transaction on `conn`; returns true if applied, false if the journal
+    * already held the claim (redelivery — skipped whole, nothing written).
     * Statements are closed per call (pooled-connection callers would
-    * otherwise leak a handle per micro-batch). Returns true if applied,
-    * false if the journal already contained the claim (redelivery —
-    * skipped whole, nothing written).
+    * otherwise leak a handle per micro-batch). The partition-parallel path
+    * runs it from `foreachPartition` over a deterministic slice repartition
+    * (`StreamingPipeline.balancesToJdbcExactlyOnce`). Per-slice
+    * transactions make partial batch failures safe: if the task for slice 3
+    * dies after slices 1–2 committed, the engine redelivers the whole batch
+    * and only the unclaimed slices apply — the additive merge never sees a
+    * delta twice. Throughput scales with the number of slices (each
+    * partition holds its own connection), which is exactly what one
+    * connection cannot do at 100× key cardinality.
     */
-  private def applyClaimed(rows: Iterable[BalanceRow], table: String,
-                           claimSql: String,
-                           bindClaim: java.sql.PreparedStatement => Unit,
-                           conn: Connection): Boolean = {
+  def upsertSliceExactlyOnce(rows: Iterable[BalanceRow], table: String,
+                             journal: String, sinkId: String, batchId: Long,
+                             sliceId: Int, conn: Connection): Boolean = {
     val prevAutoCommit = conn.getAutoCommit
     conn.setAutoCommit(false)
     try {
-      val claim = conn.prepareStatement(claimSql)
+      val claim = conn.prepareStatement(sliceClaimSql(journal))
       val claimed =
-        try { bindClaim(claim); claim.executeUpdate() == 1 }
-        finally claim.close()
+        try {
+          claim.setString(1, sinkId)
+          claim.setLong(2, batchId)
+          claim.setInt(3, sliceId)
+          claim.setLong(4, rows.size.toLong)
+          claim.executeUpdate() == 1
+        } finally claim.close()
       if (!claimed) { conn.rollback(); false }
       else {
         val st = conn.prepareStatement(upsertSql(table))
@@ -178,75 +199,14 @@ object BalanceUpsert {
     }
   }
 
-  /** Apply one micro-batch of deltas exactly once: claim the batch id and
-    * run every upsert in ONE transaction on `conn`; returns true if applied,
-    * false if the journal already contained the claim (redelivery — skipped
-    * whole, nothing written). Driver-side single-connection executor — the
-    * per-batch delta set is O(#accounts touched), already aggregated; the
-    * PARTITION-PARALLEL realization (no driver collect, the 100 TB path) is
-    * [[upsertSliceExactlyOnce]] under per-(sink, batch, slice) claims.
-    */
-  def upsertBatchExactlyOnce(rows: Iterable[BalanceRow], table: String,
-                             journal: String, sinkId: String, batchId: Long,
-                             conn: Connection): Boolean =
-    applyClaimed(rows, table, journalClaimSql(journal), { claim =>
-      claim.setString(1, sinkId)
-      claim.setLong(2, batchId)
-      claim.setLong(3, rows.size.toLong)
-    }, conn)
-
-  /** Journal DDL for the PARTITION-PARALLEL exactly-once protocol: the claim
-    * key grows a `slice_id` so each slice of a micro-batch commits (or skips
-    * on redelivery) independently in its own transaction. A slice is a
-    * DATA-derived shard — `pmod(hash(account), n)` — never a physical
-    * partition id: the same account lands in the same slice on every
-    * (re)delivery and every task retry, which is what makes the 3-part key
-    * sound (the TaskContext-pairing hazard recorded in CLAUDE.md never
-    * arises because no scheduling-dependent id enters the key).
-    */
-  def sliceJournalDdl(journal: String): String =
-    s"""CREATE TABLE IF NOT EXISTS $journal (
-        sink_id VARCHAR, batch_id BIGINT, slice_id INTEGER, n_rows BIGINT,
-        PRIMARY KEY (sink_id, batch_id, slice_id))"""
-
-  /** The slice claim: 1 row changed = this (batch, slice) is ours to apply,
-    * 0 = a previous (possibly crashed-after-commit) attempt already did.
-    */
-  def sliceClaimSql(journal: String): String =
-    s"""INSERT INTO $journal (sink_id, batch_id, slice_id, n_rows)
-        VALUES (?, ?, ?, ?)
-        ON CONFLICT (sink_id, batch_id, slice_id) DO NOTHING"""
-
-  /** Apply ONE SLICE of a micro-batch exactly once — the partition-parallel
-    * scale path of [[upsertBatchExactlyOnce]] (run from `foreachPartition`
-    * over a deterministic slice repartition; see
-    * `StreamingPipeline.balancesToJdbcExactlyOnce`). Per-slice transactions
-    * make partial batch failures safe: if the task for slice 3 dies after
-    * slices 1–2 committed, the engine redelivers the whole batch and only
-    * the unclaimed slices apply — the additive merge never sees a delta
-    * twice. Throughput scales with the number of slices (each partition
-    * holds its own connection), which is exactly what the driver-side
-    * single-connection form cannot do at 100× key cardinality.
-    */
-  def upsertSliceExactlyOnce(rows: Iterable[BalanceRow], table: String,
-                             journal: String, sinkId: String, batchId: Long,
-                             sliceId: Int, conn: Connection): Boolean =
-    applyClaimed(rows, table, sliceClaimSql(journal), { claim =>
-      claim.setString(1, sinkId)
-      claim.setLong(2, batchId)
-      claim.setInt(3, sliceId)
-      claim.setLong(4, rows.size.toLong)
-    }, conn)
-
-  /** Journal retention — the journal otherwise grows one row per batch (or
-    * per slice) FOREVER. Deleting old claims is safe because Structured
+  /** Journal retention — the journal otherwise grows one row per slice
+    * FOREVER. Deleting old claims is safe because Structured
     * Streaming can only redeliver the batch whose checkpoint commit is
     * still pending: once the sink is applying batch B, every batch ≤ B−1
     * has its offsets durably committed and can never be delivered again
     * under this checkpoint (and a WIPED checkpoint rotates the sink_id —
     * the `$sinkId@$checkpointDir` key — so its fresh claims never meet the
-    * old rows either way). Works against both journal shapes (the
-    * predicate touches only the shared key prefix).
+    * old rows either way).
     */
   def journalGcSql(journal: String): String =
     s"DELETE FROM $journal WHERE sink_id = ? AND batch_id <= ?"
@@ -265,34 +225,23 @@ object BalanceUpsert {
     } finally st.close()
   }
 
-  /** In-memory exactly-once twin of [[upsertBatchExactlyOnce]]: same
+  /** In-memory exactly-once twin of [[upsertSliceExactlyOnce]]: the same
     * claim-then-apply protocol over a [[MemoryStore]], for streaming tests
-    * and local runs. Returns whether the batch was applied.
+    * and local runs. Returns whether the slice was applied.
     */
   final class JournaledStore(val inner: MemoryStore = new MemoryStore) {
-    private val journal = scala.collection.mutable.HashSet.empty[(String, Long)]
-    private val sliceJournal =
+    private val journal =
       scala.collection.mutable.HashSet.empty[(String, Long, Int)]
-    def applyBatch(sinkId: String, batchId: Long,
-                   rows: Iterable[BalanceRow]): Boolean = synchronized {
-      // claim LAST: if the upsert throws, no claim persists and a retried
-      // batch re-applies instead of being silently lost (the JDBC twin gets
-      // the same guarantee from transaction rollback); the whole method is
-      // synchronized, so claim-after-apply is still atomic
-      if (journal.contains((sinkId, batchId))) false
-      else {
-        inner.upsertAll(rows)
-        journal.add((sinkId, batchId))
-        true
-      }
-    }
-    /** Slice-level twin of [[upsertSliceExactlyOnce]] — 3-part claim key. */
     def applySlice(sinkId: String, batchId: Long, sliceId: Int,
                    rows: Iterable[BalanceRow]): Boolean = synchronized {
-      if (sliceJournal.contains((sinkId, batchId, sliceId))) false
+      // claim LAST: if the upsert throws, no claim persists and a retried
+      // slice re-applies instead of being silently lost (the JDBC twin gets
+      // the same guarantee from transaction rollback); the whole method is
+      // synchronized, so claim-after-apply is still atomic
+      if (journal.contains((sinkId, batchId, sliceId))) false
       else {
         inner.upsertAll(rows)
-        sliceJournal.add((sinkId, batchId, sliceId))
+        journal.add((sinkId, batchId, sliceId))
         true
       }
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -19,7 +19,7 @@ import graft.operators.TextDedup
   *   - near-dup removal: per micro-batch, the oracle-checked batch probe
   *     plan ([[TextDedup.nearDupProbeFrame]]) runs against the static banded
   *     index and the trigger's survivors anti-join away every doc with a
-  *     verified match — the same foreachBatch pattern as the balance
+  *     verified match — the same [[EachBatch]] bridge as the balance
   *     dual-sink: within a trigger the data is a plain DataFrame, so the
   *     batch plan applies unchanged.
   *
@@ -48,26 +48,22 @@ object CorpusCleanStream {
       .filter(TextFunctions.langId(t) === "en" &&
         TextFunctions.qualityScoreE4(t) >= qualityFloor)
     val deduped = TextDedup.exactDedupStream(gated, textCol, eventTimeCol, delay)
-    deduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val decontaminated = evalShingles match {
-          case Some(ev) =>
-            val contaminated = batch.toDF()
-              .select(col(idCol), explode(graft.functions.ShinglesExpression
-                .shingles(col(textCol), deconN)).as("shingle"))
-              .join(broadcast(ev.select(col("shingle"))), Seq("shingle"), "left_semi")
-              .select(col(idCol)).distinct()
-            batch.toDF().join(contaminated, Seq(idCol), "left_anti")
-          case None => batch.toDF()
-        }
-        val matched = TextDedup
-          .nearDupProbeFrame(decontaminated, idCol, textCol, Seq.empty, index,
-            n, thresholdPct, numHashes, rowsPerBand)
-          .select(col("probe_id").as(idCol)).distinct()
-        onClean(decontaminated.join(matched, Seq(idCol), "left_anti"))
+    EachBatch(deduped, checkpointDir) { (batch, _) =>
+      val decontaminated = evalShingles match {
+        case Some(ev) =>
+          val contaminated = batch
+            .select(col(idCol), explode(graft.functions.ShinglesExpression
+              .shingles(col(textCol), deconN)).as("shingle"))
+            .join(broadcast(ev.select(col("shingle"))), Seq("shingle"), "left_semi")
+            .select(col(idCol)).distinct()
+          batch.join(contaminated, Seq(idCol), "left_anti")
+        case None => batch
       }
-      .start()
+      val matched = TextDedup
+        .nearDupProbeFrame(decontaminated, idCol, textCol, Seq.empty, index,
+          n, thresholdPct, numHashes, rowsPerBand)
+        .select(col("probe_id").as(idCol)).distinct()
+      onClean(decontaminated.join(matched, Seq(idCol), "left_anti"))
+    }
   }
 }

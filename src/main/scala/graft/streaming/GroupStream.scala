@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, coalesce, col}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,7 +13,7 @@ import graft.operators.ConnectedComponents
   * verified matches against the static index), and re-running distributed CC
   * per trigger would rescan all accumulated evidence. Instead each
   * micro-batch's pairs fold into a driver-side min-label
-  * [[ConnectedComponents.IncrementalUnionFind]] whose labels are by
+  * [[ConnectedComponents.CompactedUnionFind]] whose labels are by
   * construction the SAME as the batch algorithm's (min id per component), so
   * at any trigger boundary the snapshot equals `ConnectedComponents.run`
   * over the pairs delivered so far (`GroupStreamSpec` asserts it across
@@ -22,37 +22,34 @@ import graft.operators.ConnectedComponents
   * Scale contract: the per-batch `collect` is the trigger's near-dup PAIR
   * evidence (orders below corpus rows — the same boundedness argument as the
   * balance-delta sinks), and the state is O(#docs ever matched), not
-  * O(corpus). Union is idempotent, so `foreachBatch`'s at-least-once
-  * redelivery needs no journal here. For group state too large for one
-  * driver, the escalation is BUILT: [[compactPairLog]] runs the batch
-  * operator over the accumulated pair log on a compaction cadence, and
-  * [[maintainGroupsCompacted]] restarts the low-latency tier as a DELTA
-  * over the compacted label table
-  * ([[ConnectedComponents.CompactedUnionFind]]) — driver memory bounded by
-  * post-compaction evidence, full labeling recoverable distributively via
-  * [[mergedLabels]] without rescanning the log.
+  * O(corpus). Union is idempotent, so [[EachBatch]]'s at-least-once
+  * redelivery needs no journal here. A fresh maintainer starts on an empty
+  * base (`new CompactedUnionFind(_ => None)`, whose `freshSnapshot` is then
+  * every vertex seen). For group state too large for one driver,
+  * the escalation is BUILT: [[compactPairLog]] runs the batch operator over
+  * the accumulated pair log on a compaction cadence, and [[maintainGroups]]
+  * restarts the low-latency tier as a DELTA over the compacted label table
+  * — driver memory bounded by post-compaction evidence, full labeling
+  * recoverable distributively via [[mergedLabels]] without rescanning the
+  * log.
   */
 object GroupStream {
 
   /** Fold a streaming (src, dst) pair feed into `uf`; the caller reads
-    * `uf.snapshot` between triggers (or serves it from the driver).
+    * `uf.freshSnapshot` (or [[mergedLabels]] over a compacted base) between
+    * triggers, or serves it from the driver.
     */
   def maintainGroups(pairs: DataFrame, srcCol: String, dstCol: String,
-                     uf: ConnectedComponents.IncrementalUnionFind,
+                     uf: ConnectedComponents.CompactedUnionFind,
                      checkpointDir: String): StreamingQuery =
-    pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val rows = batch
-          .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-          .collect()
-        uf.synchronized {
-          rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
-        }
-        ()
+    EachBatch(pairs, checkpointDir) { (batch, _) =>
+      val rows = batch
+        .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+        .collect()
+      uf.synchronized {
+        rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
       }
-      .start()
+    }
 
   /** COMPACTION: the periodic batch pass that keeps the driver tier small —
     * distributed [[ConnectedComponents.run]] over the accumulated pair log
@@ -64,27 +61,6 @@ object GroupStream {
     */
   def compactPairLog(pairLog: DataFrame, srcCol: String, dstCol: String): DataFrame =
     ConnectedComponents.run(pairLog, srcCol, dstCol)
-
-  /** [[maintainGroups]] restarted on a compacted base: identical fold, but
-    * into a [[ConnectedComponents.CompactedUnionFind]] whose driver state is
-    * only the post-compaction delta.
-    */
-  def maintainGroupsCompacted(pairs: DataFrame, srcCol: String, dstCol: String,
-                              uf: ConnectedComponents.CompactedUnionFind,
-                              checkpointDir: String): StreamingQuery =
-    pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val rows = batch
-          .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-          .collect()
-        uf.synchronized {
-          rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
-        }
-        ()
-      }
-      .start()
 
   /** The DISTRIBUTED realization of the merged labeling — compacted table +
     * driver delta, without rescanning the pair log: one broadcastable

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,8 +20,8 @@ import graft.operators.{Lineage, TextDedup}
   * Stage placement mirrors [[CorpusCleanStream]], with one structural
   * difference: the cleaner's `dropDuplicatesWithinWatermark` stage DELETES
   * duplicate rows, but a manifest must EMIT them (with their verdict), so
-  * cross-batch dedup state lives in accumulated frames the foreachBatch
-  * composes against, not in a dropping operator:
+  * cross-batch dedup state lives in accumulated frames the [[EachBatch]]
+  * body composes against, not in a dropping operator:
   *
   *   - gates (language / quality / eval slice): stateless codegen columns;
   *   - exact dedup: first-arrival-wins against the accumulated winner-hash
@@ -68,80 +68,78 @@ object ManifestStream {
     var hashesSoFar: Option[DataFrame] = None // (h) per winner
     var indexSoFar: Option[DataFrame] = None  // lshBandedIndex rows per winner
 
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val t = col(textCol)
-          val isEval = pmod(col("doc_id"), lit(20L)) === 0
-          val stats = Lineage.cut(batch.toDF().select(
-            col(idCol).as("doc_id"), t.as("text"),
-            TextFunctions.langId(t).as("lang_id"),
-            TextFunctions.qualityScoreE4(t).as("quality_e4"),
-            md5(t.cast("binary")).as("h")))
-          val gated = stats
-            .filter(!isEval && col("lang_id") === "en" &&
-              col("quality_e4") >= qualityFloor)
-            .select(col("doc_id"), col("text"), col("h"))
+    // the guard stays: an empty trigger would still cut and re-union the
+    // accumulated frames below
+    EachBatch(docStream, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val t = col(textCol)
+        val isEval = pmod(col("doc_id"), lit(20L)) === 0
+        val stats = Lineage.cut(batch.select(
+          col(idCol).as("doc_id"), t.as("text"),
+          TextFunctions.langId(t).as("lang_id"),
+          TextFunctions.qualityScoreE4(t).as("quality_e4"),
+          md5(t.cast("binary")).as("h")))
+        val gated = stats
+          .filter(!isEval && col("lang_id") === "en" &&
+            col("quality_e4") >= qualityFloor)
+          .select(col("doc_id"), col("text"), col("h"))
 
-          // exact dedup: min-id inside the trigger, first-wins across triggers
-          val batchMin = gated.groupBy("h").agg(min(col("doc_id")).as("w"))
-          val intraWin = gated.join(batchMin, "h")
-            .filter(col("doc_id") === col("w")).drop("w")
-          val winners = Lineage.cut(hashesSoFar match {
-            case Some(hs) => intraWin.join(hs, Seq("h"), "left_anti")
-            case None => intraWin
-          })
+        // exact dedup: min-id inside the trigger, first-wins across triggers
+        val batchMin = gated.groupBy("h").agg(min(col("doc_id")).as("w"))
+        val intraWin = gated.join(batchMin, "h")
+          .filter(col("doc_id") === col("w")).drop("w")
+        val winners = Lineage.cut(hashesSoFar match {
+          case Some(hs) => intraWin.join(hs, Seq("h"), "left_anti")
+          case None => intraWin
+        })
 
-          // near-dup: intra-batch pairs (loser = doc_b, the higher id) plus
-          // the probe against every prior winner
-          val intraLosers = TextDedup
-            .minhashDedupPairs(winners, "doc_id", "text", n, thresholdPct,
-              numHashes, rowsPerBand)
-            .select(col("doc_b").as("doc_id"))
-          val nearLosers = Lineage.cut((indexSoFar match {
-            case Some(ix) => intraLosers.union(TextDedup
-              .nearDupProbeFrame(winners, "doc_id", "text", Seq.empty, ix,
-                n, thresholdPct, numHashes, rowsPerBand)
-              .select(col("probe_id").as("doc_id")))
-            case None => intraLosers
-          }).distinct())
-
-          val surv = winners.join(nearLosers, Seq("doc_id"), "left_anti")
-          val contam = TextDedup.shingles(surv, "doc_id", "text", deconN)
-            .join(broadcast(evalShingles.select(col("shingle"))),
-              Seq("shingle"), "left_semi")
-            .select("doc_id").distinct()
-
-          val flags = stats.select(col("doc_id"), col("lang_id"), col("quality_e4"))
-            .join(winners.select("doc_id").withColumn("is_win", lit(1)),
-              Seq("doc_id"), "left")
-            .join(nearLosers.withColumn("is_nd", lit(1)), Seq("doc_id"), "left")
-            .join(contam.withColumn("is_ct", lit(1)), Seq("doc_id"), "left")
-          val verdict = when(isEval, "eval_holdout")
-            .when(col("lang_id") =!= "en", "dropped_lang")
-            .when(col("quality_e4") < qualityFloor, "dropped_quality")
-            .when(col("is_win").isNull, "dropped_exact_dup")
-            .when(col("is_nd").isNotNull, "dropped_near_dup")
-            .when(col("is_ct").isNotNull, "dropped_contaminated")
-            .otherwise("kept")
-          onVerdicts(flags.select(col("doc_id"), verdict.as("verdict"),
-            when(verdict === "kept",
-              graft.queries.CurationQueries.splitLabel(col("doc_id")))
-              .otherwise(lit(null).cast("string")).as("split")))
-
-          // accumulate AFTER emission: a doc never dedups against itself.
-          // Winner hashes are already distinct (one per h per trigger, prior
-          // hashes anti-joined away), so plain unions stay duplicate-free.
-          val newIx = TextDedup.lshBandedIndex(winners, "doc_id", "text", n,
+        // near-dup: intra-batch pairs (loser = doc_b, the higher id) plus
+        // the probe against every prior winner
+        val intraLosers = TextDedup
+          .minhashDedupPairs(winners, "doc_id", "text", n, thresholdPct,
             numHashes, rowsPerBand)
-          hashesSoFar = Some(Lineage.cut(hashesSoFar
-            .map(_.union(winners.select("h"))).getOrElse(winners.select("h"))))
-          indexSoFar = Some(Lineage.cut(indexSoFar
-            .map(_.union(newIx)).getOrElse(newIx)))
-        }
+          .select(col("doc_b").as("doc_id"))
+        val nearLosers = Lineage.cut((indexSoFar match {
+          case Some(ix) => intraLosers.union(TextDedup
+            .nearDupProbeFrame(winners, "doc_id", "text", Seq.empty, ix,
+              n, thresholdPct, numHashes, rowsPerBand)
+            .select(col("probe_id").as("doc_id")))
+          case None => intraLosers
+        }).distinct())
+
+        val surv = winners.join(nearLosers, Seq("doc_id"), "left_anti")
+        val contam = TextDedup.shingles(surv, "doc_id", "text", deconN)
+          .join(broadcast(evalShingles.select(col("shingle"))),
+            Seq("shingle"), "left_semi")
+          .select("doc_id").distinct()
+
+        val flags = stats.select(col("doc_id"), col("lang_id"), col("quality_e4"))
+          .join(winners.select("doc_id").withColumn("is_win", lit(1)),
+            Seq("doc_id"), "left")
+          .join(nearLosers.withColumn("is_nd", lit(1)), Seq("doc_id"), "left")
+          .join(contam.withColumn("is_ct", lit(1)), Seq("doc_id"), "left")
+        val verdict = when(isEval, "eval_holdout")
+          .when(col("lang_id") =!= "en", "dropped_lang")
+          .when(col("quality_e4") < qualityFloor, "dropped_quality")
+          .when(col("is_win").isNull, "dropped_exact_dup")
+          .when(col("is_nd").isNotNull, "dropped_near_dup")
+          .when(col("is_ct").isNotNull, "dropped_contaminated")
+          .otherwise("kept")
+        onVerdicts(flags.select(col("doc_id"), verdict.as("verdict"),
+          when(verdict === "kept",
+            graft.queries.CurationQueries.splitLabel(col("doc_id")))
+            .otherwise(lit(null).cast("string")).as("split")))
+
+        // accumulate AFTER emission: a doc never dedups against itself.
+        // Winner hashes are already distinct (one per h per trigger, prior
+        // hashes anti-joined away), so plain unions stay duplicate-free.
+        val newIx = TextDedup.lshBandedIndex(winners, "doc_id", "text", n,
+          numHashes, rowsPerBand)
+        hashesSoFar = Some(Lineage.cut(hashesSoFar
+          .map(_.union(winners.select("h"))).getOrElse(winners.select("h"))))
+        indexSoFar = Some(Lineage.cut(indexSoFar
+          .map(_.union(newIx)).getOrElse(newIx)))
       }
-      .start()
+    }
   }
 }

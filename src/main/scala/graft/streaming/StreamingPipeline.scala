@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -52,36 +52,9 @@ object StreamingPipeline {
                 cfg: TokenPipeline.Config): DataFrame =
     TokenPipeline.transfersFromRaw(receipts, outcomes, actions, cfg)
 
-  /** The KTable changelog in its native Spark form: an unbounded streaming
-    * aggregation in UPDATE output mode — each trigger emits exactly the
-    * accounts whose balance changed, state is O(#accounts) with no watermark
-    * eviction (a KTable never expires; reference TokenBalance.java:279-331).
-    *
-    * Valid when the input is already a transfer stream (e.g. consumed from
-    * the transfers topic, the reference's own topology split): in one plan
-    * with [[transfers]] it would be a second stateful operator — for the
-    * single-plan variant use [[dualSink]], which keeps the running state in
-    * the sink instead. Start the returned writer with
-    * `.start()` after adding sink options; pair with the reference's RocksDB
-    * state backend via
-    * `spark.sql.streaming.stateStore.providerClass=
-    *  org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
-    */
-  def balancesUpdateMode(transferStream: DataFrame): DataFrame =
-    TokenPipeline.balances(transferStream)
-
-  /** Multi-tenant changelog: the same update-mode unbounded aggregation keyed
-    * (token, account) — ONE streaming state serving every token contract in
-    * the feed, versus the reference's app-per-token deployment (each with its
-    * own state store and consumer group). State stays O(#live keys); the
-    * wider key also shards a cross-token hot account over its contracts.
-    */
-  def multiTokenBalancesUpdateMode(transferStream: DataFrame): DataFrame =
-    TokenPipeline.balancesByToken(transferStream)
-
   /** One streaming query, two sinks — the reference topology's shape (the
     * transfer topic and the balance table hang off one stream,
-    * TokenBalance.java:276,333). `foreachBatch` is the idiomatic Spark
+    * TokenBalance.java:276,333). [[EachBatch]] is the idiomatic Spark
     * multi-sink: the micro-batch is staged once, the transfer sink sees the
     * append rows, the balance sink sees that batch's per-account deltas.
     *
@@ -95,17 +68,13 @@ object StreamingPipeline {
   def dualSink(transferStream: DataFrame, checkpointDir: String)
               (onTransfers: DataFrame => Unit)
               (onBalanceDeltas: DataFrame => Unit): StreamingQuery =
-    transferStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val staged = batch.persist()
-        try {
-          onTransfers(staged.toDF())
-          onBalanceDeltas(TokenPipeline.balances(staged.toDF()))
-        } finally { staged.unpersist(); () }
-      }
-      .start()
+    EachBatch(transferStream, checkpointDir) { (batch, _) =>
+      val staged = batch.persist()
+      try {
+        onTransfers(staged)
+        onBalanceDeltas(TokenPipeline.balances(staged))
+      } finally { staged.unpersist(); () }
+    }
 
   /** Balance changelog → JDBC upsert, EXACTLY-ONCE and PARTITION-PARALLEL
     * (the deployment path; [[BalanceUpsert.upsertSql]]'s merge, in SQL): each
@@ -116,17 +85,16 @@ object StreamingPipeline {
     * task, and every task claims and applies its slice(s) through
     * [[BalanceUpsert.upsertSliceExactlyOnce]] in its own transaction over
     * its own connection — no driver-side collect anywhere on the path, and
-    * sink throughput scales with `numSlices` (the driver-side
-    * single-connection form, [[BalanceUpsert.upsertBatchExactlyOnce]] under
-    * per-batch claims, bottlenecks at 100× key cardinality; the protocol is
-    * the same).
+    * sink throughput scales with `numSlices` (a single-connection sink is
+    * the `numSlices = 1` case of the same protocol, and bottlenecks at 100×
+    * key cardinality).
     *
     * Redelivery safety is PER SLICE: a checkpoint-replayed batch re-runs
     * every slice, committed slices fail their claim and are skipped whole,
     * and only the slices whose transaction never committed apply — so a
     * crash AFTER some slices committed (the new partial-failure window
     * per-batch claims never had) still converges to exactly-once.
-    * `foreachBatch`'s `batchId` is stable across restarts for redelivered
+    * [[EachBatch]]'s `batchId` is stable across restarts for redelivered
     * batches, and the replayed batch recomputes the same delta multiset
     * (same source offsets, deterministic aggregation), which together make
     * the (sink, batch, slice) key sound.
@@ -146,41 +114,36 @@ object StreamingPipeline {
                                 checkpointDir: String,
                                 numSlices: Int = 32): StreamingQuery = {
     val claimKey = s"$sinkId@$checkpointDir"
-    transferStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        TokenPipeline.balances(batch)
-          .withColumn("slice",
-            pmod(hash(col("account")), lit(numSlices)).cast("int"))
-          .repartition(numSlices, col("slice"))
-          .foreachPartition { rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              // hash partitioning sends equal slice values to one partition;
-              // a partition may still hold several slices (mod-vs-partition
-              // collisions) — each claims and commits independently
-              val bySlice = rows
-                .map(r => r.getAs[Int]("slice") -> BalanceUpsert.BalanceRow.fromRow(r))
-                .toSeq.groupBy(_._1)
-              val conn = connect()
-              try bySlice.toSeq.sortBy(_._1).foreach { case (slice, rs) =>
-                BalanceUpsert.upsertSliceExactlyOnce(
-                  rs.map(_._2), table, journal, claimKey, batchId, slice, conn)
-              } finally conn.close()
-            }
+    EachBatch(transferStream, checkpointDir) { (batch, batchId) =>
+      TokenPipeline.balances(batch)
+        .withColumn("slice",
+          pmod(hash(col("account")), lit(numSlices)).cast("int"))
+        .repartition(numSlices, col("slice"))
+        .foreachPartition { rows: Iterator[Row] =>
+          if (rows.hasNext) {
+            // hash partitioning sends equal slice values to one partition;
+            // a partition may still hold several slices (mod-vs-partition
+            // collisions) — each claims and commits independently
+            val bySlice = rows
+              .map(r => r.getAs[Int]("slice") -> BalanceUpsert.BalanceRow.fromRow(r))
+              .toSeq.groupBy(_._1)
+            val conn = connect()
+            try bySlice.toSeq.sortBy(_._1).foreach { case (slice, rs) =>
+              BalanceUpsert.upsertSliceExactlyOnce(
+                rs.map(_._2), table, journal, claimKey, batchId, slice, conn)
+            } finally conn.close()
           }
-        // retention: with this batch's work done, claims for batches
-        // <= batchId - 2 can never be redelivered under this checkpoint
-        // (one batch of margin beyond the contract) — without this the
-        // journal grows one row per (batch, slice) forever
-        if (batchId >= 2) {
-          val conn = connect()
-          try BalanceUpsert.gcJournal(conn, journal, claimKey, batchId - 2)
-          finally conn.close()
-          ()
         }
+      // retention: with this batch's work done, claims for batches
+      // <= batchId - 2 can never be redelivered under this checkpoint
+      // (one batch of margin beyond the contract) — without this the
+      // journal grows one row per (batch, slice) forever
+      if (batchId >= 2) {
+        val conn = connect()
+        try BalanceUpsert.gcJournal(conn, journal, claimKey, batchId - 2)
+        finally conn.close()
         ()
       }
-      .start()
+    }
   }
 }

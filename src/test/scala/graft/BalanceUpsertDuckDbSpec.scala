@@ -126,10 +126,11 @@ class BalanceUpsertDuckDbSpec extends AnyFunSuite {
     }
   }
 
-  /** The exactly-once protocol ([[BalanceUpsert.upsertBatchExactlyOnce]]'s
+  /** The exactly-once protocol ([[BalanceUpsert.upsertSliceExactlyOnce]]'s
     * SQL surface: journal DDL + claim + upserts in one transaction) executed
-    * in DuckDB against an at-least-once redelivery schedule — batch 1 is
-    * delivered twice — and compared against (a) the journaled in-memory twin
+    * in DuckDB for a single-connection sink, whose every batch is slice 0,
+    * against an at-least-once redelivery schedule — batch 1 is delivered
+    * twice — and compared against (a) the journaled in-memory twin
     * under the SAME schedule and (b) the plain MemoryStore applying each
     * batch ONCE: all three must agree, proving the redelivered batch was
     * skipped whole rather than double-applied (the additive balance merge
@@ -146,7 +147,7 @@ class BalanceUpsertDuckDbSpec extends AnyFunSuite {
 
     // twin 1: journaled in-memory store under the same schedule
     val js = new BalanceUpsert.JournaledStore
-    val applied = batches.map { case (id, rows) => js.applyBatch("balances", id, rows) }
+    val applied = batches.map { case (id, rows) => js.applySlice("balances", id, 0, rows) }
     assert(applied === Seq(true, true, false, true))
     // twin 2: each distinct batch exactly once into a plain store
     val once = new BalanceUpsert.MemoryStore
@@ -159,9 +160,9 @@ class BalanceUpsertDuckDbSpec extends AnyFunSuite {
       Files.write(dir.resolve("upsert.sql"),
         BalanceUpsert.upsertSql("balances").getBytes("UTF-8"))
       Files.write(dir.resolve("ddl.sql"),
-        BalanceUpsert.journalDdl("upsert_journal").getBytes("UTF-8"))
+        BalanceUpsert.sliceJournalDdl("upsert_journal").getBytes("UTF-8"))
       Files.write(dir.resolve("claim.sql"),
-        BalanceUpsert.journalClaimSql("upsert_journal").getBytes("UTF-8"))
+        BalanceUpsert.sliceClaimSql("upsert_journal").getBytes("UTF-8"))
       val tsv = batches.zipWithIndex.flatMap { case ((id, rows), delivery) =>
         rows.map { d =>
           Seq(delivery.toString, id.toString, d.account, d.balance.toPlainString,
@@ -187,11 +188,12 @@ class BalanceUpsertDuckDbSpec extends AnyFunSuite {
           |con.execute(ddl)
           |lines = [l.rstrip("\n").split("\t") for l in open(sys.argv[4]) if l.strip()]
           |# one transaction per DELIVERY (field 0 = delivery seq; field 1 =
-          |# the batch id the claim is keyed on, duplicated on redelivery)
+          |# the batch id the claim is keyed on, duplicated on redelivery;
+          |# every batch is slice 0)
           |for (_, bid), grp in groupby(lines, key=lambda f: (f[0], f[1])):
           |    rows = list(grp)
           |    con.execute("BEGIN")
-          |    claimed = con.execute(claim, [ "balances", int(bid), len(rows) ]).fetchone()[0]
+          |    claimed = con.execute(claim, ["balances", int(bid), 0, len(rows)]).fetchone()[0]
           |    if claimed != 1:
           |        con.execute("ROLLBACK")
           |        continue

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sinks.BalanceUpsert
 import graft.sinks.BalanceUpsert.BalanceRow
 
-/** Executes the JVM BODY of [[BalanceUpsert.upsertBatchExactlyOnce]] — the
+/** Executes the JVM BODY of [[BalanceUpsert.upsertSliceExactlyOnce]] — the
   * claim convention (`executeUpdate() == 1`), the 8-slot parameter binding
   * in [[BalanceUpsert.columns]] order, the rollback/commit protocol, the
   * root-cause-preserving suppression on a broken connection, and the
@@ -35,7 +35,6 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
     */
   private final class FakeDb(failExecuteBatch: Boolean = false,
                              failRollbackToo: Boolean = false) {
-    val journal = scala.collection.mutable.Set.empty[(String, Long)]
     val sliceJournal = scala.collection.mutable.Set.empty[(String, Long, Int)]
     val applied = scala.collection.mutable.Buffer.empty[Vector[Any]]
     val calls = scala.collection.mutable.Buffer.empty[String]
@@ -56,32 +55,20 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
             calls += s"executeBatch(${batch.size})"
             batch.indices.map(_ => 1).toArray
           case "executeUpdate" => // journal claims + GC use this path:
-            // 2 bound slots = retention delete, 3 = batch claim, 4 = slice
-            // claim (3-part key)
+            // 2 bound slots = retention delete, 4 = slice claim (3-part key)
             if (params.keys.max == 2) {
               val sinkId = params(1).asInstanceOf[String]
               val upTo = params(2).asInstanceOf[java.lang.Long].longValue
-              val b = journal.filter(k => k._1 == sinkId && k._2 <= upTo)
               val sl = sliceJournal.filter(k => k._1 == sinkId && k._2 <= upTo)
-              journal --= b; sliceJournal --= sl
-              calls += s"gc($sinkId, <=$upTo, removed=${b.size + sl.size})"
-              Int.box(b.size + sl.size)
+              sliceJournal --= sl
+              calls += s"gc($sinkId, <=$upTo, removed=${sl.size})"
+              Int.box(sl.size)
             } else {
-              val fresh =
-                if (params.keys.max == 3) {
-                  val key = (params(1).asInstanceOf[String],
-                    params(2).asInstanceOf[java.lang.Long].longValue)
-                  val f = journal.add(key)
-                  calls += s"claim($key, fresh=$f)"
-                  f
-                } else {
-                  val key = (params(1).asInstanceOf[String],
-                    params(2).asInstanceOf[java.lang.Long].longValue,
-                    params(3).asInstanceOf[java.lang.Integer].intValue)
-                  val f = sliceJournal.add(key)
-                  calls += s"claimSlice($key, fresh=$f)"
-                  f
-                }
+              val key = (params(1).asInstanceOf[String],
+                params(2).asInstanceOf[java.lang.Long].longValue,
+                params(3).asInstanceOf[java.lang.Integer].intValue)
+              val fresh = sliceJournal.add(key)
+              calls += s"claimSlice($key, fresh=$fresh)"
               Int.box(if (fresh) 1 else 0)
             }
           case "close" => calls += "st.close"; null
@@ -117,13 +104,17 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
     row("alice", "1000000000000000000000000000000", 2000, 3, "r-a1"),
     row("bob", "-7", 1000, 0, "r-b1"))
 
+  // A single-connection batch is slice 0 of the slice protocol.
   test("fresh batch: claim, bind all 8 slots in columns order, commit, restore autoCommit") {
     val db = new FakeDb
-    val applied = BalanceUpsert.upsertBatchExactlyOnce(
-      rows, "balances", "upsert_journal", "sink@ck", 5L, db.connection)
+    val applied = BalanceUpsert.upsertSliceExactlyOnce(
+      rows, "balances", "upsert_journal", "sink@ck", 5L, 0, db.connection)
     assert(applied)
-    assert(db.journal === Set(("sink@ck", 5L)))
+    assert(db.sliceJournal === Set(("sink@ck", 5L, 0)))
     assert(db.calls.exists(_.startsWith("claim")) && db.calls.contains("commit"))
+    // claim-then-apply: the claim runs before any upsert
+    assert(db.calls.indexWhere(_.startsWith("claim")) <
+      db.calls.indexWhere(_.startsWith("executeBatch")))
     assert(!db.calls.contains("rollback"))
     // parameter order is the documented columns order, values unmangled
     assert(db.applied.map(_.length).toSet === Set(8))
@@ -141,9 +132,9 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
 
   test("redelivered batch: claim fails, whole batch rolled back, nothing applied") {
     val db = new FakeDb
-    db.journal += (("sink@ck", 5L)) // a previous (crashed-after-commit) attempt
-    val applied = BalanceUpsert.upsertBatchExactlyOnce(
-      rows, "balances", "upsert_journal", "sink@ck", 5L, db.connection)
+    db.sliceJournal += (("sink@ck", 5L, 0)) // a previous (crashed-after-commit) attempt
+    val applied = BalanceUpsert.upsertSliceExactlyOnce(
+      rows, "balances", "upsert_journal", "sink@ck", 5L, 0, db.connection)
     assert(!applied)
     assert(db.applied.isEmpty, "a redelivered batch must not re-apply")
     assert(db.calls.contains("rollback") && !db.calls.contains("commit"))
@@ -153,8 +144,8 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
   test("broken connection mid-batch: root cause propagates, rollback failure suppressed") {
     val db = new FakeDb(failExecuteBatch = true, failRollbackToo = true)
     val e = intercept[SQLException] {
-      BalanceUpsert.upsertBatchExactlyOnce(
-        rows, "balances", "upsert_journal", "sink@ck", 5L, db.connection)
+      BalanceUpsert.upsertSliceExactlyOnce(
+        rows, "balances", "upsert_journal", "sink@ck", 5L, 0, db.connection)
     }
     assert(e.getMessage === "connection reset mid-batch",
       "the ORIGINAL failure must propagate, not the rollback's")
@@ -165,12 +156,13 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
     // which mirrors a real DB only until rollback — the assertion that
     // matters is that nothing was committed
     assert(!db.calls.contains("commit"))
+    assert(db.autoCommit, "autoCommit must be restored on the failure path too")
   }
 
   test("statements are closed on both the claim and the upsert paths") {
     val db = new FakeDb
-    BalanceUpsert.upsertBatchExactlyOnce(
-      rows, "balances", "upsert_journal", "sink@ck", 5L, db.connection)
+    BalanceUpsert.upsertSliceExactlyOnce(
+      rows, "balances", "upsert_journal", "sink@ck", 5L, 0, db.connection)
     assert(db.calls.count(_ == "st.close") == 2,
       "claim + upsert statements must both be closed per micro-batch " +
         "(pooled-connection callers leak handles otherwise)")
@@ -182,7 +174,6 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
       rows, "balances", "upsert_journal", "sink@ck", 5L, 7, db.connection)
     assert(applied)
     assert(db.sliceJournal === Set(("sink@ck", 5L, 7)))
-    assert(db.journal.isEmpty, "a slice claim must never touch the batch key")
     assert(db.calls.exists(_.startsWith("claimSlice")) && db.calls.contains("commit"))
     assert(db.applied.map(_(0)) === Seq("alice", "bob"))
     assert(db.autoCommit)
@@ -204,18 +195,17 @@ class BalanceUpsertJdbcProtocolSpec extends AnyFunSuite {
 
   test("journal GC removes only this sink's claims at or below the horizon") {
     val db = new FakeDb
-    db.journal ++= Seq(("sink@ck", 1L), ("sink@ck", 2L), ("sink@ck", 3L),
-      ("other@ck", 1L))
-    db.sliceJournal ++= Seq(("sink@ck", 1L, 0), ("sink@ck", 3L, 1))
+    db.sliceJournal ++= Seq(("sink@ck", 1L, 0), ("sink@ck", 2L, 0),
+      ("sink@ck", 3L, 0), ("other@ck", 1L, 0), ("sink@ck", 1L, 1), ("sink@ck", 3L, 1))
     val removed = BalanceUpsert.gcJournal(db.connection, "upsert_journal",
       "sink@ck", upToBatchId = 2L)
-    assert(removed === 3) // batch claims 1,2 + slice claim (1,0)
-    assert(db.journal === Set(("sink@ck", 3L), ("other@ck", 1L)),
+    assert(removed === 3) // slice claims (1,0), (2,0) and (1,1)
+    assert(db.sliceJournal === Set(("sink@ck", 3L, 0), ("other@ck", 1L, 0),
+      ("sink@ck", 3L, 1)),
       "claims above the horizon and other sinks' claims must survive")
-    assert(db.sliceJournal === Set(("sink@ck", 3L, 1)))
     assert(db.calls.count(_ == "st.close") == 1, "GC statement must be closed")
     // the surviving recent claim still guards redelivery
-    assert(!BalanceUpsert.upsertBatchExactlyOnce(
-      rows, "balances", "upsert_journal", "sink@ck", 3L, db.connection))
+    assert(!BalanceUpsert.upsertSliceExactlyOnce(
+      rows, "balances", "upsert_journal", "sink@ck", 3L, 0, db.connection))
   }
 }

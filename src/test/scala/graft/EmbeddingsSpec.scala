@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.operators.Embeddings
+import graft.streaming.EachBatch
 
 /** Hand-computable fixtures for the similarity-search family. */
 class EmbeddingsSpec extends SparkSpec {
@@ -86,11 +87,10 @@ class EmbeddingsSpec extends SparkSpec {
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val q = Embeddings.annProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), corpus, centroids, nProbe = 4, k = 5,
-      java.nio.file.Files.createTempDirectory("ann-ck").toString) { res =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("ann-ck").toString) { (batch, _) =>
+      val res = Embeddings.ivfTopKWith(corpus, batch, centroids, nProbe = 4, k = 5)
       got.synchronized { got ++= res.as[(Long, Long, Int)].collect() }
-      ()
     }
     queryRows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
     q.stop()
@@ -400,7 +400,8 @@ class EmbeddingsSpec extends SparkSpec {
   }
 
   /** Stream-static IVF∘PQ serving parity: micro-batched queries answered from
-    * the ONE pre-built codes index ([[Embeddings.ivfPqProbeSink]]) must equal
+    * the ONE pre-built codes index ([[Embeddings.ivfPqTopKFromIndex]] per
+    * micro-batch) must equal
     * the batch [[Embeddings.ivfPqTopK]] results for the same query set — the
     * per-trigger working set is codes + assignments + codebook + centroids
     * (the float corpus is in no trigger's plan), and per-batch plans see a
@@ -425,12 +426,11 @@ class EmbeddingsSpec extends SparkSpec {
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val q = Embeddings.ivfPqProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), codes, assigned, centroids, codebook,
-      nProbe = 4, k = 5,
-      java.nio.file.Files.createTempDirectory("ivfpq-ck").toString) { res =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("ivfpq-ck").toString) { (batch, _) =>
+      val res = Embeddings.ivfPqTopKFromIndex(codes, assigned, batch, centroids,
+        codebook, nProbe = 4, k = 5)
       got.synchronized { got ++= res.as[(Long, Long, Int)].collect() }
-      ()
     }
     queryRows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
     q.stop()
@@ -445,7 +445,7 @@ class EmbeddingsSpec extends SparkSpec {
   }
 
   /** Stream-served refine parity: micro-batched queries through
-    * [[Embeddings.rerankProbeSink]] (ADC pool from the pre-built index, exact
+    * [[Embeddings.ivfPqRerankFromIndex]] (ADC pool from the pre-built index, exact
     * rerank against the static float store) must equal the batch
     * [[Embeddings.ivfPqRerank]] for the same query set — the refine stage's
     * store fetch is a per-batch candidate equi-join against a static frame,
@@ -469,12 +469,11 @@ class EmbeddingsSpec extends SparkSpec {
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val q = Embeddings.rerankProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), codes, assigned, centroids, codebook,
-      vectorStore = corpus, nProbe = 4, r = 20, k = 5,
-      java.nio.file.Files.createTempDirectory("rerank-ck").toString) { res =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("rerank-ck").toString) { (batch, _) =>
+      val res = Embeddings.ivfPqRerankFromIndex(codes, assigned, batch, centroids,
+        codebook, vectorStore = corpus, nProbe = 4, r = 20, k = 5)
       got.synchronized { got ++= res.as[(Long, Long, Int)].collect() }
-      ()
     }
     queryRows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
     q.stop()
@@ -489,8 +488,8 @@ class EmbeddingsSpec extends SparkSpec {
   }
 
   /** Build-side streaming parity: vectors ingested across micro-batches and
-    * encoded against the frozen quantizers ([[Embeddings.indexIngestSink]])
-    * must append exactly the batch [[Embeddings.pqEncode]]/
+    * encoded against the frozen quantizers (per micro-batch [[Embeddings.pqEncode]]
+    * and [[Embeddings.ivfAssign]]) must append exactly the batch [[Embeddings.pqEncode]]/
     * [[Embeddings.ivfAssign]] rows — the index a stream maintains is the
     * index a batch rebuild would produce.
     */
@@ -507,12 +506,12 @@ class EmbeddingsSpec extends SparkSpec {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val gotCodes = scala.collection.mutable.Set.empty[(Long, Int, Int)]
     val gotAssign = scala.collection.mutable.Set.empty[(Long, Long)]
-    val q = Embeddings.indexIngestSink(
-      in.toDF().toDF("vec_id", "embedding"), centroids, codebook,
-      java.nio.file.Files.createTempDirectory("ingest-ck").toString) { (codes, asg) =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("ingest-ck").toString) { (batch, _) =>
+      val codes = Embeddings.pqEncode(batch, codebook)
+      val asg = Embeddings.ivfAssign(batch, centroids)
       gotCodes.synchronized { gotCodes ++= codes.as[(Long, Int, Int)].collect() }
       gotAssign.synchronized { gotAssign ++= asg.as[(Long, Long)].collect() }
-      ()
     }
     arriving.grouped(20).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
     q.stop()

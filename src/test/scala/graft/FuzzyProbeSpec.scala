@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.FuzzyJoin
-import graft.streaming.FuzzyProbeStream
+import graft.streaming.EachBatch
 
 /** The streamed fuzzy probe must emit, across arbitrary micro-batch cuts,
   * exactly the pairs the batch [[FuzzyJoin.probePairs]] finds on the whole
@@ -32,11 +32,11 @@ class FuzzyProbeSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-    val q = FuzzyProbeStream.run(in.toDF().toDF("id", "name"), "id", "name", index,
-      Files.createTempDirectory("fuzzyprobe-ck").toString) { pairs =>
-      val rows = pairs.as[(Long, Long, Long)].collect()
+    val q = EachBatch(in.toDF().toDF("id", "name"),
+      Files.createTempDirectory("fuzzyprobe-ck").toString) { (batch, _) =>
+      val rows = FuzzyJoin.probePairs(batch, "id", "name", index)
+        .as[(Long, Long, Long)].collect()
       emitted.synchronized { emitted ++= rows }
-      ()
     }
     probes.grouped(2).foreach { chunk =>
       in.addData(chunk: _*)

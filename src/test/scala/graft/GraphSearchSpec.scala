@@ -383,8 +383,9 @@ class GraphSearchSpec extends SparkSpec {
     ()
   }
 
-  /** Stream-static serving parity ([[Embeddings.graphProbeSink]]): query
-    * micro-batches answered from the ONE pre-built graph + static store must
+  /** Stream-static serving parity ([[Embeddings.graphSearch]] per query
+    * micro-batch through [[graft.streaming.EachBatch]]): query micro-batches
+    * answered from the ONE pre-built graph + static store must
     * equal the batch search for the same query set, at every chunking —
     * per-batch plans see static frames, so trigger boundaries are invisible.
     */
@@ -398,12 +399,11 @@ class GraphSearchSpec extends SparkSpec {
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val q = Embeddings.graphProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), g, corpus, centroids,
-      EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds,
-      k = 5, java.nio.file.Files.createTempDirectory("gs-ck").toString) { res =>
+    val q = graft.streaming.EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("gs-ck").toString) { (batch, _) =>
+      val res = Embeddings.graphSearch(corpus, batch, g, centroids,
+        EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, 5)
       got.synchronized { got ++= res.as[(Long, Long, Int)].collect() }
-      ()
     }
     queryRows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
     q.stop()

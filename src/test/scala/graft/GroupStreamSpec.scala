@@ -23,10 +23,12 @@ class GroupStreamSpec extends SparkSpec {
     ConnectedComponents.run(edges.toDF("u", "v"), "u", "v")
       .as[(Long, Long)].collect().toMap
 
-  private def runChunked(edges: Seq[(Long, Long)], nChunks: Int): Map[Long, Long] = {
+  /** Stream `edges` in `nChunks` triggers into a maintainer on `base`. */
+  private def runChunkedOn(edges: Seq[(Long, Long)], nChunks: Int,
+                           base: Map[Long, Long]): ConnectedComponents.CompactedUnionFind = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
-    val uf = new ConnectedComponents.IncrementalUnionFind
+    val uf = new ConnectedComponents.CompactedUnionFind(base.get)
     val q = GroupStream.maintainGroups(
       in.toDF().toDF("u", "v"), "u", "v", uf,
       Files.createTempDirectory(s"grp-ck-$nChunks").toString)
@@ -36,8 +38,12 @@ class GroupStreamSpec extends SparkSpec {
       q.processAllAvailable()
     }
     q.stop()
-    uf.snapshot
+    uf
   }
+
+  /** A maintainer on an empty base: every vertex is fresh. */
+  private def runChunked(edges: Seq[(Long, Long)], nChunks: Int): Map[Long, Long] =
+    runChunkedOn(edges, nChunks, Map.empty).freshSnapshot
 
   test("streamed union-find equals batch CC across trigger chunkings") {
     // bridge pair (6,16) arrives LAST: two separately-built groups must merge
@@ -52,23 +58,6 @@ class GroupStreamSpec extends SparkSpec {
     }
     // the merge actually happened: one component spans both early groups
     assert(expected(18L) === 5L && expected(8L) === 5L)
-  }
-
-  private def runChunkedCompacted(edges: Seq[(Long, Long)], nChunks: Int,
-                                  base: Map[Long, Long]): ConnectedComponents.CompactedUnionFind = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, Long)]
-    val uf = new ConnectedComponents.CompactedUnionFind(base.get)
-    val q = GroupStream.maintainGroupsCompacted(
-      in.toDF().toDF("u", "v"), "u", "v", uf,
-      Files.createTempDirectory(s"grpc-ck-$nChunks").toString)
-    val size = math.max(1, math.ceil(edges.size.toDouble / nChunks).toInt)
-    edges.grouped(size).foreach { chunk =>
-      in.addData(chunk: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    uf
   }
 
   /** The distributed escalation seam: batch-compact phase-A evidence, restart
@@ -91,7 +80,7 @@ class GroupStreamSpec extends SparkSpec {
     assert(labelMap === ccLabels(phaseA), "compaction must reproduce batch labels")
     val expected = ccLabels(phaseA ++ phaseB)
     Seq(1, 2, 4).foreach { n =>
-      val uf = runChunkedCompacted(phaseB, n, labelMap)
+      val uf = runChunkedOn(phaseB, n, labelMap)
       val merged = GroupStream.mergedLabels(labels, uf)
         .as[(Long, Long)].collect().toMap
       assert(merged === expected, s"nChunks=$n diverged across the seam")
@@ -153,7 +142,7 @@ class GroupStreamSpec extends SparkSpec {
       in.toDF().toDF("doc_id", "text", "ts"), "doc_id", "text", "ts",
       "10 seconds", index, n = 3, thresholdPct = 60,
       numHashes = 32, rowsPerBand = 2)
-    val uf = new ConnectedComponents.IncrementalUnionFind
+    val uf = new ConnectedComponents.CompactedUnionFind(_ => None)
     val q = GroupStream.maintainGroups(pairs, "probe_id", "match_id", uf,
       Files.createTempDirectory("grp-probe-ck").toString)
 
@@ -166,7 +155,7 @@ class GroupStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val snap = uf.snapshot
+    val snap = uf.freshSnapshot
     assert(snap.nonEmpty)
     // every matched probe doc and its index targets share one min-label group
     val grouped = Set(10L, 11L, 100L, 102L).map(snap)

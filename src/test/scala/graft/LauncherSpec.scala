@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-import scala.util.Using
-
 /** The launcher surface the graft mains share: the confs of
   * [[SparkEntry.session]], the query-name selection `Bench` and `Verify`
   * take, and the rule that no other code in the sources makes a session.
@@ -36,20 +31,12 @@ class LauncherSpec extends SparkSpec {
 
   test("SparkEntry.session is the only place the sources make a SparkSession") {
     val builder = """SparkSession\s*\.\s*builder\b""".r
-    val base = Paths.get(sys.props.getOrElse("user.dir", "."))
-    def builderLines(file: Path): Seq[Int] =
-      Files.readAllLines(file).asScala.toSeq.zipWithIndex.collect {
-        case (line, i) if !Seq("*", "//", "/*").exists(line.trim.startsWith) &&
-          builder.findFirstIn(line).isDefined => i + 1
-      }
-    val entry = base.resolve("src/main/scala/graft/SparkEntry.scala")
+    val entry = SourceScan.base.resolve("src/main/scala/graft/SparkEntry.scala")
     // the scan sees the one builder it allows, so it is not vacuous
-    assert(builderLines(entry).size == 1)
-    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      Using.resource(Files.walk(base.resolve(root))) { paths =>
-        paths.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      }
-    }.filterNot(_ == entry).flatMap(f => builderLines(f).map(n => s"$f:$n"))
+    assert(SourceScan.codeLines(entry, builder).size == 1)
+    val hits = SourceScan.scalaFiles("src/main/scala", "src/test/scala")
+      .filterNot(_ == entry)
+      .flatMap(f => SourceScan.codeLines(f, builder).map(n => s"$f:$n"))
     assert(hits.isEmpty, s"build sessions with SparkEntry.session, not at: ${hits.mkString(", ")}")
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.LineDedup
-import graft.streaming.LineDedupStream
+import graft.streaming.EachBatch
 
 /** The streamed line scrub must emit, across arbitrary micro-batch cuts,
   * exactly the rewrites the batch [[LineDedup.dedupWith]] produces on the
@@ -36,13 +36,13 @@ class LineDedupStreamSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.Map.empty[Long, (Long, Long, String)]
-    val q = LineDedupStream.run(in.toDF().toDF("doc_id", "page"), index,
-      Files.createTempDirectory("linededup-ck").toString) { out =>
-      val rows = out.as[(Long, Long, Long, String)].collect()
+    val q = EachBatch(in.toDF().toDF("doc_id", "page"),
+      Files.createTempDirectory("linededup-ck").toString) { (batch, _) =>
+      val rows = LineDedup.dedupWith(batch, "doc_id", "page", index)
+        .as[(Long, Long, Long, String)].collect()
       emitted.synchronized {
         rows.foreach(r => emitted(r._1) = (r._2, r._3, r._4))
       }
-      ()
     }
     try {
       probes.grouped(2).foreach { chunk =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Multimodal
-import graft.streaming.MediaIngestStream
+import graft.streaming.EachBatch
 
 /** Streaming media ingest must produce, across micro-batches, exactly the
   * keyframe verdicts the batch operator computes over the same payloads.
@@ -21,11 +21,10 @@ class MediaIngestStreamSpec extends SparkSpec {
       .select(col("doc_id"), col("payload_s").cast("binary").as("payload"))
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-    val q = MediaIngestStream.run(stream, "doc_id", "payload", k = 4,
-      threshold = 0.8, Files.createTempDirectory("media-ck").toString) { kf =>
-      val rows = kf.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val q = EachBatch(stream, Files.createTempDirectory("media-ck").toString) { (batch, _) =>
+      val rows = Multimodal.keyframes(batch, "doc_id", "payload", k = 4, threshold = 0.8)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       out.synchronized { out ++= rows }
-      ()
     }
 
     val docs = Seq(

@@ -106,13 +106,18 @@ class PlanAuditSpec extends SparkSpec {
     // volume; the raw-key side of the query is all equi-joins.
     "q_kmv_setops")
 
-  /** Build a registered query's physical plan with every lineage cut in the
-    * library disabled — the full-lineage form every sweep audits.
+  /** Every registered query's physical plan with every lineage cut in the
+    * library disabled — the full-lineage form every sweep audits. Planned
+    * once, in one `withoutCuts` scope, and shared by all the checks below.
     */
-  private def fullPlan(name: String): Seq[SparkPlan] =
+  private lazy val fullPlans: Map[String, Seq[SparkPlan]] =
     graft.operators.Lineage.withoutCuts {
-      collectPlan(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+      SparkEntry.queries.keys.toSeq.sorted.map { name =>
+        name -> collectPlan(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+      }.toMap
     }
+
+  private def fullPlan(name: String): Seq[SparkPlan] = fullPlans(name)
 
   test("no registered plan contains an unbroadcast cartesian product") {
     val bad = SparkEntry.queries.keys.toSeq.sorted.filter { name =>

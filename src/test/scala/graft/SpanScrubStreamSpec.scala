@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.SpanScrub
-import graft.streaming.SpanScrubStream
+import graft.streaming.EachBatch
 
 /** The streamed span scrub must emit, across arbitrary micro-batch cuts,
   * exactly the rewrites the batch [[SpanScrub.scrubAgainst]] produces on the
@@ -35,13 +35,13 @@ class SpanScrubStreamSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.Map.empty[Long, (Long, Long, String)]
-    val q = SpanScrubStream.run(in.toDF().toDF("doc_id", "text"), index,
-      Files.createTempDirectory("spanscrub-ck").toString) { out =>
-      val rows = out.as[(Long, Long, Long, String)].collect()
+    val q = EachBatch(in.toDF().toDF("doc_id", "text"),
+      Files.createTempDirectory("spanscrub-ck").toString) { (batch, _) =>
+      val rows = SpanScrub.scrubAgainst(batch, index)
+        .as[(Long, Long, Long, String)].collect()
       emitted.synchronized {
         rows.foreach(r => emitted(r._1) = (r._2, r._3, r._4))
       }
-      ()
     }
     try {
       probes.grouped(2).foreach { chunk =>

@@ -6,10 +6,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Embeddings
 import graft.queries.EmbeddingQueries
+import graft.streaming.EachBatch
 
 /** The STREAMED serving tiers read the same persisted index artifacts the
-  * batch gates scan (`graft_gsidx_*` / `graft_pqidx_*` parquet): each probe
-  * sink is driven with the `EmbeddingQueries.gsIndex`/`pqIndex` read-backs —
+  * batch gates scan (`graft_gsidx_*` / `graft_pqidx_*` parquet): each serving
+  * operator runs per micro-batch through [[graft.streaming.EachBatch]] on the
+  * `EmbeddingQueries.gsIndex`/`pqIndex` read-backs —
   * exactly how `StreamBench.runGraphServe`/`runAnnServe` wire them — and the
   * per-batch answer plan is asserted to scan the artifact. This pins the
   * build-once/serve-from-parquet contract on the streaming side the way
@@ -38,14 +40,13 @@ class StreamServeArtifactSpec extends SparkSpec {
     val corpus = vectors
     val in = MemoryStream[(Long, Array[Float])]
     val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = Embeddings.graphProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), graph, corpus, entries,
-      EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam,
-      EmbeddingQueries.GsRounds, EmbeddingQueries.K,
-      java.nio.file.Files.createTempDirectory("gsa-ck").toString) { res =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("gsa-ck").toString) { (batch, _) =>
+      val res = Embeddings.graphSearch(corpus, batch, graph, entries,
+        EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam,
+        EmbeddingQueries.GsRounds, EmbeddingQueries.K)
       paths.synchronized { paths ++= scanPaths(res) }
       assert(res.count() > 0, "streamed graph serve returned nothing")
-      ()
     }
     // the search cuts per wave at run time; audit the FULL lineage the way
     // PlanAuditSpec does — withoutCuts is a volatile global, so it reaches
@@ -65,14 +66,13 @@ class StreamServeArtifactSpec extends SparkSpec {
     val store = vectors
     val in = MemoryStream[(Long, Array[Float])]
     val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = Embeddings.rerankProbeSink(
-      in.toDF().toDF("vec_id", "embedding"), idx.codes, idx.assigned,
-      idx.centroids, idx.codebook, store, EmbeddingQueries.NProbe,
-      EmbeddingQueries.RerankR, EmbeddingQueries.K,
-      java.nio.file.Files.createTempDirectory("pqa-ck").toString) { res =>
+    val q = EachBatch(in.toDF().toDF("vec_id", "embedding"),
+      java.nio.file.Files.createTempDirectory("pqa-ck").toString) { (batch, _) =>
+      val res = Embeddings.ivfPqRerankFromIndex(idx.codes, idx.assigned, batch,
+        idx.centroids, idx.codebook, store, EmbeddingQueries.NProbe,
+        EmbeddingQueries.RerankR, EmbeddingQueries.K)
       paths.synchronized { paths ++= scanPaths(res) }
       assert(res.count() > 0, "streamed rerank serve returned nothing")
-      ()
     }
     graft.operators.Lineage.withoutCuts {
       in.addData(oneQuery)

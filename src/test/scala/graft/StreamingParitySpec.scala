@@ -9,7 +9,7 @@ import org.scalacheck.{Gen, Prop, Shrink, Test => SCTest}
 import graft.operators.TokenPipeline
 import graft.schema.NearSchemas
 import graft.sinks.BalanceUpsert
-import graft.streaming.StreamingPipeline
+import graft.streaming.{EachBatch, StreamingPipeline}
 
 /** Batch ≡ stream parity for the token pipeline — the reference's execution
   * model is streaming (TokenBalance.java:92-122,279-333), so the claim that
@@ -54,9 +54,11 @@ class StreamingParitySpec extends SparkSpec {
 
   /** Run the full pipeline over `steps`, one delivery per step (each topic's
     * rows of that step, then one `processAllAvailable`); return (every
-    * emitted transfer row, in emission order, and the balance store).
+    * emitted transfer row, in emission order, and the balance store). With
+    * `restartAfter = Some(i)` the query is stopped after step i and a new
+    * one resumes on the same checkpoint.
     */
-  private def runSteps(name: String, steps: Seq[Feeds])
+  private def runSteps(name: String, steps: Seq[Feeds], restartAfter: Option[Int] = None)
       : (Seq[String], Map[String, BalanceUpsert.BalanceRow]) = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -77,18 +79,24 @@ class StreamingParitySpec extends SparkSpec {
     // shape (see StreamingPipeline.dualSink).
     val store = new BalanceUpsert.MemoryStore
     val txRows = scala.collection.mutable.ArrayBuffer.empty[String]
-    val query = StreamingPipeline.dualSink(tx,
-      Files.createTempDirectory(s"$name-ck").toString) { transfers =>
+    val ck = Files.createTempDirectory(s"$name-ck").toString
+    def start() = StreamingPipeline.dualSink(tx, ck) { transfers =>
       txRows.synchronized { txRows ++= transfers.toJSON.collect() }
     } { deltas =>
       store.upsertAll(deltas.collect().toSeq.map(BalanceUpsert.BalanceRow.fromRow))
     }
 
-    steps.foreach { case (r, o, a) =>
+    var query = start()
+    steps.zipWithIndex.foreach { case ((r, o, a), i) =>
       if (r.nonEmpty) rIn.addData(r)
       if (o.nonEmpty) oIn.addData(o)
       if (a.nonEmpty) aIn.addData(a)
       query.processAllAvailable()
+      if (restartAfter.contains(i)) {
+        query.stop()
+        query = start()
+        query.processAllAvailable()
+      }
     }
     query.stop()
 
@@ -141,34 +149,42 @@ class StreamingParitySpec extends SparkSpec {
     * so the members of one ±2 s window arrive in every relative order and
     * redeliveries cross batch boundaries and topics. The fixture spans 100 s
     * of event time, inside the 60-min watermark delay, so no order is late.
+    * Each schedule also names the step after which the query is stopped and
+    * restarted on its checkpoint (the last step: a restart with no new data).
     */
-  private val schedules: Gen[Seq[Feeds]] = for {
+  private val schedules: Gen[(Seq[Feeds], Int)] = for {
     n <- Gen.choose(1, 4)
     r <- deliveries(fixtureFeeds._1, n)
     o <- deliveries(fixtureFeeds._2, n)
     a <- deliveries(fixtureFeeds._3, n)
-  } yield (0 until n).map(i => (r(i), o(i), a(i)))
+    restartAfter <- Gen.choose(0, n - 1)
+  } yield ((0 until n).map(i => (r(i), o(i), a(i))), restartAfter)
 
-  /** A failing schedule shrinks by dropping whole deliveries, then single rows. */
-  private implicit val shrinkSchedule: Shrink[Seq[Feeds]] = Shrink.withLazyList { steps =>
-    def topics(f: Feeds) = Seq(f._1, f._2, f._3)
-    val fewerSteps = steps.indices.to(LazyList).map(i => steps.patch(i, Nil, 1))
-    val fewerRows = for {
-      i <- steps.indices.to(LazyList)
-      t <- (0 until 3).to(LazyList)
-      j <- topics(steps(i))(t).indices.to(LazyList)
-    } yield {
-      val ts = topics(steps(i)).updated(t, topics(steps(i))(t).patch(j, Nil, 1))
-      steps.updated(i, (ts(0), ts(1), ts(2)))
+  /** A failing schedule shrinks by dropping whole deliveries, then single
+    * rows; the restart step stays inside the shrunk schedule.
+    */
+  private implicit val shrinkSchedule: Shrink[(Seq[Feeds], Int)] =
+    Shrink.withLazyList { case (steps, restartAfter) =>
+      def topics(f: Feeds) = Seq(f._1, f._2, f._3)
+      val fewerSteps = steps.indices.to(LazyList).map(i => steps.patch(i, Nil, 1))
+      val fewerRows = for {
+        i <- steps.indices.to(LazyList)
+        t <- (0 until 3).to(LazyList)
+        j <- topics(steps(i))(t).indices.to(LazyList)
+      } yield {
+        val ts = topics(steps(i)).updated(t, topics(steps(i))(t).patch(j, Nil, 1))
+        steps.updated(i, (ts(0), ts(1), ts(2)))
+      }
+      (fewerSteps ++ fewerRows).map(s => (s, math.max(0, math.min(restartAfter, s.size - 1))))
     }
-    fewerSteps ++ fewerRows
-  }
 
   test("property: streamed legs and balances equal batch under any delivery schedule") {
     var runs = 0
-    val prop = Prop.forAll(schedules) { steps =>
+    val restarts = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val prop = Prop.forAll(schedules) { case (steps, restartAfter) =>
       runs += 1
-      val (legs, store) = runSteps(s"tx_prop_$runs", steps)
+      restarts += ((restartAfter, steps.size))
+      val (legs, store) = runSteps(s"tx_prop_$runs", steps, Some(restartAfter))
       def topic(t: Int, schema: org.apache.spark.sql.types.StructType) =
         StreamingPipeline.parseJson(steps.flatMap(s => Seq(s._1, s._2, s._3)(t)).toDF("value"), schema)
       val batch = TokenPipeline.transfersFromRaw(topic(0, NearSchemas.receipts),
@@ -189,6 +205,8 @@ class StreamingParitySpec extends SparkSpec {
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(6).withInitialSeed(20261017L), prop)
     assert(result.passed, result.status.toString)
+    // the seeded schedules restart mid-feed, not only after the last batch
+    assert(restarts.exists { case (at, n) => at < n - 1 }, s"restarts: $restarts")
   }
 
   test("reset + replay reproduces identical results (deterministic recovery)") {
@@ -226,21 +244,16 @@ class StreamingParitySpec extends SparkSpec {
     val journaled = new BalanceUpsert.JournaledStore
     val plain = new BalanceUpsert.MemoryStore
     @volatile var crashed = false
-    def start() = tx.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val rows = TokenPipeline.balances(batch).collect().toSeq
-          .map(BalanceUpsert.BalanceRow.fromRow)
-        plain.upsertAll(rows)                      // at-least-once baseline
-        journaled.applyBatch("bal", id, rows)      // claim-then-apply
-        if (!crashed && rows.nonEmpty) {
-          crashed = true
-          throw new RuntimeException("injected crash after sink side effects")
-        }
-        ()
+    def start() = EachBatch(tx, ck) { (batch, id) =>
+      val rows = TokenPipeline.balances(batch).collect().toSeq
+        .map(BalanceUpsert.BalanceRow.fromRow)
+      plain.upsertAll(rows)                      // at-least-once baseline
+      journaled.applySlice("bal", id, 0, rows)   // claim-then-apply, as slice 0
+      if (!crashed && rows.nonEmpty) {
+        crashed = true
+        throw new RuntimeException("injected crash after sink side effects")
       }
-      .start()
+    }
 
     rIn.addData(TokenFixture.receipts(spark).toJSON.collect().toSeq)
     oIn.addData(TokenFixture.outcomes(spark).toJSON.collect().toSeq)

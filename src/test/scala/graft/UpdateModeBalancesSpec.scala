@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TokenPipeline
-import graft.streaming.StreamingPipeline
 
 /** The balance changelog as a native update-mode streaming aggregation over a
   * transfer stream: per trigger only changed accounts emit (KTable changelog
@@ -35,7 +34,7 @@ class UpdateModeBalancesSpec extends SparkSpec {
   private def runUpdateMode(name: String): Seq[(Long, Map[String, Long])] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[Evt]
-    val balances = StreamingPipeline.balancesUpdateMode(in.toDF())
+    val balances = TokenPipeline.balances(in.toDF())
 
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[String, Long])]
     val q = balances.writeStream.outputMode("update")
@@ -75,7 +74,7 @@ class UpdateModeBalancesSpec extends SparkSpec {
     // r1/r3 land on tok.a, r2/r4 on tok.b — two contracts in one stream
     val withToken = in.toDF().withColumn("receiver_account_id",
       when($"receipt_id".isin("r1", "r3"), "tok.a").otherwise("tok.b"))
-    val balances = StreamingPipeline.multiTokenBalancesUpdateMode(withToken)
+    val balances = TokenPipeline.balancesByToken(withToken)
 
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), Long]]
     val q = balances.writeStream.outputMode("update")
