@@ -768,17 +768,13 @@ object Bpe {
       }
   }
 
-  /** The deterministic top-`k` round-1 pair list AS a ranked merge table —
-    * (freq DESC, pair ASC) order, collected to the driver (k rows, bounded
-    * by construction; same pattern as the trainer's argmax). This is the
-    * merge list `q_bpe_encode`'s oracle re-derives in SQL; full multi-round
-    * merges from [[train]] plug into [[encodeVocab]] the same way.
-    */
-  def rankedPairMerges(docs: DataFrame, textCol: String, k: Int): Seq[(String, String)] =
-    rankedPairMergesOfVocab(wordVocab(docs, textCol), k)
-
-  /** [[rankedPairMerges]] over a prebuilt vocabulary (see
-    * [[topPairsOfVocab]] for why the seam exists).
+  /** The deterministic top-`k` round-1 pair list of a prebuilt vocabulary
+    * AS a ranked merge table — (freq DESC, pair ASC) order, collected to the
+    * driver (k rows, bounded by construction; same pattern as the trainer's
+    * argmax). This is the merge list `q_bpe_encode`'s oracle re-derives in
+    * SQL; full multi-round merges from [[train]] plug into [[encodeVocab]]
+    * the same way. See [[topPairsOfVocab]] for why the vocabulary seam
+    * exists.
     */
   def rankedPairMergesOfVocab(vocab: DataFrame, k: Int): Seq[(String, String)] =
     topPairsOfVocab(vocab, k).select("pair").collect()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *     nearest centroid (broadcast centroids; one pass), then probe only the
   *     `nProbe` nearest centroid buckets per query. Candidate set shrinks by
   *     ~numCentroids/nProbe; recall is measured against the exact path by
-  *     [[ivfRecall]]. Centroid "training" is deterministic (first C vectors
+  *     [[knnRecallOf]]. Centroid "training" is deterministic (first C vectors
   *     serve as centroids), so results are reproducible and oracle-checkable.
   *
   * All arithmetic is double precision, left-to-right over the array — both
@@ -214,7 +214,7 @@ object Embeddings {
     * Measured on the sf0.001 harness corpus (spec `info`, C=16, nProbe=4,
     * k=10): objective trace 123.0 → 155.7 → 162.7 → 166.9 → 169.3 → 170.5 →
     * 171.1 → 171.3 (stop fired at <0.25% improvement after 7 passes), and
-    * the probe-path recall ladder through the same [[ivfRecallWith]] seam
+    * the probe-path recall ladder through the same [[knnRecallOf]] seam
     * the registered recall queries pin: first-C 0.465 → sampled 0.468 →
     * one pass 0.561 → converged 0.604 — centroid quality, not the probe
     * scorer, is the recall lever. Per-bucket quality moves the same way:
@@ -372,18 +372,7 @@ object Embeddings {
         col("embedding").as("v_emb"), l2Norm(col("embedding")).as("v_norm"))
       .join(assigned.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
 
-    val c = centroids.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-      l2Norm(col("embedding")).as("c_norm"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("c_score").desc, col("cent_id").asc)
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        l2Norm(col("embedding")).as("q_norm"))
-      .crossJoin(broadcast(c))
-      .withColumn("c_score",
-        dotD(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("c_rank", row_number().over(probeW))
-      .filter(col("c_rank") <= depth)
+    val probes = rankedProbes(queries, centroids, depth)
       .select("query_id", "q_emb", "q_norm", "cent_id", "c_rank")
 
     members.join(broadcast(probes), Seq("cent_id"))
@@ -391,6 +380,28 @@ object Embeddings {
       .withColumn("score",
         dotD(col("q_emb"), col("v_emb")) / (col("q_norm") * col("v_norm")))
       .select(col("query_id"), col("c_rank"), col("score"), col("neighbor_id"))
+  }
+
+  /** THE per-query centroid-probe ranking every IVF serve runs: each query's
+    * cosine to the broadcast centroids, ranked by a window over the
+    * numCentroids-row side only (tie-break `c_score DESC, cent_id ASC`),
+    * cut to the `depth` best. Carries (query_id, q_emb, q_norm, cent_id,
+    * c_emb, c_norm, c_score, c_rank); each caller projects what it reads.
+    */
+  private def rankedProbes(queries: DataFrame, centroids: DataFrame,
+                           depth: Int): DataFrame = {
+    val c = centroids.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
+      l2Norm(col("embedding")).as("c_norm"))
+    val probeW = Window.partitionBy("query_id")
+      .orderBy(col("c_score").desc, col("cent_id").asc)
+    queries
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+        l2Norm(col("embedding")).as("q_norm"))
+      .crossJoin(broadcast(c))
+      .withColumn("c_score",
+        dotD(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
+      .withColumn("c_rank", row_number().over(probeW))
+      .filter(col("c_rank") <= depth)
   }
 
   /** IVF probe-depth sweep: prices the `nProbe` knob of [[ivfTopK]] — per
@@ -598,15 +609,28 @@ object Embeddings {
     // priced only where exactness is the point)
     val spread = vectors
       .repartition(vectors.sparkSession.sparkContext.defaultParallelism)
-    val a = spread.select(col("vec_id").as("vec_a"), col("embedding").as("a_emb"),
-      l2Norm(col("embedding")).as("a_norm"))
-    val b = vectors.select(col("vec_id").as("vec_b"), col("embedding").as("b_emb"),
-      l2Norm(col("embedding")).as("b_norm"))
-    a.join(broadcast(b), col("vec_a") < col("vec_b"))
+    verifyPairs(pairSide(spread, "a")
+      .join(broadcast(pairSide(vectors, "b")), col("vec_a") < col("vec_b")), threshold)
+  }
+
+  /** One side of an exact-cosine pair verify: (vec_`s`, `s`_emb, `s`_norm). */
+  private def pairSide(vectors: DataFrame, s: String): DataFrame =
+    vectors.select(col("vec_id").as(s"vec_$s"), col("embedding").as(s"${s}_emb"),
+      l2Norm(col("embedding")).as(s"${s}_norm"))
+
+  /** A candidate (vec_a, vec_b) frame with both [[pairSide]]s attached by id. */
+  private def attachPairSides(cands: DataFrame, vectors: DataFrame): DataFrame =
+    cands.join(pairSide(vectors, "a"), "vec_a").join(pairSide(vectors, "b"), "vec_b")
+
+  /** THE exact-cosine pair verify every near-dup path ends in: keep the
+    * attached pairs whose cosine reaches `threshold`, as (vec_a, vec_b) — so
+    * precision is exact whatever blocking produced the candidates.
+    */
+  private def verifyPairs(attached: DataFrame, threshold: Double): DataFrame =
+    attached
       .filter(dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
         >= threshold)
       .select(col("vec_a"), col("vec_b"))
-  }
 
   /** Multi-probe centroid assignment: each vector lands in its `nAssign`
     * nearest centroid buckets (vs [[ivfAssign]]'s single argmax). Used as
@@ -615,7 +639,7 @@ object Embeddings {
     * trades work for recall. The per-vector window ranks only the
     * `numCentroids` broadcast candidates, not the corpus.
     */
-  def ivfMultiAssign(vectors: DataFrame, centroids: DataFrame, nAssign: Int): DataFrame = {
+  private def ivfMultiAssign(vectors: DataFrame, centroids: DataFrame, nAssign: Int): DataFrame = {
     val c = centroids.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
       l2Norm(col("embedding")).as("c_norm"))
     val w = Window.partitionBy("vec_id").orderBy(col("score").desc, col("cent_id").asc)
@@ -634,8 +658,7 @@ object Embeddings {
     * buckets are balanced; a hot bucket is the skew caveat — cap bucket size
     * or salt), deduped, then verified by the EXACT cosine — so precision is
     * exact and only recall depends on the blocking. [[cosineNearDupPairs]]
-    * (exact all-pairs) is its recall baseline, measured by
-    * [[ivfNearDupRecall]].
+    * (exact all-pairs) is its recall baseline, measured by [[pairRecallOf]].
     */
   def ivfNearDupPairs(vectors: DataFrame, numCentroids: Int, nAssign: Int,
                       threshold: Double): DataFrame =
@@ -678,40 +701,26 @@ object Embeddings {
   }
 
   /** Bucketed near-dup pairs over an explicit centroid set. */
-  def ivfNearDupPairsWith(vectors: DataFrame, centroids: DataFrame, nAssign: Int,
-                          threshold: Double): DataFrame = {
+  private def ivfNearDupPairsWith(vectors: DataFrame, centroids: DataFrame,
+                                  nAssign: Int, threshold: Double): DataFrame = {
     val asg = ivfMultiAssign(vectors, centroids, nAssign)
     val cands = saltedBucketPairs(asg, _ < _)
-    val a = vectors.select(col("vec_id").as("vec_a"), col("embedding").as("a_emb"),
-      l2Norm(col("embedding")).as("a_norm"))
-    val b = vectors.select(col("vec_id").as("vec_b"), col("embedding").as("b_emb"),
-      l2Norm(col("embedding")).as("b_norm"))
     // spread the exact-cosine verification onto the unique PAIR key: the
     // attach joins leave the stage partitioned by vec_b, and a hub vector
     // (member of a hot bucket) concentrates its candidate pairs in one task
     // (guide §2.5; the TextDedup verify respread's twin)
-    cands.join(a, "vec_a").join(b, "vec_b")
-      .repartition(col("vec_a"), col("vec_b"))
-      .filter(dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
-        >= threshold)
-      .select(col("vec_a"), col("vec_b"))
+    verifyPairs(attachPairSides(cands, vectors)
+      .repartition(col("vec_a"), col("vec_b")), threshold)
   }
-
-  /** Pair recall of the bucketed near-dup path vs the exact all-pairs path:
-    * one row of integers (|bucketed ∩ exact|, |exact|).
-    */
-  def ivfNearDupRecall(vectors: DataFrame, numCentroids: Int, nAssign: Int,
-                       threshold: Double): DataFrame =
-    recallOf(cosineNearDupPairs(vectors, threshold),
-      ivfNearDupPairs(vectors, numCentroids, nAssign, threshold))
 
   /** Per-query top-k recall of an arbitrary approximate ranking vs the exact
     * [[knnExact]] baseline — |approx ∩ exact| and k per query (global recall
-    * = Σhits / Σk); the ONE aggregation every ANN-tier recall query reports
-    * through, so a tie/null-handling change lands everywhere at once.
+    * = Σhits / Σk, integers, oracle-friendly); the ONE aggregation every
+    * ANN-tier recall query reports through, so a tie/null-handling change
+    * lands everywhere at once.
     */
-  private def knnRecallOf(vectors: DataFrame, queries: DataFrame, k: Int,
-                          approx: DataFrame): DataFrame = {
+  def knnRecallOf(vectors: DataFrame, queries: DataFrame, k: Int,
+                  approx: DataFrame): DataFrame = {
     val exact = knnExact(vectors, queries, k)
       .select(col("query_id"), col("neighbor_id"))
     exact.alias("e")
@@ -736,29 +745,32 @@ object Embeddings {
           col("e.neighbor_id") === col("a.neighbor_id"), "left")
       .agg(count(col("a.neighbor_id")).as("hits"), count(lit(1)).as("total"))
 
-  /** Pair recall of an arbitrary blocked pair set vs an exact baseline. */
-  private def recallOf(exact: DataFrame, blocked: DataFrame): DataFrame =
+  /** Pair recall of a blocked (vec_a, vec_b) pair set vs an exact baseline
+    * (usually [[cosineNearDupPairs]]): one row of integers (|blocked ∩
+    * exact|, |exact|) — the ONE aggregation every near-dup recall gate
+    * reports through.
+    */
+  def pairRecallOf(exact: DataFrame, blocked: DataFrame): DataFrame =
     exact.alias("e")
       .join(blocked.alias("l"),
         col("e.vec_a") === col("l.vec_a") && col("e.vec_b") === col("l.vec_b"), "left")
       .agg(count(col("l.vec_a")).as("hits"), count(lit(1)).as("total"))
 
-  /** Recall measured on a deterministic id-sample — the 100 TB-safe form of
-    * [[ivfNearDupRecall]]: the O(n²) exact baseline runs only on the 1/`mod`
-    * sample (cost shrinks by mod², e.g. mod=2 → 4×), while the bucketed path
-    * under measurement still runs on the FULL corpus; scored pairs are those
-    * with both endpoints sampled. `vec_id % mod` keeps the sample expressible
-    * in the DuckDB oracle (a hash-based sample would not be), and sampled
+  /** [[pairRecallOf]] measured on a deterministic id-sample — the 100 TB-safe
+    * form: the O(n²) exact baseline runs only on the 1/`mod` sample (cost
+    * shrinks by mod², e.g. mod=2 → 4×), while the `blocked` path under
+    * measurement still runs on the FULL corpus; scored pairs are those with
+    * both endpoints sampled. `vec_id % mod` keeps the sample expressible in
+    * the DuckDB oracle (a hash-based sample would not be), and sampled
     * recall is an unbiased estimate of full recall when blocking errors are
-    * uncorrelated with raw ids — which is exactly what id-blind centroid
-    * blocking gives.
+    * uncorrelated with raw ids — which is exactly what id-blind centroid and
+    * hyperplane blocking give.
     */
-  def ivfNearDupRecallSampled(vectors: DataFrame, numCentroids: Int, nAssign: Int,
-                              threshold: Double, mod: Int): DataFrame = {
-    val sample = vectors.filter(pmod(col("vec_id"), lit(mod)) === 0)
-    recallOf(cosineNearDupPairs(sample, threshold),
-      ivfNearDupPairs(vectors, numCentroids, nAssign, threshold))
-  }
+  def pairRecallOfSampled(vectors: DataFrame, threshold: Double, mod: Int,
+                          blocked: DataFrame): DataFrame =
+    pairRecallOf(
+      cosineNearDupPairs(vectors.filter(pmod(col("vec_id"), lit(mod)) === 0), threshold),
+      blocked)
 
   /** Seed kNN GRAPH from multi-probe IVF buckets — stage one of graph-based
     * ANN index construction (the HNSW/NN-Descent family next to the
@@ -861,7 +873,7 @@ object Embeddings {
   }
 
   /** Per-stage graph recall vs the exact kNN of a deterministic 1/`mod` node
-    * sample (the [[ivfNearDupRecallSampled]] economics: the brute-force
+    * sample (the [[pairRecallOfSampled]] economics: the brute-force
     * baseline runs only on sample×corpus while the graph under measurement
     * covers the full corpus), WITH each stage's price beside its payoff:
     * `n_scored` = candidate pairs the stage's builder rescored (the cost
@@ -1443,7 +1455,7 @@ object Embeddings {
     * (distance ASC, id ASC) via the bounded TopK heap (score = 64 − d, an
     * exact small integer in a double).
     */
-  def bqPool(vectors: DataFrame, queries: DataFrame, r: Int): DataFrame = {
+  private def bqPool(vectors: DataFrame, queries: DataFrame, r: Int): DataFrame = {
     val s = srpPackedSignatures(vectors)
       .select(col("vec_id").as("neighbor_id"), col("sig_lo").as("v_lo"),
         col("sig_hi").as("v_hi"))
@@ -1469,7 +1481,7 @@ object Embeddings {
 
   /** SRP-blocked near-dup pairs: band-bucket self-join for candidates, exact
     * cosine verify — precision exact, recall set by the banding (measured by
-    * [[srpNearDupRecall]] against the all-pairs baseline). Same
+    * [[pairRecallOf]] against the all-pairs baseline). Same
     * candidates→distinct→verify shape as the IVF and MinHash paths.
     */
   def srpNearDupPairs(vectors: DataFrame, nBits: Int, threshold: Double): DataFrame = {
@@ -1480,34 +1492,7 @@ object Embeddings {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    val a = vectors.select(col("vec_id").as("vec_a"), col("embedding").as("a_emb"),
-      l2Norm(col("embedding")).as("a_norm"))
-    val b = vectors.select(col("vec_id").as("vec_b"), col("embedding").as("b_emb"),
-      l2Norm(col("embedding")).as("b_norm"))
-    cands.join(a, "vec_a").join(b, "vec_b")
-      .filter(dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
-        >= threshold)
-      .select(col("vec_a"), col("vec_b"))
-  }
-
-  /** Pair recall of the SRP-blocked path vs the exact all-pairs path (one row
-    * of integers) — the measurement that prices the banding choice.
-    */
-  def srpNearDupRecall(vectors: DataFrame, nBits: Int, threshold: Double): DataFrame =
-    recallOf(cosineNearDupPairs(vectors, threshold),
-      srpNearDupPairs(vectors, nBits, threshold))
-
-  /** [[srpNearDupRecall]] on a deterministic id-sample — the 100 TB-safe
-    * form, same construction as [[ivfNearDupRecallSampled]]: the O(n²) exact
-    * baseline runs only on the 1/`mod` sample while the SRP path under
-    * measurement runs on the FULL corpus; sampled recall is unbiased because
-    * hyperplane blocking is id-blind.
-    */
-  def srpNearDupRecallSampled(vectors: DataFrame, nBits: Int, threshold: Double,
-                              mod: Int): DataFrame = {
-    val sample = vectors.filter(pmod(col("vec_id"), lit(mod)) === 0)
-    recallOf(cosineNearDupPairs(sample, threshold),
-      srpNearDupPairs(vectors, nBits, threshold))
+    verifyPairs(attachPairSides(cands, vectors), threshold)
   }
 
   /** MULTI-PROBE SRP near-dup pairs: each (vec, band) additionally probes the
@@ -1535,40 +1520,8 @@ object Embeddings {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    val a = vectors.select(col("vec_id").as("vec_a"), col("embedding").as("a_emb"),
-      l2Norm(col("embedding")).as("a_norm"))
-    val b = vectors.select(col("vec_id").as("vec_b"), col("embedding").as("b_emb"),
-      l2Norm(col("embedding")).as("b_norm"))
-    cands.join(a, "vec_a").join(b, "vec_b")
-      .filter(dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
-        >= threshold)
-      .select(col("vec_a"), col("vec_b"))
+    verifyPairs(attachPairSides(cands, vectors), threshold)
   }
-
-  /** Recall of the multi-probe SRP path vs exact all-pairs — read next to
-    * [[srpNearDupRecall]] to see what the extra probes buy.
-    */
-  def srpNearDupRecallMultiProbe(vectors: DataFrame, nBits: Int,
-                                 threshold: Double): DataFrame =
-    recallOf(cosineNearDupPairs(vectors, threshold),
-      srpNearDupPairsMultiProbe(vectors, nBits, threshold))
-
-  /** [[srpNearDupRecallMultiProbe]] with the exact baseline on the 1/`mod`
-    * id-sample — see [[srpNearDupRecallSampled]].
-    */
-  def srpNearDupRecallMultiProbeSampled(vectors: DataFrame, nBits: Int,
-                                        threshold: Double, mod: Int): DataFrame = {
-    val sample = vectors.filter(pmod(col("vec_id"), lit(mod)) === 0)
-    recallOf(cosineNearDupPairs(sample, threshold),
-      srpNearDupPairsMultiProbe(vectors, nBits, threshold))
-  }
-
-  /** Recall of the IVF path vs the exact path: per query, |IVF ∩ exact| and k
-    * (integers — oracle-friendly; global recall = Σhits / Σk).
-    */
-  def ivfRecall(vectors: DataFrame, queries: DataFrame, numCentroids: Int,
-                nProbe: Int, k: Int): DataFrame =
-    ivfRecallWith(vectors, queries, firstCentroids(vectors, numCentroids), nProbe, k)
 
   /** Int8 scalar quantization: per-vector scale `s = max |x_i|` (computed
     * natively as `greatest(array_max, -array_min)`, no lambda), each
@@ -1582,7 +1535,7 @@ object Embeddings {
     * the memory lever for a 100 TB ANN corpus; this demo keeps the arithmetic
     * contract testable and leaves the byte packing to the storage layer.
     */
-  def quantizeSq8(vectors: DataFrame): DataFrame = {
+  private def quantizeSq8(vectors: DataFrame): DataFrame = {
     val e = col("embedding")
     val s = greatest(array_max(e).cast("double"), (-array_min(e)).cast("double"),
       lit(1e-30))
@@ -1603,12 +1556,6 @@ object Embeddings {
       .withColumn("score", dotD(col("q_emb"), col("v_emb")) / (col("q_norm") * col("v_norm")))
     topKPerQuery(scored, k)
   }
-
-  /** SQ8-vs-exact recall per query — how much ranking fidelity the 4x
-    * compression costs, measured the same way as [[ivfRecall]].
-    */
-  def sq8Recall(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k, sq8TopK(vectors, queries, k))
 
   // ---------------------------------------------------- product quantization
 
@@ -1810,7 +1757,7 @@ object Embeddings {
     * the score partitioning-dependent and the oracle unmatchable); the
     * final score divides by the exact query norm and the reconstructed
     * candidate norm √(Σ‖c‖²), all from deterministic inputs, so both
-    * engines rank identically. Recall vs exact is priced by [[pqRecall]].
+    * engines rank identically. Recall vs exact is priced by [[knnRecallOf]].
     */
   def pqTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame =
     pqTopKWith(vectors, queries, pqCodebook(vectors), k)
@@ -1823,14 +1770,30 @@ object Embeddings {
                  k: Int): DataFrame = {
     val codes = pqEncode(vectors, cb)
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"))
-    val qtab = queries.crossJoin(broadcast(cb))
+    adcTopK(codes.join(broadcast(adcTable(queries, cb)), Seq("m", "code"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** THE PQ ADC query table: per (query, subspace m, codeword) the query
+    * subvector's dot with the codeword and the codeword's squared norm, each
+    * e6-floored to an integer so every downstream sum is order-independent,
+    * plus the exact query norm. PqM×PqK rows per query — broadcast by every
+    * ADC scorer.
+    */
+  private def adcTable(queries: DataFrame, cb: DataFrame): DataFrame =
+    queries.crossJoin(broadcast(cb))
       .select(col("vec_id").as("query_id"), col("m"), col("k").as("code"),
         floor(dotD(expr(s"slice(embedding, m * $PqDsub + 1, $PqDsub)"), col("cw"))
           * lit(1e6)).cast("long").as("qdot_e6"),
         floor(dotD(col("cw"), col("cw")) * lit(1e6)).cast("long").as("cwn2_e6"),
         l2Norm(col("embedding")).as("q_norm"))
-    val scored = codes.join(broadcast(qtab), Seq("m", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+
+  /** The plain-PQ ADC score over candidate rows joined to the [[adcTable]]
+    * (one row per (query, candidate, subspace)): integer sums per candidate,
+    * score = Σ qdot / (‖q‖ · √Σ‖cw‖²), cut to the per-query top-`k`.
+    */
+  private def adcTopK(joined: DataFrame, k: Int): DataFrame = {
+    val scored = joined
       .groupBy("query_id", "q_norm", "neighbor_id")
       .agg(sum(col("qdot_e6")).as("adc_e6"), sum(col("cwn2_e6")).as("vn2_e6"))
       .withColumn("score", col("adc_e6").cast("double") /
@@ -1848,26 +1811,23 @@ object Embeddings {
     * the already-oracle-checked building block ([[ivfAssign]], [[pqEncode]],
     * the integer-stabilized ADC sum), joined on equi-keys with the small
     * sides broadcast.
+    *
+    * This is the BUILD+SERVE convenience form: it encodes/assigns `vectors`
+    * then delegates to [[ivfPqTopKFromIndex]]. Production (and the streaming
+    * probe) should build the index ONCE ([[pqEncode]]/[[ivfAssign]], or
+    * incrementally by running both per micro-batch through
+    * [[graft.streaming.EachBatch]]), materialize it, and call the from-index
+    * form directly — this form re-plans the build with every call.
     */
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, numCentroids: Int,
-                nProbe: Int, k: Int): DataFrame =
-    ivfPqTopKWith(vectors, queries, firstCentroids(vectors, numCentroids),
-      pqCodebook(vectors), nProbe, k)
-
-  /** [[ivfPqTopK]] over explicit centroids and codebook — the BUILD+SERVE
-    * convenience form: encodes/assigns `vectors` then delegates to
-    * [[ivfPqTopKFromIndex]]. Production (and the streaming probe) should
-    * build the index ONCE ([[pqEncode]]/[[ivfAssign]], or incrementally by
-    * running both per micro-batch through [[graft.streaming.EachBatch]]),
-    * materialize it, and call the from-index form
-    * directly — this wrapper re-plans the build with every call.
-    */
-  def ivfPqTopKWith(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
-                    cb: DataFrame, nProbe: Int, k: Int): DataFrame =
+                nProbe: Int, k: Int): DataFrame = {
+    val centroids = firstCentroids(vectors, numCentroids)
+    val cb = pqCodebook(vectors)
     ivfPqTopKFromIndex(
       pqEncode(vectors, cb).select(col("vec_id").as("neighbor_id"), col("m"), col("code")),
       ivfAssign(vectors, centroids).select(col("vec_id").as("neighbor_id"), col("cent_id")),
       queries, centroids, cb, nProbe, k)
+  }
 
   /** IVF∘PQ top-k served from a PRE-BUILT index — the true serving plan: the
     * working set is exactly `codes` ((neighbor_id, m, code)), `assigned`
@@ -1878,39 +1838,12 @@ object Embeddings {
   def ivfPqTopKFromIndex(codes: DataFrame, assigned: DataFrame, queries: DataFrame,
                          centroids: DataFrame, cb: DataFrame, nProbe: Int,
                          k: Int): DataFrame = {
-    val c = centroids.select(
-      col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-      l2Norm(col("embedding")).as("c_norm"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("c_score").desc, col("cent_id").asc)
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        l2Norm(col("embedding")).as("q_norm"))
-      .crossJoin(broadcast(c))
-      .withColumn("c_score",
-        dotD(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("c_rank", row_number().over(probeW))
-      .filter(col("c_rank") <= nProbe)
-      .select("query_id", "cent_id")
-
-    val qtab = queries.crossJoin(broadcast(cb))
-      .select(col("vec_id").as("query_id"), col("m"), col("k").as("code"),
-        floor(dotD(expr(s"slice(embedding, m * $PqDsub + 1, $PqDsub)"), col("cw"))
-          * lit(1e6)).cast("long").as("qdot_e6"),
-        floor(dotD(col("cw"), col("cw")) * lit(1e6)).cast("long").as("cwn2_e6"),
-        l2Norm(col("embedding")).as("q_norm"))
-
+    val probes = rankedProbes(queries, centroids, nProbe).select("query_id", "cent_id")
     val cands = assigned.join(broadcast(probes), Seq("cent_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
-    val scored = cands.join(codes, Seq("neighbor_id"))
-      .join(broadcast(qtab), Seq("query_id", "m", "code"))
-      .groupBy("query_id", "q_norm", "neighbor_id")
-      .agg(sum(col("qdot_e6")).as("adc_e6"), sum(col("cwn2_e6")).as("vn2_e6"))
-      .withColumn("score", col("adc_e6").cast("double") /
-        (col("q_norm") *
-          sqrt(greatest(col("vn2_e6").cast("double") / lit(1e6), lit(1e-30)))))
-    topKPerQuery(scored.select("query_id", "score", "neighbor_id"), k)
+    adcTopK(cands.join(codes, Seq("neighbor_id"))
+      .join(broadcast(adcTable(queries, cb)), Seq("query_id", "m", "code")), k)
   }
 
   /** Residual frame for residual quantization: each vector minus its
@@ -1973,26 +1906,11 @@ object Embeddings {
   def ivfPqResidualTopKFromIndex(codes: DataFrame, assigned: DataFrame,
                                  queries: DataFrame, centroids: DataFrame,
                                  rcb: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val c = centroids.select(col("vec_id").as("cent_id"),
-      col("embedding").as("c_emb"), l2Norm(col("embedding")).as("c_norm"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("c_score").desc, col("cent_id").asc)
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        l2Norm(col("embedding")).as("q_norm"))
-      .crossJoin(broadcast(c))
-      .withColumn("c_score",
-        dotD(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("c_rank", row_number().over(probeW))
-      .filter(col("c_rank") <= nProbe)
+    val probes = rankedProbes(queries, centroids, nProbe)
       .select(col("query_id"), col("cent_id"), col("q_norm"),
         dotD(col("q_emb"), col("c_emb")).as("qcdot"))
-
-    val qtab = queries.crossJoin(broadcast(rcb))
-      .select(col("vec_id").as("query_id"), col("m"), col("k").as("code"),
-        floor(dotD(expr(s"slice(embedding, m * $PqDsub + 1, $PqDsub)"), col("cw"))
-          * lit(1e6)).cast("long").as("qdot_e6"),
-        floor(dotD(col("cw"), col("cw")) * lit(1e6)).cast("long").as("cwn2_e6"))
+    // the query norm rides on the probes here, so the table drops its copy
+    val qtab = adcTable(queries, rcb).drop("q_norm")
     val ccw = centroids.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
       .crossJoin(broadcast(rcb))
       .select(col("cent_id"), col("m"), col("k").as("code"),
@@ -2019,23 +1937,6 @@ object Embeddings {
           lit(1e-30)))))
     topKPerQuery(scored.select("query_id", "score", "neighbor_id"), k)
   }
-
-  /** [[ivfPqResidualTopK]]-vs-exact recall per query — what the residual
-    * formulation buys over [[ivfPqRecall]] at the same code budget.
-    */
-  def ivfPqResidualRecall(vectors: DataFrame, queries: DataFrame, numCentroids: Int,
-                          nProbe: Int, k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k,
-      ivfPqResidualTopK(vectors, queries, numCentroids, nProbe, k))
-
-  /** IVF∘PQ-vs-exact recall per query — the end-to-end fidelity of the
-    * composed index (blocking loss × quantization loss), next to
-    * [[ivfRecall]] and [[pqRecall]] which price each stage alone.
-    */
-  def ivfPqRecall(vectors: DataFrame, queries: DataFrame, numCentroids: Int,
-                  nProbe: Int, k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k,
-      ivfPqTopK(vectors, queries, numCentroids, nProbe, k))
 
   /** Two-stage retrieve-then-rerank — the FAISS "refine" serving pattern:
     * IVF∘PQ ADC retrieves a top-`r` candidate pool per query (r ≫ k, codes
@@ -2095,37 +1996,6 @@ object Embeddings {
                            r: Int, k: Int): DataFrame =
     exactRerank(vectorStore, queries,
       ivfPqTopKFromIndex(codes, assigned, queries, centroids, cb, nProbe, r), k)
-
-  /** [[ivfPqRerank]]-vs-exact recall per query — what the rerank stage buys
-    * back of [[ivfPqRecall]]'s quantization loss at pool size `r`.
-    */
-  def ivfPqRerankRecall(vectors: DataFrame, queries: DataFrame, numCentroids: Int,
-                        nProbe: Int, r: Int, k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k,
-      ivfPqRerank(vectors, queries, numCentroids, nProbe, r, k))
-
-  /** [[ivfPqRerankRecall]] with the approximate arm served from a PRE-BUILT
-    * index ([[ivfPqRerankFromIndex]]); the float `vectorStore` appears only
-    * as the exact baseline and the refine stage's point-lookup side.
-    */
-  def ivfPqRerankRecallFromIndex(codes: DataFrame, assigned: DataFrame,
-                                 queries: DataFrame, centroids: DataFrame,
-                                 cb: DataFrame, vectorStore: DataFrame,
-                                 nProbe: Int, r: Int, k: Int): DataFrame =
-    knnRecallOf(vectorStore, queries, k,
-      ivfPqRerankFromIndex(codes, assigned, queries, centroids, cb,
-        vectorStore, nProbe, r, k))
-
-  /** [[ivfPqResidualRecall]] with the approximate arm served from a
-    * PRE-BUILT residual index ([[ivfPqResidualTopKFromIndex]]).
-    */
-  def ivfPqResidualRecallFromIndex(codes: DataFrame, assigned: DataFrame,
-                                   queries: DataFrame, centroids: DataFrame,
-                                   rcb: DataFrame, vectorStore: DataFrame,
-                                   nProbe: Int, k: Int): DataFrame =
-    knnRecallOf(vectorStore, queries, k,
-      ivfPqResidualTopKFromIndex(codes, assigned, queries, centroids, rcb,
-        nProbe, k))
 
   /** Maximal Marginal Relevance (Carbonell & Goldstein, SIGIR'98) diversified
     * top-k over an explicit candidate pool: greedily select k of the pool,
@@ -2209,19 +2079,6 @@ object Embeddings {
     }.toDF("query_id", "neighbor_id", "step")
   }
 
-  /** PQ-vs-exact recall per query — what the 16× compression costs, measured
-    * the same way as [[sq8Recall]].
-    */
-  def pqRecall(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    pqRecallWith(vectors, queries, pqCodebook(vectors), k)
-
-  /** [[pqRecall]] over an explicit codebook — prices what
-    * [[pqCodebookRefined]] buys vs the first-C convention.
-    */
-  def pqRecallWith(vectors: DataFrame, queries: DataFrame, cb: DataFrame,
-                   k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k, pqTopKWith(vectors, queries, cb, k))
-
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
     * clustering first, then resolving duplicates WITHIN each cluster only,
     * keeping per duplicate group the member FARTHEST from its cluster
@@ -2248,8 +2105,6 @@ object Embeddings {
     */
   def semDedup(vectors: DataFrame, centroids: DataFrame,
                threshold: Double): DataFrame = {
-    val c = centroids.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-      l2Norm(col("embedding")).as("c_norm"))
     // the O(n·C) assignment pass feeds three subplans (both sides of the
     // cell self-join + the keeper election's cent_cos), so the crossJoin
     // aggregation executes more than once per run — a Lineage.cut here was
@@ -2257,28 +2112,14 @@ object Embeddings {
     // checkpoint write outweighs re-running the cheap broadcast pass, whose
     // cost is dwarfed by the cell self-join + CC. The r5/r9 break-even rule
     // again — re-measure before flipping.
-    val asg = vectors.select(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("v_norm"))
-      .crossJoin(broadcast(c))
-      .withColumn("score",
-        dotD(col("embedding"), col("c_emb")) / (col("v_norm") * col("c_norm")))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("cent_id"), col("score")),
-        struct(col("score"), -col("cent_id"))).as("a"))
-      .select(col("vec_id"), col("a.cent_id").as("cent_id"),
-        col("a.score").as("cent_cos"))
+    val asg = ivfAssignScored(vectors, centroids)
+      .select(col("vec_id"), col("cent_id"), col("score").as("cent_cos"))
 
     val cand = asg.select(col("vec_id"), col("cent_id")).alias("x")
       .join(asg.select(col("vec_id"), col("cent_id")).alias("y"),
         col("x.cent_id") === col("y.cent_id") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-    val a = vectors.select(col("vec_id").as("vec_a"), col("embedding").as("a_emb"),
-      l2Norm(col("embedding")).as("a_norm"))
-    val b = vectors.select(col("vec_id").as("vec_b"), col("embedding").as("b_emb"),
-      l2Norm(col("embedding")).as("b_norm"))
-    val pairs = cand.join(a, "vec_a").join(b, "vec_b")
-      .filter(dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
-        >= threshold)
-      .select(col("vec_a"), col("vec_b"))
+    val pairs = verifyPairs(attachPairSides(cand, vectors), threshold)
 
     val groups = ConnectedComponents.run(pairs, "vec_a", "vec_b",
         vertices = Some(vectors.select("vec_id")))
@@ -2292,10 +2133,4 @@ object Embeddings {
         when(col("vec_id") === col("canonical_id"), "kept")
           .otherwise("dropped").as("verdict"))
   }
-
-  /** KNN recall over an explicit centroid set (see [[ivfTopKWith]]). */
-  def ivfRecallWith(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
-                    nProbe: Int, k: Int): DataFrame =
-    knnRecallOf(vectors, queries, k,
-      ivfTopKWith(vectors, queries, centroids, nProbe, k))
 }

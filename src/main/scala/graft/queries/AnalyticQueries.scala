@@ -1205,23 +1205,12 @@ object AnalyticQueries {
           .cast("long").as("touched"): _*)
   }
 
-  /** The generic per-column EXACT profile
-    * ([[graft.operators.Profile.tableProfile]]) over lineitem — null counts,
-    * exact distinct cardinalities, row count. No longer registered on its
-    * own: its full output rides inside `q_table_profile_hll` (the
-    * exact_distinct column), so a standalone gate only re-ran the
-    * (#columns+1)-way Expand a second time for rows the folded gate already
-    * hash-checks — one green row replaces two at half the cost (round-15
-    * review item). The operator stays public (it profiles ANY table and is
-    * spec-covered); at 100 TB the estimator form is the one to run.
-    */
-  def qTableProfile(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profile.tableProfile(t(s, dir, "lineitem"))
-
   /** `q_table_profile_hll`: the table profiler, exact and estimated side by
     * side in ONE gate — [[graft.operators.Profile.tableProfileHll]]'s
     * fixed-state HLL estimates (no Expand, 2 KiB/column) joined to the
-    * exact profile's counts ([[qTableProfile]], its only registered rider)
+    * exact profile's counts ([[graft.operators.Profile.tableProfile]] over
+    * lineitem — null counts, exact distinct cardinalities, row count — which
+    * is registered only as this rider)
     * with the per-column e4 relative error as data (the `q_ams_*` /
     * `q_kmv_setops` estimator-accuracy pattern). The exact Expand runs here
     * only as the BASELINE the estimator is priced against; at 100 TB the

@@ -637,8 +637,16 @@ object CurationQueries {
     */
   private def langBpeTokensFrame(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
-    val wordToks = graft.operators.Bpe.wordTokenTable(d, "text",
-      TextQueries.BpeTopK)
+    langTokensFrameWith(d, graft.operators.Bpe.wordTokenTable(d, "text",
+      TextQueries.BpeTopK))
+  }
+
+  /** The (doc_id, lang_id, n_tokens, hk) budget frame with each document's
+    * token count summed from a broadcast (word, n_toks) table — the one body
+    * every tokenizer-denominated budget shares; the tokenizer is only the
+    * table.
+    */
+  private def langTokensFrameWith(d: DataFrame, wordToks: DataFrame): DataFrame =
     d.select(col("doc_id"),
         graft.functions.TextFunctions.langId(col("text")).as("lang_id"),
         TextDedup.tokenHash60(col("doc_id").cast("string")).as("hk"))
@@ -646,7 +654,6 @@ object CurationQueries {
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang_id"),
         coalesce(col("n_bpe_tokens"), lit(0L)).as("n_tokens"), col("hk"))
-  }
 
   /** Per-language budget in UNIGRAM-LM tokens — same scale as the BPE twin
     * (the corpus measures 3.66 unigram vs 3.50 BPE tokens/word at the
@@ -678,13 +685,7 @@ object CurationQueries {
         val cm = bc.value
         it.map(w => (w, graft.operators.Unigram.viterbi(w, cm).size.toLong))
       }.toDF("word", "n_toks")
-    d.select(col("doc_id"),
-        graft.functions.TextFunctions.langId(col("text")).as("lang_id"),
-        TextDedup.tokenHash60(col("doc_id").cast("string")).as("hk"))
-      .join(graft.operators.Bpe.bpeTokenCountsWith(d, "doc_id", "text", wordToks),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang_id"),
-        coalesce(col("n_bpe_tokens"), lit(0L)).as("n_tokens"), col("hk"))
+    langTokensFrameWith(d, wordToks)
       .withColumn("cum_tokens", sum(col("n_tokens")).over(langCumsumWindow))
       .filter(col("cum_tokens") <= UnigramTokenBudget)
       .select(col("doc_id"), col("lang_id"),

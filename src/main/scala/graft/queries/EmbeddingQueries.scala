@@ -36,14 +36,6 @@ object EmbeddingQueries {
   def hardNegatives(spark: SparkSession, dir: String): DataFrame =
     Embeddings.hardNegatives(vectors(spark, dir), queryVectors(spark, dir), K)
 
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfTopK(vectors(spark, dir), queryVectors(spark, dir),
-      NumCentroids, NProbe, K)
-
-  def ivfRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfRecall(vectors(spark, dir), queryVectors(spark, dir),
-      NumCentroids, NProbe, K)
-
   /** Probe depths the IVF sweep prices — bracketing the deployed [[NProbe]]
     * (4) on both sides, single-sourced into the oracle. Powers of two up to
     * half the centroid count.
@@ -99,26 +91,6 @@ object EmbeddingQueries {
     Embeddings.ivfFilterCrossoverSweep(vectors(spark, dir),
       queryVectors(spark, dir), NumCentroids, XoverSels, FilteredSweepProbes, K)
 
-  def sq8TopK(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.sq8TopK(vectors(spark, dir), queryVectors(spark, dir), K)
-
-  def sq8Recall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.sq8Recall(vectors(spark, dir), queryVectors(spark, dir), K)
-
-  def pqTopK(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.pqTopK(vectors(spark, dir), queryVectors(spark, dir), K)
-
-  def pqRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.pqRecall(vectors(spark, dir), queryVectors(spark, dir), K)
-
-  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfPqTopK(vectors(spark, dir), queryVectors(spark, dir),
-      NumCentroids, NProbe, K)
-
-  def ivfPqRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfPqRecall(vectors(spark, dir), queryVectors(spark, dir),
-      NumCentroids, NProbe, K)
-
   /** Rerank pool size for the two-stage retrieve-then-rerank queries (5× the
     * final k — the candidate pool the exact stage repairs).
     */
@@ -139,17 +111,6 @@ object EmbeddingQueries {
       vectors(spark, dir), NProbe, RerankR, K)
   }
 
-  /** `q_ivfpq_rerank_recall`: [[ivfPqRerank]]'s per-query recall vs exact —
-    * the approximate arm serves from the persisted [[pqIndex]]; the float
-    * corpus appears only as the exact baseline and the refine store.
-    */
-  def ivfPqRerankRecall(spark: SparkSession, dir: String): DataFrame = {
-    val idx = pqIndex(spark, dir)
-    Embeddings.ivfPqRerankRecallFromIndex(idx.codes, idx.assigned,
-      queryVectors(spark, dir), idx.centroids, idx.codebook,
-      vectors(spark, dir), NProbe, RerankR, K)
-  }
-
   /** `q_ivfpq_res_topk`: the residual (FAISS-IVFPQ) serve from the persisted
     * [[pqIndex]]'s residual parts — codes, shared assignment/centroids, and
     * the residual codebook; no residualization or encode in-plan.
@@ -158,16 +119,6 @@ object EmbeddingQueries {
     val idx = pqIndex(spark, dir)
     Embeddings.ivfPqResidualTopKFromIndex(idx.rcodes, idx.assigned,
       queryVectors(spark, dir), idx.centroids, idx.rcodebook, NProbe, K)
-  }
-
-  /** `q_ivfpq_res_recall`: [[ivfPqResidualTopK]]'s recall vs exact, the
-    * approximate arm served from the persisted residual index parts.
-    */
-  def ivfPqResidualRecall(spark: SparkSession, dir: String): DataFrame = {
-    val idx = pqIndex(spark, dir)
-    Embeddings.ivfPqResidualRecallFromIndex(idx.rcodes, idx.assigned,
-      queryVectors(spark, dir), idx.centroids, idx.rcodebook,
-      vectors(spark, dir), NProbe, K)
   }
 
   /** MMR-diversified top-[[K]] over the same IVF∘PQ codes-only pool the
@@ -196,22 +147,10 @@ object EmbeddingQueries {
     */
   val NearDupAssign = 4
 
-  def ivfNearDup(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfNearDupPairs(vectors(spark, dir), NumCentroids, NearDupAssign,
-      NearDupThreshold)
-
-  def ivfNearDupRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfNearDupRecall(vectors(spark, dir), NumCentroids, NearDupAssign,
-      NearDupThreshold)
-
   /** Id-sample modulus for the scale-safe recall variant: the exact baseline
     * runs on the 1/2 sample (4× cheaper), the bucketed path on everything.
     */
   val RecallSampleMod = 2
-
-  def ivfNearDupRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.ivfNearDupRecallSampled(vectors(spark, dir), NumCentroids,
-      NearDupAssign, NearDupThreshold, RecallSampleMod)
 
   /** SRP bit budget: 32 hyperplanes in 4-bit bands (8 bands). At the 0.45
     * threshold P[bit match] ≈ 0.65, so one-of-8 band collision catches ~80%
@@ -220,31 +159,6 @@ object EmbeddingQueries {
     * threshold rises.
     */
   val SrpBits = 32
-
-  def srpNearDup(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupPairs(vectors(spark, dir), SrpBits, NearDupThreshold)
-
-  def srpNearDupRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupRecall(vectors(spark, dir), SrpBits, NearDupThreshold)
-
-  def srpMpNearDup(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupPairsMultiProbe(vectors(spark, dir), SrpBits, NearDupThreshold)
-
-  def srpMpNearDupRecall(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupRecallMultiProbe(vectors(spark, dir), SrpBits, NearDupThreshold)
-
-  /** Sampled twins of the two SRP recall measurements — the forms a 100 TB
-    * run schedules (exact baseline only on the 1/[[RecallSampleMod]]
-    * id-sample, SRP path on the full corpus); the full-recall forms above
-    * stay registered as this-sf oracles of the sampling itself.
-    */
-  def srpNearDupRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupRecallSampled(vectors(spark, dir), SrpBits,
-      NearDupThreshold, RecallSampleMod)
-
-  def srpMpNearDupRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.srpNearDupRecallMultiProbeSampled(vectors(spark, dir), SrpBits,
-      NearDupThreshold, RecallSampleMod)
 
   /** SRP bucket-balance report — the hyperplane index's health view, read
     * the way `q_ivf_stats` is read for the centroid index: per (band,
@@ -399,8 +313,9 @@ object EmbeddingQueries {
     */
   def ivfConvRecall(spark: SparkSession, dir: String): DataFrame = {
     val v = vectors(spark, dir)
-    Embeddings.ivfRecallWith(v, queryVectors(spark, dir),
-      Embeddings.kmeansExactRounds(v, NumCentroids, IvfExactRounds), NProbe, K)
+    val q = queryVectors(spark, dir)
+    Embeddings.knnRecallOf(v, q, K, Embeddings.ivfTopKWith(v, q,
+      Embeddings.kmeansExactRounds(v, NumCentroids, IvfExactRounds), NProbe, K))
   }
 
   /** Embedding-table health audit — the data-quality gate a pipeline runs
@@ -615,23 +530,30 @@ object EmbeddingQueries {
       if (stale) rmTree(f)
     }
 
+  /** One monitor per artifact root for [[ensureArtifact]]. */
+  private val artifactLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
   /** Ensure-once body shared by the persisted-index builders: run `write`
     * unless the root's [[ArtifactManifest]] marker is present, then write
     * the marker LAST. The JVM-exit cleanup hook is registered BEFORE the
     * write so a failed or interrupted build's partial tree is cleaned too
     * (review catch); deleting an absent dir at exit is a no-op. Each build
     * first sweeps orphan artifact trees of dead sessions from the shared
-    * tmp parent ([[sweepOrphanArtifacts]]).
+    * tmp parent ([[sweepOrphanArtifacts]]). Check and write run under one
+    * lock per root, so two threads constructing queries over one index
+    * build it once: the second waits and then finds the manifest.
     */
-  private[graft] def ensureArtifact(root: String, appId: String)(write: => Unit): Unit = {
-    if (!new java.io.File(root, ArtifactManifest).exists) {
-      val rootDir = new java.io.File(root)
-      sweepOrphanArtifacts(rootDir.getParentFile, appId, System.currentTimeMillis())
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(rootDir)))
-      write
-      new java.io.File(root, ArtifactManifest).createNewFile(); ()
+  private[graft] def ensureArtifact(root: String, appId: String)(write: => Unit): Unit =
+    artifactLocks.computeIfAbsent(root, _ => new Object).synchronized {
+      if (!new java.io.File(root, ArtifactManifest).exists) {
+        val rootDir = new java.io.File(root)
+        sweepOrphanArtifacts(rootDir.getParentFile, appId, System.currentTimeMillis())
+        Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(rootDir)))
+        write
+        new java.io.File(root, ArtifactManifest).createNewFile(); ()
+      }
     }
-  }
 
   /** The search-time index as a PERSISTED ARTIFACT read back from parquet —
     * the serving economics a production graph index actually has: the
@@ -1063,7 +985,55 @@ object EmbeddingQueries {
       mrlRerank(spark, dir))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The top-k serve/recall twins, one row each: the serve's ranking and
+    * the CTE its oracle replays; the recall is per-query hits vs the exact
+    * top-[[K]] ([[RecallTwins.knnQueries]]). Sampled twins of the near-dup
+    * recalls are the forms a 100 TB run schedules (exact baseline only on
+    * the 1/[[RecallSampleMod]] id-sample, blocked path on the full corpus);
+    * the full-recall forms stay registered as this-sf oracles of the
+    * sampling itself.
+    */
+  private lazy val knnTwins: Seq[RecallTwins.KnnTwin] = Seq(
+    RecallTwins.KnnTwin("q_ann_topk", "q_ann_recall", base, "approx",
+      (s, d) => Embeddings.ivfTopK(vectors(s, d), queryVectors(s, d),
+        NumCentroids, NProbe, K)),
+    RecallTwins.KnnTwin("q_sq8_topk", "q_sq8_recall", base + sq8Ctes, "sq8",
+      (s, d) => Embeddings.sq8TopK(vectors(s, d), queryVectors(s, d), K)),
+    RecallTwins.KnnTwin("q_pq_topk", "q_pq_recall", base + pqCtes, "pq",
+      (s, d) => Embeddings.pqTopK(vectors(s, d), queryVectors(s, d), K)),
+    // IVF probe pruning (base's assign/probes) composed with PQ ADC scoring
+    // (pqCtes) — candidates from the probed buckets, scored from codes alone
+    RecallTwins.KnnTwin("q_ivfpq_topk", "q_ivfpq_recall",
+      base + pqCtes + ivfPqCte, "ivfpq",
+      (s, d) => Embeddings.ivfPqTopK(vectors(s, d), queryVectors(s, d),
+        NumCentroids, NProbe, K)),
+    // two-stage retrieve-then-rerank: the ADC pool (rank <= RerankR) exact-
+    // cosine reranked and re-cut at K — the FAISS refine serving pattern
+    RecallTwins.KnnTwin("q_ivfpq_rerank", "q_ivfpq_rerank_recall",
+      base + pqCtes + ivfPqCte + rerankCte, "reranked", ivfPqRerank),
+    // residual IVF-PQ: PQ on v - c(v), centroid terms exact, residual terms
+    // e6-floored ADC sums
+    RecallTwins.KnnTwin("q_ivfpq_res_topk", "q_ivfpq_res_recall",
+      base + residualCtes, "rivfpq", ivfPqResidualTopK))
+
+  /** The near-dup serve/pair-recall twins, one row each (see [[knnTwins]]). */
+  private lazy val pairTwins: Seq[RecallTwins.PairTwin] = Seq(
+    RecallTwins.PairTwin("q_srp_neardup", "q_srp_recall",
+      Some("q_srp_recall_sampled" -> RecallSampleMod), NearDupThreshold,
+      srpBase, "srp_pairs", "vec", vectors,
+      Embeddings.srpNearDupPairs(_, SrpBits, NearDupThreshold)),
+    RecallTwins.PairTwin("q_srp_mp_neardup", "q_srp_mp_recall",
+      Some("q_srp_mp_recall_sampled" -> RecallSampleMod), NearDupThreshold,
+      srpBase, "srp_mp_pairs", "vec", vectors,
+      Embeddings.srpNearDupPairsMultiProbe(_, SrpBits, NearDupThreshold)),
+    RecallTwins.PairTwin("q_embed_neardup_ivf", "q_embed_neardup_recall",
+      Some("q_embed_neardup_recall_sampled" -> RecallSampleMod), NearDupThreshold,
+      nearDupBase, "blocked_pairs", "vec", vectors,
+      Embeddings.ivfNearDupPairs(_, NumCentroids, NearDupAssign, NearDupThreshold)))
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    RecallTwins.knnQueries(knnTwins, vectors, queryVectors, K) ++
+    RecallTwins.pairQueries(pairTwins) ++ Map(
     "q_mrl_recall" -> (mrlRecall _),
     "q_mrl_rerank" -> (mrlRerank _),
     "q_mrl_rerank_recall" -> (mrlRerankRecall _),
@@ -1079,12 +1049,6 @@ object EmbeddingQueries {
     "q_ann_filter_xover" -> (annFilterXover _),
     "q_nndescent_graph" -> (nnDescentGraph _),
     "q_nndescent_recall" -> (nnDescentRecall _),
-    "q_srp_neardup" -> (srpNearDup _),
-    "q_srp_recall" -> (srpNearDupRecall _),
-    "q_srp_mp_neardup" -> (srpMpNearDup _),
-    "q_srp_mp_recall" -> (srpMpNearDupRecall _),
-    "q_srp_recall_sampled" -> (srpNearDupRecallSampled _),
-    "q_srp_mp_recall_sampled" -> (srpMpNearDupRecallSampled _),
     "q_srp_stats" -> (srpStats _),
     "q_retrieval_mrr" -> (retrievalMrr _),
     "q_ivf_stats" -> (ivfStats _),
@@ -1096,26 +1060,11 @@ object EmbeddingQueries {
     "q_embed_groups" -> (embedDedupGroups _),
     "q_knn_topk" -> (knnExact _),
     "q_hard_negatives" -> (hardNegatives _),
-    "q_ann_topk" -> (ivfTopK _),
-    "q_ann_recall" -> (ivfRecall _),
     "q_ivf_sweep" -> (ivfSweep _),
-    "q_sq8_topk" -> (sq8TopK _),
-    "q_sq8_recall" -> (sq8Recall _),
-    "q_pq_topk" -> (pqTopK _),
-    "q_pq_recall" -> (pqRecall _),
-    "q_ivfpq_topk" -> (ivfPqTopK _),
-    "q_ivfpq_recall" -> (ivfPqRecall _),
-    "q_ivfpq_rerank" -> (ivfPqRerank _),
-    "q_ivfpq_rerank_recall" -> (ivfPqRerankRecall _),
     "q_mmr_topk" -> (mmrTopK _),
     "q_mmr_diversity" -> (mmrDiversity _),
-    "q_ivfpq_res_topk" -> (ivfPqResidualTopK _),
-    "q_ivfpq_res_recall" -> (ivfPqResidualRecall _),
     "q_decon_semantic" -> (semanticDecon _),
     "q_embed_neardup" -> (cosineNearDup _),
-    "q_embed_neardup_ivf" -> (ivfNearDup _),
-    "q_embed_neardup_recall" -> (ivfNearDupRecall _),
-    "q_embed_neardup_recall_sampled" -> (ivfNearDupRecallSampled _),
     "q_embed_dedup" -> (embedDedupSurvivors _),
     "q_semdedup" -> (semDedupVerdicts _))
 
@@ -2156,7 +2105,8 @@ object EmbeddingQueries {
             JOIN nrm nv ON nv.vec_id = p.neighbor_id)
           WHERE rank <= $K)"""
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] =
+    RecallTwins.knnOracle(knnTwins) ++ RecallTwins.pairOracle(pairTwins) ++ Map(
     "q_mrl_rerank" -> (base + mrlServeCtes +
       "SELECT query_id, neighbor_id, rank FROM mrlrr"),
     "q_mrl_rerank_recall" -> (base + mrlServeCtes +
@@ -2279,33 +2229,10 @@ object EmbeddingQueries {
                 (SELECT count(*) FROM round2)::BIGINT AS n_edges
          FROM nn_exact e LEFT JOIN round2 r2
            ON r2.node_id = e.query_id AND r2.neighbor_id = e.neighbor_id"""),
-    "q_srp_neardup" -> (srpBase + "SELECT vec_a, vec_b FROM srp_pairs"),
-    "q_srp_recall" -> (srpBase +
-      """SELECT count(l.vec_a) AS hits, count(*) AS total
-         FROM exact_pairs e
-         LEFT JOIN srp_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
     "q_srp_stats" -> (srpBase +
       """SELECT band, sg AS sig, count(*)::BIGINT AS n_vecs,
                 (count(*) * 1000000) // (SELECT count(*) FROM v) AS share_e6
          FROM sig GROUP BY band, sg"""),
-    "q_srp_mp_neardup" -> (srpBase + "SELECT vec_a, vec_b FROM srp_mp_pairs"),
-    "q_srp_mp_recall" -> (srpBase +
-      """SELECT count(l.vec_a) AS hits, count(*) AS total
-         FROM exact_pairs e
-         LEFT JOIN srp_mp_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
-    // exact_pairs restricted to both endpoints in the id-sample ≡ all-pairs
-    // over the sample (the cosine predicate is per-pair) — the same oracle
-    // reuse argument as q_embed_neardup_recall_sampled
-    "q_srp_recall_sampled" -> (srpBase +
-      s"""SELECT count(l.vec_a) AS hits, count(*) AS total
-          FROM (SELECT * FROM exact_pairs
-                WHERE vec_a % $RecallSampleMod = 0 AND vec_b % $RecallSampleMod = 0) e
-          LEFT JOIN srp_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
-    "q_srp_mp_recall_sampled" -> (srpBase +
-      s"""SELECT count(l.vec_a) AS hits, count(*) AS total
-          FROM (SELECT * FROM exact_pairs
-                WHERE vec_a % $RecallSampleMod = 0 AND vec_b % $RecallSampleMod = 0) e
-          LEFT JOIN srp_mp_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
     // the same max-cosine/lowest-id assignment rule as `base`'s assign CTE,
     // widened with the winning score so the bucket rollup can price
     // cohesion; e6-floored to integers before any sum
@@ -2370,11 +2297,7 @@ object EmbeddingQueries {
               JOIN v ON v.vec_id = a.vec_id
               JOIN nrm nq ON nq.vec_id = p.query_id
               JOIN nrm nv ON nv.vec_id = a.vec_id) WHERE rank <= $K)
-          SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-          FROM ex2 e
-          LEFT JOIN ap2 a
-            ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-          GROUP BY e.query_id"""),
+          """ + RecallTwins.knnRecallSql("ex2", "ap2")),
     // len()-driven index range (not the fixed 64) so the dim audit and the
     // norm agree even on a ragged table; list_sum(list_transform(...))
     // evaluates sequentially left-to-right, matching the Spark expression
@@ -2473,55 +2396,10 @@ object EmbeddingQueries {
           WHERE rank <= $K"""),
     // int8 scalar quantization: round(x/s*127) with s = max|x| per vector;
     // quantized dots/norms are exact integers, so no sequential-sum caveat
-    "q_sq8_topk" -> (base + sq8Ctes +
-      "SELECT query_id, neighbor_id, rank FROM sq8"),
-    "q_sq8_recall" -> (base + sq8Ctes +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN sq8 a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
-    "q_pq_topk" -> (base + pqCtes +
-      "SELECT query_id, neighbor_id, rank FROM pq"),
-    "q_pq_recall" -> (base + pqCtes +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN pq a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
-    // IVF probe pruning (base's assign/probes) composed with PQ ADC scoring
-    // (pqCtes) — candidates from the probed buckets, scored from codes alone
-    "q_ivfpq_topk" -> (base + pqCtes + ivfPqCte +
-      "SELECT query_id, neighbor_id, rank FROM ivfpq"),
-    // identical contract served from the persisted index artifact
+    // identical contract to q_ivfpq_topk, served from the persisted index
+    // artifact
     "q_ivfpq_topk_indexed" -> (base + pqCtes + ivfPqCte +
       "SELECT query_id, neighbor_id, rank FROM ivfpq"),
-    "q_ivfpq_recall" -> (base + pqCtes + ivfPqCte +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN ivfpq a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
-    // two-stage retrieve-then-rerank: the ADC pool (rank <= RerankR) exact-
-    // cosine reranked and re-cut at K — the FAISS refine serving pattern
-    "q_ivfpq_rerank" -> (base + pqCtes + ivfPqCte + rerankCte +
-      "SELECT query_id, neighbor_id, rank FROM reranked"),
-    "q_ivfpq_rerank_recall" -> (base + pqCtes + ivfPqCte + rerankCte +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN reranked a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
-    // residual IVF-PQ: PQ on v - c(v), centroid terms exact, residual terms
-    // e6-floored ADC sums
-    "q_ivfpq_res_topk" -> (base + residualCtes +
-      "SELECT query_id, neighbor_id, rank FROM rivfpq"),
-    "q_ivfpq_res_recall" -> (base + residualCtes +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN rivfpq a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
     // greedy diversified selection over the same pool — the recursion is the
     // oracle's sequential twin of the per-group flatMapGroups loop. DuckDB's
     // WITH RECURSIVE needs the RECURSIVE keyword on the shared WITH, hence
@@ -2568,13 +2446,6 @@ object EmbeddingQueries {
           JOIN nrm nb ON nb.vec_id = b.vec_id
           WHERE list_sum(list_transform(range(1, 65), i -> t.e[i]*b.e[i]))
                   / (nt.nm * nb.nm) >= $NearDupThreshold""",
-    "q_ann_topk" -> (base + "SELECT query_id, neighbor_id, rank FROM approx"),
-    "q_ann_recall" -> (base +
-      """SELECT e.query_id, count(a.neighbor_id) AS hits, count(*) AS k
-         FROM exact e
-         LEFT JOIN approx a
-           ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         GROUP BY e.query_id"""),
     // the `probes`/`approx` CTEs re-derived at depth max(IvfSweepProbes)
     // with the bucket rank carried, swept by one config join; the final
     // LEFT JOIN re-attach keeps explicit zero rows on an empty table
@@ -2726,20 +2597,6 @@ object EmbeddingQueries {
           JOIN nrm nb ON nb.vec_id = b.vec_id
           WHERE list_sum(list_transform(range(1, 65), i -> a.e[i]*b.e[i]))
                   / (na.nm * nb.nm) >= $NearDupThreshold""",
-    "q_embed_neardup_ivf" -> (nearDupBase +
-      "SELECT vec_a, vec_b FROM blocked_pairs"),
-    "q_embed_neardup_recall" -> (nearDupBase +
-      """SELECT count(l.vec_a) AS hits, count(*) AS total
-         FROM exact_pairs e
-         LEFT JOIN blocked_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
-    // exact_pairs restricted to both endpoints in the id-sample ≡ all-pairs
-    // over the sample (the cosine predicate is per-pair), so the oracle reuses
-    // the shared CTEs.
-    "q_embed_neardup_recall_sampled" -> (nearDupBase +
-      s"""SELECT count(l.vec_a) AS hits, count(*) AS total
-          FROM (SELECT * FROM exact_pairs
-                WHERE vec_a % $RecallSampleMod = 0 AND vec_b % $RecallSampleMod = 0) e
-          LEFT JOIN blocked_pairs l ON l.vec_a = e.vec_a AND l.vec_b = e.vec_b"""),
     "q_embed_dedup" -> (nearDupBase +
       """SELECT v.vec_id
          FROM v

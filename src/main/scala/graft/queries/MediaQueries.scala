@@ -60,22 +60,17 @@ object MediaQueries {
     * feature extractor, then the BUCKETED embedding near-dup operator — the
     * cross-modal dedup shape (payload → encoder → centroid blocking → exact
     * cosine verify) with the stub encoder in the encoder seat. This is the
-    * production seat, so it runs the sub-quadratic
+    * production seat, so `q_media_neardup` runs the sub-quadratic
     * [[graft.operators.Embeddings.ivfNearDupPairs]] plan; the all-pairs form
-    * is demoted to the recall oracle [[mediaNearDupRecall]].
+    * is demoted to the baseline of its recall twin `q_media_neardup_recall`
+    * (one integer row — the all-pairs plan's one remaining job, mirroring
+    * `q_embed_neardup_recall`).
     */
-  def mediaNearDup(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Embeddings.ivfNearDupPairs(mediaFeatures(spark, dir),
-      MediaNumCentroids, MediaNearDupAssign, MediaNearDupThreshold)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-
-  /** Recall of the bucketed media near-dup path vs the exact all-pairs
-    * baseline (one integer row) — the all-pairs plan's one remaining job,
-    * mirroring the `q_embed_neardup_recall` pattern.
-    */
-  def mediaNearDupRecall(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Embeddings.ivfNearDupRecall(mediaFeatures(spark, dir),
-      MediaNumCentroids, MediaNearDupAssign, MediaNearDupThreshold)
+  private lazy val nearDupTwin = RecallTwins.PairTwin(
+    "q_media_neardup", "q_media_neardup_recall", None, MediaNearDupThreshold,
+    mediaPairsBase, "blocked_pairs", "doc", mediaFeatures,
+    graft.operators.Embeddings.ivfNearDupPairs(_, MediaNumCentroids,
+      MediaNearDupAssign, MediaNearDupThreshold))
 
   /** Keyframe gate: a frame opens a new "scene" when its feature cosine to
     * the previous frame drops below this (stub features of distinct byte
@@ -98,12 +93,11 @@ object MediaQueries {
     Multimodal.keyframes(payloads(spark, dir), "doc_id", "payload",
       k = 4, threshold = KeyframeThreshold)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_meta" -> (mediaMeta _),
-    "q_media_frames" -> (mediaFrames _),
-    "q_media_neardup" -> (mediaNearDup _),
-    "q_media_neardup_recall" -> (mediaNearDupRecall _),
-    "q_keyframes" -> (keyframes _))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    RecallTwins.pairQueries(Seq(nearDupTwin)) ++ Map(
+      "q_media_meta" -> (mediaMeta _),
+      "q_media_frames" -> (mediaFrames _),
+      "q_keyframes" -> (keyframes _))
 
   /** Shared oracle CTEs: stub features recomputed from md5 hex (24-bit ints /
     * 2^24 are exact in float32 and double; dot/norm arithmetic evaluates in
@@ -155,7 +149,7 @@ object MediaQueries {
                   / (x.nm * y.nm) >= $MediaNearDupThreshold)
      """
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = RecallTwins.pairOracle(Seq(nearDupTwin)) ++ Map(
     "q_media_meta" ->
       """SELECT doc_id, strlen(text)::BIGINT AS n_bytes,
            (320 + strlen(text) % 320)::INT AS width,
@@ -168,12 +162,6 @@ object MediaQueries {
                  ELSE strlen(text) - 2 * (strlen(text) // 3)
             END)::BIGINT AS frame_len
          FROM documents, unnest([0, 1, 2]) AS u(i)""",
-    "q_media_neardup" -> (mediaPairsBase +
-      "SELECT doc_a, doc_b FROM blocked_pairs"),
-    "q_media_neardup_recall" -> (mediaPairsBase +
-      """SELECT count(l.doc_a) AS hits, count(*) AS total
-         FROM exact_pairs e
-         LEFT JOIN blocked_pairs l ON l.doc_a = e.doc_a AND l.doc_b = e.doc_b"""),
     // frame boundaries mirror q_media_frames (i*base slices, last takes the
     // remainder); per-frame features re-derive from md5 of the slice, and the
     // keyframe verdict compares bit-identical doubles, so booleans hash-match

@@ -814,19 +814,30 @@ object TextQueries {
     * at a fixed vocab budget actually reads.
     */
   def tokenizerFertilityEq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val vocab = graft.operators.Lineage.cut(
       graft.operators.Bpe.wordVocab(docs(spark, dir), "text"))
+    fertilityBakeOff(vocab, UnigramTargetMulti,
+      unigramTargetLadderFor(spark, dir).last._1)
+  }
+
+  /** The bake-off body both fertility gates share: over one corpus
+    * vocabulary, BPE under the top-`bpeMerges` ranked merges against the
+    * unigram-LM segmentation under `unigramCost`, as (tokenizer, n_words,
+    * n_tokens, toks_per_word_e6) rows. The cost map is by-name, so it is
+    * built after the BPE merge list is collected.
+    */
+  private def fertilityBakeOff(vocab: DataFrame, bpeMerges: Int,
+                               unigramCost: => Map[String, Long]): DataFrame = {
+    val spark = vocab.sparkSession
+    import spark.implicits._
     val bpeToks = graft.operators.Bpe.encodeVocab(vocab,
-        graft.operators.Bpe.rankedPairMergesOfVocab(vocab, UnigramTargetMulti))
-      .toDF()
+        graft.operators.Bpe.rankedPairMergesOfVocab(vocab, bpeMerges)).toDF()
       .select(col("word"), size(col("toks")).cast("long").as("n_toks"))
     val b = vocab.join(bpeToks, "word")
       .agg(sum(col("wfreq")).as("n_words"),
         sum(col("wfreq") * col("n_toks")).as("n_tokens"))
       .select(lit("bpe").as("tokenizer"), col("n_words"), col("n_tokens"))
-    val finalCost = unigramTargetLadderFor(spark, dir).last._1
-    val bc = spark.sparkContext.broadcast(finalCost)
+    val bc = spark.sparkContext.broadcast(unigramCost)
     val u = vocab.select(col("word"), col("wfreq")).as[(String, Long)]
       .mapPartitions { it =>
         val cm = bc.value
@@ -885,34 +896,11 @@ object TextQueries {
     * costs two tiny passes beyond the corpus scan.
     */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val vocab = graft.operators.Lineage.cut(
       graft.operators.Bpe.wordVocab(docs(spark, dir), "text"))
-    val bpeToks = graft.operators.Bpe.encodeVocab(vocab,
-        graft.operators.Bpe.rankedPairMergesOfVocab(vocab, BpeTopK)).toDF()
-      .select(col("word"), size(col("toks")).cast("long").as("n_toks"))
-    val b = vocab.join(bpeToks, "word")
-      .agg(sum(col("wfreq")).as("n_words"),
-        sum(col("wfreq") * col("n_toks")).as("n_tokens"))
-      .select(lit("bpe").as("tokenizer"), col("n_words"), col("n_tokens"))
-    val pieceCost = graft.operators.Unigram
+    fertilityBakeOff(vocab, BpeTopK, graft.operators.Unigram
       .seedPieces(vocab, UnigramSeedK).select("piece", "cost").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bc = spark.sparkContext.broadcast(pieceCost)
-    val u = vocab.select(col("word"), col("wfreq")).as[(String, Long)]
-      .mapPartitions { it =>
-        val cm = bc.value
-        it.map { case (w, f) =>
-          (f, graft.operators.Unigram.viterbi(w, cm).size.toLong)
-        }
-      }
-      .toDF("wfreq", "np")
-      .agg(sum(col("wfreq")).as("n_words"),
-        sum(col("wfreq") * col("np")).as("n_tokens"))
-      .select(lit("unigram").as("tokenizer"), col("n_words"), col("n_tokens"))
-    b.unionByName(u)
-      .select(col("tokenizer"), col("n_words"), col("n_tokens"),
-        expr("(n_tokens * 1000000) div n_words").as("toks_per_word_e6"))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
   /** Vocabulary size for the OOV-rate report: the corpus vocabulary is tiny

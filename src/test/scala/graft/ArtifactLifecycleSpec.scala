@@ -46,6 +46,28 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
       "complete-looking parts without the root manifest did not force a rebuild")
   }
 
+  test("two threads ensuring one fresh root run the build once") {
+    val root = Files.createTempDirectory("graft_test_race")
+      .resolve("graft_pqidx_appR_root").toString
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    // each build waits (bounded) for a second build to start: two unlocked
+    // ensures both pass the manifest check and both build; a locked ensure
+    // holds the second thread until the first build's manifest is written
+    val bothIn = new java.util.concurrent.CountDownLatch(2)
+    def ensure(): Thread = {
+      val t = new Thread(() => EmbeddingQueries.ensureArtifact(root, "appR") {
+        builds.incrementAndGet()
+        bothIn.countDown()
+        bothIn.await(2, java.util.concurrent.TimeUnit.SECONDS)
+        new java.io.File(root).mkdirs(); ()
+      })
+      t.start(); t
+    }
+    Seq(ensure(), ensure()).foreach(_.join())
+    assert(builds.get == 1, s"the build body ran ${builds.get} times for one root")
+    assert(new java.io.File(root, EmbeddingQueries.ArtifactManifest).exists)
+  }
+
   test("orphan sweep reclaims only dead sessions' stale trees") {
     val parent = Files.createTempDirectory("graft_test_sweep").toFile
     val now = System.currentTimeMillis()

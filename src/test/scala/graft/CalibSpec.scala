@@ -156,7 +156,8 @@ class CalibSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val sweep = Embeddings.ivfProbeSweep(v, q, numCentroids = 4, probes = Seq(1, 2, 4), k = 3)
       .select("nprobe", "hits", "total", "n_candidates").as[(Long, Long, Long, Long)]
       .collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    val rec = Embeddings.ivfRecall(v, q, numCentroids = 4, nProbe = 2, k = 3)
+    val rec = Embeddings.knnRecallOf(v, q, 3,
+        Embeddings.ivfTopK(v, q, numCentroids = 4, nProbe = 2, k = 3))
       .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
     assert((sweep(2L)._1, sweep(2L)._2) === rec)
     assert(sweep(1L)._1 <= sweep(2L)._1 && sweep(2L)._1 <= sweep(4L)._1)

@@ -33,7 +33,8 @@ class EmbeddingsSpec extends SparkSpec {
   }
 
   test("ivfRecall is 100% when probing covers all buckets") {
-    val rec = Embeddings.ivfRecall(vecs, vecs, numCentroids = 4, nProbe = 4, k = 2)
+    val rec = Embeddings.knnRecallOf(vecs, vecs, 2,
+      Embeddings.ivfTopK(vecs, vecs, numCentroids = 4, nProbe = 4, k = 2))
       .as[(Long, Long, Long)].collect()
     assert(rec.length === 4)
     assert(rec.forall { case (_, hits, k) => hits === k })
@@ -61,7 +62,8 @@ class EmbeddingsSpec extends SparkSpec {
     // toward whichever variant contains the queries (first-C contains ids<16)
     val queries = vecs001.filter(col("vec_id") % 7 === 3)
     def recall(centroids: DataFrame): Double = {
-      val (hits, total) = Embeddings.ivfRecallWith(vecs001, queries, centroids, nProbe = 4, k = 10)
+      val (hits, total) = Embeddings.knnRecallOf(vecs001, queries, 10,
+          Embeddings.ivfTopKWith(vecs001, queries, centroids, nProbe = 4, k = 10))
         .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
       hits.toDouble / total
     }
@@ -166,7 +168,7 @@ class EmbeddingsSpec extends SparkSpec {
     * minimized distortion) must be monotone non-decreasing with the stop
     * rule honored, and the centroid recall LADDER (first-C → sampled →
     * one Lloyd pass → converged) is measured through the same
-    * [[Embeddings.ivfRecallWith]] seam the registered recall queries pin —
+    * [[Embeddings.knnRecallOf]] seam the registered recall queries pin —
     * the evidence that centroid quality, not the probe scorer, is the
     * recall lever. Also prices the `q_ivf_quality` view's mean
     * member-to-own-centroid cosine before/after training.
@@ -196,7 +198,8 @@ class EmbeddingsSpec extends SparkSpec {
       // sampled/trained sets (see the sampled-centroids test's rationale)
       val queries = vecs001.filter(col("vec_id") % 7 === 3)
       def recall(centroids: DataFrame): Double = {
-        val (h, t) = Embeddings.ivfRecallWith(vecs001, queries, centroids, nProbe = 4, k = 10)
+        val (h, t) = Embeddings.knnRecallOf(vecs001, queries, 10,
+          Embeddings.ivfTopKWith(vecs001, queries, centroids, nProbe = 4, k = 10))
           .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
         h.toDouble / t
       }
@@ -252,7 +255,9 @@ class EmbeddingsSpec extends SparkSpec {
     val exact = Embeddings.cosineNearDupPairs(vecs001, threshold = 0.45)
       .as[(Long, Long)].collect().toSet
     assert(srp.subsetOf(exact), s"false positives: ${srp.diff(exact)}")
-    val (hits, total) = Embeddings.srpNearDupRecall(vecs001, 32, 0.45)
+    val (hits, total) = Embeddings.pairRecallOf(
+        Embeddings.cosineNearDupPairs(vecs001, 0.45),
+        Embeddings.srpNearDupPairs(vecs001, 32, 0.45))
       .as[(Long, Long)].head()
     info(s"srp recall on sf0.001: $hits/$total")
     assert(total > 0 && hits > 0)
@@ -269,9 +274,11 @@ class EmbeddingsSpec extends SparkSpec {
     val mp = Embeddings.srpNearDupPairsMultiProbe(vecs001, 32, 0.45)
       .as[(Long, Long)].collect().toSet
     assert(sp.subsetOf(mp), s"single-probe pairs missing from multi-probe: ${sp.diff(mp)}")
-    val (h1, t1) = Embeddings.srpNearDupRecall(vecs001, 32, 0.45).as[(Long, Long)].head()
-    val (h2, t2) = Embeddings.srpNearDupRecallMultiProbe(vecs001, 32, 0.45)
-      .as[(Long, Long)].head()
+    val exact = Embeddings.cosineNearDupPairs(vecs001, 0.45)
+    val (h1, t1) = Embeddings.pairRecallOf(exact,
+      Embeddings.srpNearDupPairs(vecs001, 32, 0.45)).as[(Long, Long)].head()
+    val (h2, t2) = Embeddings.pairRecallOf(exact,
+      Embeddings.srpNearDupPairsMultiProbe(vecs001, 32, 0.45)).as[(Long, Long)].head()
     info(s"recall single=$h1/$t1 multi=$h2/$t2")
     assert(t1 === t2 && h2 >= h1)
   }
@@ -335,7 +342,8 @@ class EmbeddingsSpec extends SparkSpec {
 
     val queries = vecs001.filter(col("vec_id") % 7 === 3)
     def recall(cb: DataFrame): Double = {
-      val (h, t) = Embeddings.pqRecallWith(vecs001, queries, cb, k = 10)
+      val (h, t) = Embeddings.knnRecallOf(vecs001, queries, 10,
+          Embeddings.pqTopKWith(vecs001, queries, cb, k = 10))
         .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
       h.toDouble / t
     }
@@ -351,7 +359,7 @@ class EmbeddingsSpec extends SparkSpec {
     * draw cannot re-pick a chosen codeword), the convergence loop's
     * distortion trace must be monotone non-increasing with the stop rule
     * honored, and the recall LADDER (first-C → one Lloyd pass → converged
-    * multi-pass) is measured through the same pqRecallWith seam the
+    * multi-pass) is measured through the same knnRecallOf seam the
     * registered q_pq_recall pins — the evidence that training quality, not
     * the ADC scorer, is the recall lever.
     */
@@ -383,7 +391,8 @@ class EmbeddingsSpec extends SparkSpec {
 
       val queries = vecs001.filter(col("vec_id") % 7 === 3)
       def recall(cb: DataFrame): Double = {
-        val (h, t) = Embeddings.pqRecallWith(vecs001, queries, cb, k = 10)
+        val (h, t) = Embeddings.knnRecallOf(vecs001, queries, 10,
+          Embeddings.pqTopKWith(vecs001, queries, cb, k = 10))
           .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
         h.toDouble / t
       }

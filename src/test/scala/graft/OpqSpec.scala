@@ -74,7 +74,8 @@ class OpqSpec extends SparkSpec {
         import spark.implicits._
         val queries = corpus.filter(col("vec_id") % 7 === 3)
         val (cb, _) = Embeddings.pqCodebookConverged(corpus, maxIters = 8, epsPct = 1.0)
-        val (h, t) = Embeddings.pqRecallWith(corpus, queries, cb, k = 10)
+        val (h, t) = Embeddings.knnRecallOf(corpus, queries, 10,
+            Embeddings.pqTopKWith(corpus, queries, cb, k = 10))
           .agg(sum("hits"), sum("k")).as[(Long, Long)].head()
         h.toDouble / t
       }

@@ -36,9 +36,11 @@ class RerankSpec extends SparkSpec {
   }
 
   test("per-query rerank hits dominate plain IVF-PQ hits") {
-    val plain = Embeddings.ivfPqRecall(vectors, queries, NumCentroids, NProbe, K)
+    val plain = Embeddings.knnRecallOf(vectors, queries, K,
+        Embeddings.ivfPqTopK(vectors, queries, NumCentroids, NProbe, K))
       .select(col("query_id"), col("hits").as("plain_hits"))
-    val rr = Embeddings.ivfPqRerankRecall(vectors, queries, NumCentroids, NProbe, RerankR, K)
+    val rr = Embeddings.knnRecallOf(vectors, queries, K,
+        Embeddings.ivfPqRerank(vectors, queries, NumCentroids, NProbe, RerankR, K))
       .select(col("query_id"), col("hits").as("rr_hits"))
     val joined = plain.join(rr, "query_id").collect()
     assert(joined.length == EmbeddingQueries.NumQueries)
