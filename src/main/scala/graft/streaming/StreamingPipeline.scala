@@ -27,7 +27,9 @@ import graft.sinks.BalanceUpsert
   *     (TokenBalance.java:82-90). Per-trigger cost scales with stateful
   *     operators × partitions: the per-stage form (dedup ×3 + two interval
   *     joins) committed 44 state stores per trigger at 4 partitions, this
-  *     one commits 4;
+  *     one commits 4. A key's members are one `binary` state value, so the
+  *     state's decoder is not recompiled every trigger, as an array state's
+  *     is;
   *   - the balance fold (#13/#14) is not a second stateful operator (an
   *     unbounded aggregate would add one more store per partition per
   *     trigger); it runs as the Spark-idiomatic equivalent of the reference's
@@ -43,9 +45,19 @@ object StreamingPipeline {
 
   /** Decode a raw `value: STRING` JSON feed (Kafka-shaped; the offline serde
     * stand-in for `from_avro`) into typed CDC columns.
+    *
+    * A streaming feed is coalesced to `defaultParallelism` BEFORE it is
+    * decoded: a source makes one input partition per delivery (MemoryStream
+    * per `addData`, Kafka per topic partition), a trigger holds hundreds of
+    * them, and the decode stage's iterator and JSON parser are set up once
+    * per partition. The coalesce is narrow, so the decode runs in the same
+    * tasks as the stages after it.
     */
-  def parseJson(raw: DataFrame, schema: StructType): DataFrame =
-    raw.select(from_json(col("value"), schema).as("r")).select("r.*")
+  def parseJson(raw: DataFrame, schema: StructType): DataFrame = {
+    val in = if (raw.isStreaming) raw.coalesce(raw.sparkSession.sparkContext.defaultParallelism)
+             else raw
+    in.select(from_json(col("value"), schema).as("r")).select("r.*")
+  }
 
   /** The transfer stream: identical call as batch — stages self-dispatch. */
   def transfers(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,

@@ -4,11 +4,14 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
-import graft.operators.TokenPipeline
+import graft.operators.{ReceiptState, TokenPipeline}
 import graft.schema.NearSchemas
 import graft.streaming.StreamingPipeline
 
@@ -17,7 +20,8 @@ import graft.streaming.StreamingPipeline
   * [[TokenPipeline.receiptOutcomeActions]]): keep-first dedup per (topic,
   * key), inclusive ±tolerance joins emitted once when the last member
   * arrives, per-topic watermarks, late-row drops that the progress counts,
-  * eviction after the dedup delay, and restart from the checkpoint.
+  * eviction after the dedup delay, restart from the checkpoint, a state
+  * that compiles no new code per trigger, and its codec's round trip.
   */
 class ReceiptStateSpec extends SparkSpec {
   import spark.implicits._
@@ -63,7 +67,7 @@ class ReceiptStateSpec extends SparkSpec {
   private final class Feed(build: (DataFrame, DataFrame, DataFrame) => DataFrame) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     private val ins = Seq.fill(3)(MemoryStream[String])
-    private val ck = Files.createTempDirectory("receipt-state-ck").toString
+    val ck: String = Files.createTempDirectory("receipt-state-ck").toString
     private val emitted = mutable.ArrayBuffer.empty[(Int, String)]
     @volatile private var step = 0
     var query: StreamingQuery = _
@@ -206,6 +210,79 @@ class ReceiptStateSpec extends SparkSpec {
       assert(f.stateOperators.length === 1)
       assert(f.keys === Seq((1, "k8", 0)), "one mint leg")
     } finally f.stop()
+  }
+
+  test("steady triggers compile no new code; the state holds no collection") {
+    val f = new Feed(roa).start()
+    val compiles = try {
+      // step 1 sets the max event time; each later step delivers a fresh
+      // receipt on all three topics no later than it, so every trigger plans
+      // the same shape and the watermark (whose predicate is regenerated
+      // whenever it moves) stays put
+      f.feed(triple("s1", 100))
+      (2 to 10).map { i =>
+        f.feed(triple(s"s$i", 100 - 0.1 * i))
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }
+    } finally f.stop()
+    assert(f.keys.map(_._2) === (1 to 10).map(i => s"s$i"))
+    assert(compiles.forall(_ == compiles.head),
+      s"compiles after steps 2..10: ${compiles.mkString(", ")}")
+
+    def collection(t: DataType): Boolean = t match {
+      case _: ArrayType | _: MapType => true
+      case s: StructType => s.fields.exists(x => collection(x.dataType))
+      case _ => false
+    }
+    val stateSchema = spark.read.format("statestore").load(f.ck).schema
+    assert(!collection(stateSchema), stateSchema.treeString)
+  }
+
+  test("the state codec round-trips held members, order kept") {
+    import org.scalacheck.{Gen, Prop, Test => ScTest}
+    val all = Seq(StringType, IntegerType, DecimalType(20, 0), DecimalType(38, 0), TimestampType)
+    val types = Seq(all, all.reverse, all.take(2))
+      .map(ts => StructType(ts.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) }))
+    val codec = new ReceiptState.Codec(types)
+
+    val d38 = BigInt(10).pow(38) - 1
+    def decimal(g: Gen[BigInt]): Gen[Any] = g.map(b => new java.math.BigDecimal(b.bigInteger))
+    def value(t: DataType): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> (t match {
+      case StringType => Gen.oneOf(Gen.const(""), Gen.alphaNumStr,
+        Gen.oneOf("né", "ĳsselmeer", "東京", "a😀b", "\u0000"))
+      case IntegerType => Gen.oneOf(Gen.choose(Int.MinValue, Int.MaxValue), Gen.const(0))
+      case d: DecimalType if d.precision == 20 =>
+        decimal(Gen.oneOf(Gen.const(BigInt(0)), Gen.const(BigInt(10).pow(20) - 1),
+          Gen.choose(0L, Long.MaxValue).map(BigInt(_))))
+      case _: DecimalType =>
+        decimal(Gen.oneOf(Gen.const(d38), Gen.const(-d38), Gen.long.map(BigInt(_))))
+      case TimestampType => // 1900-01-01 .. 2100-01-01 in µs, both sides of the epoch
+        Gen.choose(-2208988800000000L, 4102444800000000L).map(DateTimeUtils.toJavaTimestamp)
+    }))
+    val member = for {
+      topic <- Gen.choose(0, 2)
+      t <- Gen.long
+      idx <- Gen.option(Gen.choose(Int.MinValue, Int.MaxValue))
+      payload <- Gen.sequence[Seq[Any], Any](types(topic).fields.map(f => value(f.dataType)))
+    } yield ReceiptState.Member(topic, t, idx, payload)
+
+    val prop = Prop.forAll(Gen.listOf(member)) { ms =>
+      codec.decode(codec.encode(ms)) == ms
+    }
+    val res = ScTest.check(
+      ScTest.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(20261019L), prop)
+    assert(res.passed, s"codec round trip failed: ${res.status}")
+  }
+
+  test("a member column the state codec cannot hold fails at plan time, by name") {
+    val r = Seq(("k", Seq(1, 2))).toDF("receipt_id", "hops")
+    val other = Seq("k").toDF("receipt_id")
+    val err = intercept[IllegalArgumentException] {
+      ReceiptState(r, other, other, Seq("receipt_id", "hops"), Seq("receipt_id"),
+        Seq("receipt_id"), cfg)
+    }
+    assert(err.getMessage.contains("`hops`") && err.getMessage.contains("array<int>"),
+      err.getMessage)
   }
 }
 
