@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication of an at-least-once CDC feed.
   *
@@ -61,9 +62,11 @@ object Dedup {
     *   - sightings are retained until store retention lapses
     *     (TokenBalance.java:82-90; 3-day retention vs 60-min window).
     *
-    * Implemented as `flatMapGroupsWithState` with event-time timeout: state is
-    * the sorted list of sighting timestamps (epoch-ms) still able to mask an
-    * on-time record — a sighting `s` masks `t ∈ [s - right, s + left]`, and
+    * Implemented as `flatMapGroupsWithState` with event-time timeout,
+    * grouped on the id columns themselves (a NULL id is its own key, as in
+    * `dropDuplicates`). State is the sighting timestamps (epoch-ms), held as
+    * one binary value by [[StateCodec]], still able to mask an on-time
+    * record — a sighting `s` masks `t ∈ [s - right, s + left]`, and
     * Spark drops input older than the watermark, so `s` is dropped from state
     * once `s + left < watermark` (the watermark plays the reference's
     * retention role, applied at the earliest moment it is safe). The masking
@@ -73,7 +76,9 @@ object Dedup {
     * reference's window-store segments. Within a micro-batch, rows are
     * processed in event-time order (a Spark batch has no arrival order; the
     * reference processes in per-partition offset order — identical whenever
-    * redelivery preserves time order, deterministic here either way).
+    * redelivery preserves time order, deterministic here either way). A row
+    * with a NULL event time lies in no fetch range and is dropped before
+    * the state.
     *
     * `eventTimeCol` must be a TimestampType column; the input is watermarked
     * here with `delay`. Default [[apply]] stays on the built-in (cheaper
@@ -83,17 +88,14 @@ object Dedup {
   def withRefreshTtl(df: DataFrame, eventTimeCol: String, delay: String,
                      windowMs: Long, idCols: Seq[String]): DataFrame = {
     require(windowMs >= 1, "maintain duration per event must be >= 1") // TokenBalance.java:378-380
-    val spark = df.sparkSession
-    import spark.implicits._
-    implicit val rowEnc: ExpressionEncoder[Row] = ExpressionEncoder(df.schema)
-
     val leftMs = windowMs / 2
     val rightMs = windowMs - leftMs
     val timeIdx = df.schema.fieldIndex(eventTimeCol)
-    val idIdxs = idCols.map(df.schema.fieldIndex)
+    // one member per sighting: its ms time and no payload
+    val codec = new StateCodec.Codec(Seq(new StructType()))
 
-    def process(key: String, rows: Iterator[Row],
-                state: GroupState[Seq[Long]]): Iterator[Row] = {
+    def process(key: Row, rows: Iterator[Row],
+                state: GroupState[Array[Byte]]): Iterator[Row] = {
       if (state.hasTimedOut) {
         state.remove()
         Iterator.empty
@@ -101,8 +103,8 @@ object Dedup {
         val watermark = state.getCurrentWatermarkMs()
         // Retention: a sighting can only mask an on-time record (t >= wm)
         // while s + left >= wm; older sightings are dead weight.
-        var sightings =
-          state.getOption.getOrElse(Seq.empty).filter(_ + leftMs >= watermark)
+        var sightings = state.getOption.fold(Vector.empty[Long])(codec.decode(_).map(_.t))
+          .filter(_ + leftMs >= watermark)
         // order within the batch by event time for a deterministic "first"
         val sorted = rows.toSeq.sortBy(_.getTimestamp(timeIdx).getTime)
         val out = Seq.newBuilder[Row]
@@ -115,16 +117,19 @@ object Dedup {
         }
         if (sightings.isEmpty) state.remove()
         else {
-          state.update(sightings.sorted)
+          state.update(codec.encode(sightings.sorted.map(StateCodec.Member(0, _, Nil))))
           state.setTimeoutTimestamp(math.max(sightings.max + leftMs, watermark + 1))
         }
         out.result().iterator
       }
     }
 
+    val rowEnc = ExpressionEncoder(df.schema)
     df.withWatermark(eventTimeCol, delay)
-      .groupByKey(row => idIdxs.map(i => String.valueOf(row.get(i))).mkString("\u0000"))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)
-      .toDF(df.columns: _*)
+      .filter(col(eventTimeCol).isNotNull)
+      .groupBy(idCols.map(col): _*)
+      .as[Row, Row](ExpressionEncoder(df.select(idCols.map(col): _*).schema), rowEnc)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)(
+        Encoders.BINARY, rowEnc)
   }
 }

@@ -1,19 +1,16 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, IntervalUtils}
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import graft.operators.StateCodec.{Codec, Member}
 
 /** The streaming form of the token pipeline's dedup ×3 and both ±tolerance
   * joins (#3–#5) as ONE keyed state per `receipt_id` — the reference's own
@@ -49,15 +46,12 @@ import org.apache.spark.sql.types._
   * `addData`, Kafka per topic partition), and the per-task cost of
   * hundreds of near-empty partitions otherwise dominates a trigger.
   *
-  * A key's members are held as ONE `binary` state value written by
-  * [[Codec]], not as an array of rows: Spark re-resolves a streaming state
-  * encoder every trigger, and an array's decoder draws fresh lambda-variable
-  * names each time, so its 2,308-line projection missed the code cache and
-  * recompiled once per trigger (perfbench `near_stream` on 4 vCPUs: 26
-  * compiles in ~23 triggers, 1.9 s) while the other state tasks waited on
-  * the codegen lock. A binary value's decoder is the same code every
-  * trigger. The grouping is on the `receipt_id` column,
-  * so no per-row key function (and its `AppendColumns` deserialize) runs.
+  * A key's members are held as ONE `binary` state value written by the
+  * shared [[StateCodec]], not as an array of rows: the array's 2,308-line
+  * decoder recompiled once per trigger (perfbench `near_stream` on 4 vCPUs:
+  * 26 compiles in ~23 triggers, 1.9 s). The grouping is on the
+  * `receipt_id` column, so no per-row key function (and its
+  * `AppendColumns` deserialize) runs.
   */
 object ReceiptState {
 
@@ -85,7 +79,7 @@ object ReceiptState {
       df.select(cols.map(col): _*).schema
     val types = Seq(member(receipts, receiptCols), member(outcomes, outcomeCols),
       member(actions, actionCols))
-    val codec = new Codec(types)
+    val codec = new Codec(payloadTypes(types))
     val colsOf = Seq(receiptCols, outcomeCols, actionCols)
 
     def side(df: DataFrame, topic: Int, timeCol: String, idx: Column): DataFrame = {
@@ -115,89 +109,24 @@ object ReceiptState {
         process(codec, tolUs, delayMs))(Encoders.BINARY, outEnc)
   }
 
-  /** One held member of a key: its topic, µs event time, action index (None
-    * for receipts and outcomes) and its topic's payload columns, as the
-    * external values Spark's `Row` holds.
+  /** A held member of a key: its topic, µs event time and, as payload, its
+    * action index (NULL for receipts and outcomes) followed by its topic's
+    * member columns. A member's dedup id is (topic, payload head). The index
+    * leads every topic's payload because that is where checkpointed blobs
+    * hold it (presence byte, then an int, before the member columns).
     */
-  private[graft] final case class Member(topic: Int, tUs: Long, idx: Option[Int],
-                                         payload: Seq[Any]) {
-    def id: (Int, Option[Int]) = (topic, idx)
-  }
-
   private def toMember(r: Row): Member = {
     val topic = r.getInt(Topic)
-    Member(topic, r.getLong(T), if (r.isNullAt(Idx)) None else Some(r.getInt(Idx)),
-      r.getStruct(Members + topic).toSeq)
+    Member(topic, r.getLong(T), r.get(Idx) +: r.getStruct(Members + topic).toSeq)
   }
 
-  /** A key's members ⇄ one state blob, written field by field after the
-    * member schema (`types`, one struct per topic): a member count, then per
-    * member its topic byte, µs time, action index and its own topic's
-    * payload, each nullable value behind a presence byte. Strings are UTF-8
-    * with a length; decimals the unscaled two's-complement bytes at the
-    * column's scale; timestamps µs. No Java serialization and no generated
-    * code: nothing here is compiled per task or per trigger.
-    *
-    * It holds exactly string, int, decimal and timestamp columns; any other
-    * type fails at construction, naming the column.
+  private def id(m: Member): (Int, Any) = (m.topic, m.payload.head)
+
+  /** The codec's payload schema per topic: the action index, then the
+    * topic's member columns.
     */
-  private[graft] final class Codec(types: Seq[StructType]) extends Serializable {
-    for (t <- types; f <- t.fields) f.dataType match {
-      case StringType | IntegerType | TimestampType | _: DecimalType =>
-      case other => throw new IllegalArgumentException(
-        s"ReceiptState cannot hold member column `${f.name}` of type " +
-          s"${other.simpleString}: its state codec takes string, int, decimal and timestamp")
-    }
-    private val fields: Array[Array[DataType]] = types.map(_.fields.map(_.dataType)).toArray
-    // the external timestamp class the Row encoders of this plan use
-    private val instants = SQLConf.get.datetimeJava8ApiEnabled
-
-    def encode(ms: Seq[Member]): Array[Byte] = {
-      val buf = new ByteArrayOutputStream(64 * ms.size + 4)
-      val out = new DataOutputStream(buf)
-      def bytes(b: Array[Byte]): Unit = { out.writeInt(b.length); out.write(b) }
-      out.writeInt(ms.size)
-      ms.foreach { m =>
-        out.writeByte(m.topic)
-        out.writeLong(m.tUs)
-        out.writeBoolean(m.idx.isDefined)
-        m.idx.foreach(out.writeInt)
-        fields(m.topic).iterator.zip(m.payload.iterator).foreach { case (t, v) =>
-          out.writeBoolean(v != null)
-          if (v != null) t match {
-            case StringType => bytes(v.asInstanceOf[String].getBytes(UTF_8))
-            case IntegerType => out.writeInt(v.asInstanceOf[Int])
-            case TimestampType => out.writeLong(DateTimeUtils.anyToMicros(v))
-            case d: DecimalType =>
-              bytes(v.asInstanceOf[java.math.BigDecimal].setScale(d.scale).unscaledValue.toByteArray)
-          }
-        }
-      }
-      out.flush()
-      buf.toByteArray
-    }
-
-    def decode(blob: Array[Byte]): Vector[Member] = {
-      val in = new DataInputStream(new ByteArrayInputStream(blob))
-      def bytes(): Array[Byte] = { val b = new Array[Byte](in.readInt()); in.readFully(b); b }
-      Vector.fill(in.readInt()) {
-        val topic = in.readByte().toInt
-        val tUs = in.readLong()
-        val idx = if (in.readBoolean()) Some(in.readInt()) else None
-        val payload = fields(topic).map[Any] { t =>
-          if (!in.readBoolean()) null else t match {
-            case StringType => new String(bytes(), UTF_8)
-            case IntegerType => in.readInt()
-            case TimestampType =>
-              val us = in.readLong()
-              if (instants) DateTimeUtils.microsToInstant(us) else DateTimeUtils.toJavaTimestamp(us)
-            case d: DecimalType => new java.math.BigDecimal(new java.math.BigInteger(bytes()), d.scale)
-          }
-        }
-        Member(topic, tUs, idx, ArraySeq.unsafeWrapArray(payload))
-      }
-    }
-  }
+  private[graft] def payloadTypes(types: Seq[StructType]): Seq[StructType] =
+    types.map(t => StructType(StructField("idx", IntegerType) +: t.fields))
 
   private def process(codec: Codec, tolUs: Long, delayMs: Long)(
       key: String, rows: Iterator[Row], state: GroupState[Array[Byte]]): Iterator[Row] =
@@ -211,21 +140,21 @@ object ReceiptState {
       Iterator.empty
     } else {
       val held = state.getOption.fold(Vector.empty[Member])(codec.decode)
-      val seen = mutable.HashSet(held.map(_.id): _*)
-      val fresh = rows.map(toMember).filter(m => seen.add(m.id)).toVector
-      val freshIds = fresh.map(_.id).toSet
+      val seen = mutable.HashSet(held.map(id): _*)
+      val fresh = rows.map(toMember).filter(m => seen.add(id(m))).toVector
+      val freshIds = fresh.map(id).toSet
       val all = held ++ fresh
       def of(topic: Int) = all.filter(_.topic == topic)
-      def near(x: Member, y: Member) = math.abs(x.tUs - y.tUs) <= tolUs
+      def near(x: Member, y: Member) = math.abs(x.t - y.t) <= tolUs
       // only a triple with a member new in this trigger is new
       val out = for {
         r <- of(Receipt); o <- of(Outcome) if near(r, o)
         a <- of(Action)
-        if near(r, a) && Seq(r, o, a).exists(m => freshIds.contains(m.id))
-      } yield Row.fromSeq(r.payload ++ o.payload ++ a.payload)
+        if near(r, a) && Seq(r, o, a).exists(m => freshIds.contains(id(m)))
+      } yield Row.fromSeq(r.payload.tail ++ o.payload.tail ++ a.payload.tail)
 
       state.update(codec.encode(all))
-      val maxMs = Math.floorDiv(all.map(_.tUs).max, 1000L)
+      val maxMs = Math.floorDiv(all.map(_.t).max, 1000L)
       state.setTimeoutTimestamp(math.max(maxMs + delayMs, state.getCurrentWatermarkMs() + 1))
       out.iterator
     }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Dedup
@@ -16,32 +17,46 @@ import graft.operators.Dedup
   *   - masking is symmetric: a sighting does NOT mask forever forward (a
   *     record w/2+ past the newest sighting is new), nor a full window
   *     backward (an out-of-order record w/2+ before every sighting is new);
-  *   - state is evicted once the watermark passes sighting + w/2.
+  *   - state is evicted once the watermark passes sighting + w/2;
+  *   - keys are the id columns' values, NULL included; a row with a NULL
+  *     event time is dropped;
+  *   - steady triggers compile no new code.
   */
 class DedupRefreshTtlSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
 
-  private def runFeed(delay: String)(feeds: Seq[(String, Timestamp)]*): List[(String, Long)] = {
+  /** A started `withRefreshTtl` query over a MemoryStream of `T` rows named
+    * `cols` (event time `ts`, window 10 s); each `feed` is one trigger.
+    */
+  private final class Ttl[T <: Product : Encoder](cols: Seq[String], idCols: Seq[String],
+                                                  delay: String) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val out = Dedup.withRefreshTtl(
-      in.toDF().toDF("id", "ts"), "ts", delay,
-      windowMs = 10000L, idCols = Seq("id"))
+    private val in = MemoryStream[T]
+    private val emitted = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val ck: String = Files.createTempDirectory("ttl-ck").toString
+    private val out = Dedup.withRefreshTtl(in.toDF().toDF(cols: _*), "ts", delay,
+      windowMs = 10000L, idCols = idCols)
     assert(out.isStreaming)
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ttl-ck").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val rows = batch.collect().map(r => (r.getString(0), r.getTimestamp(1).getTime))
+    private val query = out.writeStream.outputMode("append")
+      .option("checkpointLocation", ck)
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        val rows = batch.collect()
         emitted.synchronized { emitted ++= rows }
         ()
       }
       .start()
-    feeds.foreach { rows => in.addData(rows); q.processAllAvailable() }
-    q.stop()
-    emitted.synchronized(emitted.toList)
+
+    def feed(rows: Seq[T]): Unit = { in.addData(rows); query.processAllAvailable() }
+    def stop(): Unit = query.stop()
+    def rows: List[Row] = emitted.synchronized(emitted.toList)
+  }
+
+  private def runFeed(delay: String)(feeds: Seq[(String, Timestamp)]*): List[(String, Long)] = {
+    val ttl = new Ttl[(String, Timestamp)](Seq("id", "ts"), Seq("id"), delay)
+    try feeds.foreach(ttl.feed) finally ttl.stop()
+    ttl.rows.map(r => (r.getString(0), r.getTimestamp(1).getTime))
   }
 
   test("chained duplicates refresh masking; forward horizon is window/2; eviction after watermark") {
@@ -87,5 +102,37 @@ class DedupRefreshTtlSpec extends SparkSpec {
     val cEmits = got.filter(_._1 == "C").map(_._2).sorted
     assert(cEmits === List(ts(0).getTime, ts(13).getTime),
       s"C must emit at t=0 and t=13 only; got $got")
+  }
+
+  test("keys are column values: a NULL id is not \"null\", and a value may hold the separator") {
+    val ttl = new Ttl[(String, String, Timestamp)](Seq("a", "b", "ts"), Seq("a", "b"), "5 seconds")
+    try ttl.feed(Seq(
+      (null, "x", ts(0)), ("null", "x", ts(1)),          // two keys
+      ("a\u0000b", "c", ts(0)), ("a", "b\u0000c", ts(1)), // two keys
+      (null, null, ts(0)), (null, null, ts(2))))         // one key, as in dropDuplicates
+    finally ttl.stop()
+    val got = ttl.rows.map(r => (Option(r.getString(0)), Option(r.getString(1)),
+      r.getTimestamp(2).getTime)).sortBy(_.toString)
+    assert(got === List(
+      (None, None, ts(0).getTime), (None, Some("x"), ts(0).getTime),
+      (Some("a"), Some("b\u0000c"), ts(1).getTime), (Some("a\u0000b"), Some("c"), ts(0).getTime),
+      (Some("null"), Some("x"), ts(1).getTime)).sortBy(_.toString))
+  }
+
+  test("a row with a NULL event time is dropped; its key's other rows still dedup") {
+    val got = runFeed("5 seconds")(
+      Seq("D" -> null, "D" -> ts(0)), // the NULL-time row masks nothing
+      Seq("D" -> ts(3), "D" -> null)  // dup of 0
+    )
+    assert(got === List("D" -> ts(0).getTime))
+  }
+
+  test("steady triggers compile no new code; the state holds no collection") {
+    val ttl = new Ttl[(String, Timestamp)](Seq("id", "ts"), Seq("id"), "30 seconds")
+    // step 1 sets the max event time; each later step delivers a fresh id
+    // and a duplicate of a held one, no later than it
+    assertSteadyState(ttl.ck, () => ttl.stop())((1 to 10).map(i => () =>
+      ttl.feed(Seq(s"s$i" -> ts(100 - i), "s1" -> ts(100 - i)))))
+    assert(ttl.rows.map(_.getString(0)).sorted === (1 to 10).map(i => s"s$i").sorted)
   }
 }

@@ -17,7 +17,9 @@ import graft.streaming.PitStream.{PitEvent, Served}
   * inside the watermark still win, null-valued observations stay coupled to
   * their timestamps (sentinel value, REAL age), staleness nulls both lanes,
   * and a quiet user finalizes via event-time timeout — all equal to the
-  * batch twin over the same fed rows at every trigger chunking.
+  * batch twin over the same fed rows at every trigger chunking. With no
+  * staleness bound the click lane is the streaming as-of join, checked
+  * against the as-of window form (qAsofJoin's union + running-last plan).
   */
 class PitStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -39,7 +41,7 @@ class PitStreamSpec extends SparkSpec {
     * observation carry, (tus, kind, event_id) running-last, `served`
     * arithmetic) applied to the fed events with the spec's staleness.
     */
-  private def batchTwin(events: Seq[PitEvent]): Set[Served] = {
+  private def batchTwin(events: Seq[PitEvent], stalenessUs: Long = StalenessUs): Set[Served] = {
     val df = events.toDF()
       .withColumn("tus", unix_micros(col("ts")))
       .withColumn("c_obs", when(col("kind") === 0,
@@ -50,7 +52,7 @@ class PitStreamSpec extends SparkSpec {
       .orderBy(col("tus"), col("kind"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def served(obs: Column, tus: Column): (Column, Column) = {
-      val fresh = obs.isNotNull && (tus - obs("us")) <= StalenessUs
+      val fresh = obs.isNotNull && (tus - obs("us")) <= stalenessUs
       (when(fresh, coalesce(obs("v"), lit(-1.0))).otherwise(lit(-1.0)),
         when(fresh, tus - obs("us")).otherwise(lit(-1L)))
     }
@@ -98,33 +100,45 @@ class PitStreamSpec extends SparkSpec {
     PitEvent(2L, 2, 21L, ts(100), None),
     PitEvent(2L, 2, 23L, ts(100), None))
 
-  private def runChunked(nChunks: Int): Set[Served] = {
+  /** A started serving query over a MemoryStream (30 s watermark); each
+    * `feed` is one trigger.
+    */
+  private final class Serve(stalenessUs: Long) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[PitEvent]
-    val servedStream = PitStream.serveFeatures(in.toDF(), "30 seconds", StalenessUs)
+    private val in = MemoryStream[PitEvent]
+    private val out = scala.collection.mutable.ArrayBuffer.empty[Served]
+    val ck: String = Files.createTempDirectory("pit-ck").toString
+    private val servedStream = PitStream.serveFeatures(in.toDF(), "30 seconds", stalenessUs)
     assert(servedStream.isStreaming)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Served]
-    val q = servedStream.writeStream.outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory(s"pit-ck-$nChunks").toString)
+    private val query = servedStream.writeStream.outputMode("append")
+      .option("checkpointLocation", ck)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Served], _: Long) =>
         val rows = batch.collect()
         out.synchronized { out ++= rows }
         ()
       }
       .start()
-    val size = math.max(1, math.ceil(feed.size.toDouble / nChunks).toInt)
-    feed.grouped(size).foreach { chunk =>
-      in.addData(chunk: _*)
-      q.processAllAvailable()
-    }
-    // push the watermark past every pending purchase so the tail finalizes
-    in.addData(PitEvent(99L, 0, 999L, ts(1000), None))
-    q.processAllAvailable()
-    q.stop()
-    val got = out.synchronized(out.toVector)
+
+    def feed(events: Seq[PitEvent]): Unit = { in.addData(events); query.processAllAvailable() }
+    def stop(): Unit = query.stop()
+    def served: Vector[Served] = out.synchronized(out.toVector)
+  }
+
+  /** Pushes the watermark past every pending purchase so the tail finalizes. */
+  private val Tick = PitEvent(99L, 0, 999L, ts(1000), None)
+
+  /** Feed `batches` one trigger each, then [[Tick]]; what was served. */
+  private def run(batches: Seq[Seq[PitEvent]], stalenessUs: Long = StalenessUs): Set[Served] = {
+    val s = new Serve(stalenessUs)
+    try (batches :+ Seq(Tick)).foreach(s.feed)
+    finally s.stop()
+    val got = s.served
     assert(got.size === got.distinct.size, "a purchase finalized twice")
     got.toSet
   }
+
+  private def runChunked(nChunks: Int): Set[Served] =
+    run(feed.grouped(math.max(1, math.ceil(feed.size.toDouble / nChunks).toInt)).toSeq)
 
   test("streamed PIT serving equals the batch window twin across chunkings") {
     val expected = batchTwin(feed)
@@ -143,5 +157,97 @@ class PitStreamSpec extends SparkSpec {
       "same-timestamp observation counts (inclusive at-or-before)")
     assert(byId(23L).click_val === 7.0 && byId(23L).click_age_us === 0L)
     assert(byId(31L).click_val === 3.0, "quiet user must finalize")
+  }
+
+  /** The as-of answer a served row carries with no staleness bound: the
+    * latest click at or before the purchase, or none.
+    */
+  private def asOf(s: Served): (Long, Long, Long, Option[Long]) =
+    (s.purchase_id, s.user_id, s.purchase_us,
+      if (s.click_age_us >= 0) Some(s.purchase_us - s.click_age_us) else None)
+
+  /** The as-of batch window twin — the formulation of
+    * [[graft.queries.AnalyticQueries.qAsofJoin]] (clicks sort before
+    * purchases at equal time; running last_value ignoreNulls).
+    */
+  private def asOfTwin(events: Seq[PitEvent]): Set[(Long, Long, Long, Option[Long])] = {
+    val df = events.toDF()
+      .withColumn("tus", unix_micros(col("ts")))
+      .withColumn("click_us",
+        when(col("kind") === 0, col("tus")).otherwise(lit(null).cast("long")))
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("tus"), col("kind"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("last_click_us", last(col("click_us"), ignoreNulls = true).over(w))
+      .filter(col("kind") === 2)
+      .select(col("event_id"), col("user_id"), col("tus"), col("last_click_us"))
+      .as[(Long, Long, Long, Option[Long])].collect().toSet
+  }
+
+  private def click(user: Long, id: Long, t: Timestamp) = PitEvent(user, 0, id, t, None)
+  private def purchase(user: Long, id: Long, t: Timestamp) = PitEvent(user, 2, id, t, None)
+  private def us(t: Timestamp): Long = t.getTime * 1000L
+
+  test("as-of with no staleness bound across 4 micro-batches equals the batch twin") {
+    // b1: user 1's first click and a purchase the watermark has not passed
+    val b1 = Seq(click(1L, 100L, ts(0)), purchase(1L, 101L, ts(25)))
+    // b2: the LATE click (event time 20 < the already-seen purchase at 25,
+    // still above the watermark) that must become purchase 101's answer; an
+    // equal-timestamp pair for user 4 (the click counts — kind ordering); a
+    // clickless purchase for user 2; a purchase for user 3 whose feed then
+    // goes quiet (timeout path); a far tick to drag the watermark
+    val b2 = Seq(click(1L, 102L, ts(20)), purchase(2L, 103L, ts(50)),
+      purchase(3L, 104L, ts(60)), click(4L, 105L, ts(40)),
+      purchase(4L, 106L, ts(40)), click(9L, 900L, ts(100)))
+    // b3: a later purchase for user 1 (must still see the click at 20 even
+    // though the watermark passed it — dominated-click eviction keeps the
+    // latest); another far tick
+    val b3 = Seq(purchase(1L, 107L, ts(80)), click(9L, 901L, ts(200)))
+    // b4: watermark-advancing tick only, so purchase 107 finalizes
+    val b4 = Seq(click(9L, 902L, ts(300)))
+
+    val got = run(Seq(b1, b2, b3, b4), stalenessUs = Long.MaxValue)
+    val fed = b1 ++ b2 ++ b3 ++ b4 :+ Tick
+    assert(got === batchTwin(fed, Long.MaxValue))
+    assert(got.map(asOf) === asOfTwin(fed))
+    // the late click won both user-1 purchases; the equal-timestamp click
+    // counted; clickless purchases have none (the timeout-finalized user 3
+    // included)
+    assert(got.map(asOf) === Set(
+      (101L, 1L, us(ts(25)), Some(us(ts(20)))),
+      (107L, 1L, us(ts(80)), Some(us(ts(20)))),
+      (103L, 2L, us(ts(50)), None),
+      (104L, 3L, us(ts(60)), None),
+      (106L, 4L, us(ts(40)), Some(us(ts(40))))))
+  }
+
+  test("nothing emits before the watermark passes a purchase") {
+    val s = new Serve(Long.MaxValue)
+    try {
+      s.feed(Seq(click(1L, 1L, ts(0)), purchase(1L, 2L, ts(10))))
+      // watermark after b1 = 10 − 30 < purchase time: still pending
+      assert(s.served.isEmpty)
+      s.feed(Seq(click(9L, 3L, ts(100))))
+    } finally s.stop()
+    assert(s.served.map(asOf) === Vector((2L, 1L, us(ts(10)), Some(us(ts(0))))))
+  }
+
+  test("a row with a NULL event time is dropped before the state") {
+    val fed = Seq(PitEvent(1L, 0, 1L, ts(0), Some(1.0)), PitEvent(1L, 0, 2L, null, Some(2.0)),
+      PitEvent(1L, 2, 3L, null, None), PitEvent(1L, 2, 4L, ts(10), None))
+    val got = run(Seq(fed))
+    assert(got === batchTwin(fed.filter(_.ts != null)))
+    assert(got.map(s => (s.purchase_id, s.click_val)) === Set((4L, 1.0)))
+  }
+
+  test("steady triggers compile no new code; the state holds no collection") {
+    val s = new Serve(StalenessUs)
+    // step 1 sets the max event time; each later step delivers an
+    // observation and a purchase no later than it, so the watermark holds
+    // and every purchase stays pending in the state
+    assertSteadyState(s.ck, () => s.stop())((1 to 10).map(i => () =>
+      s.feed(Seq(PitEvent(1L, i % 2, 10L * i, ts(100 - i), Some(i.toDouble)),
+        PitEvent(1L + i % 3, 2, 10L * i + 1, ts(100 - i), None)))))
+    assert(s.served.isEmpty)
   }
 }
