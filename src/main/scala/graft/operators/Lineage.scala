@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** The ONE seam every lineage cut in the library goes through.
   *
@@ -36,6 +36,15 @@ object Lineage {
     */
   def cut(df: DataFrame): DataFrame =
     if (cutsEnabled) df.localCheckpoint(true) else df
+
+  /** A cut that lands on the DRIVER: `ds`'s rows, collected in one job, for
+    * a caller that finishes its work there — or None under [[withoutCuts]],
+    * where the caller keeps its lazy distributed path. A driver finish
+    * returns a local frame, and a plan that starts at a local frame hides
+    * its upstream pipeline exactly as a checkpoint does.
+    */
+  def collect[T](ds: Dataset[T]): Option[Array[T]] =
+    if (cutsEnabled) Some(ds.collect()) else None
 
   /** Run `f` with every [[cut]] in the library degraded to the identity —
     * the plan-audit mode. Restores the PREVIOUS flag value on exit (also on

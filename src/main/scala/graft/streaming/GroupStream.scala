@@ -52,12 +52,13 @@ object GroupStream {
     }
 
   /** COMPACTION: the periodic batch pass that keeps the driver tier small —
-    * distributed [[ConnectedComponents.run]] over the accumulated pair log
-    * (every near-dup pair ever emitted — an append-only parquet table in
-    * production), yielding the (id, comp) label table the delta tier
-    * restarts on. Labels are component minima, identical to what the driver
-    * union-find would hold — the handoff changes WHERE state lives, never a
-    * label (spec-asserted across the seam).
+    * [[ConnectedComponents.run]] over the accumulated pair log (every
+    * near-dup pair ever emitted — an append-only parquet table in
+    * production; distributed above `ConnectedComponents.LocalFinishRows`,
+    * finished on the driver below it), yielding the (id, comp) label table
+    * the delta tier restarts on. Labels are component minima, identical to
+    * what the driver union-find would hold — the handoff changes WHERE state
+    * lives, never a label (spec-asserted across the seam).
     */
   def compactPairLog(pairLog: DataFrame, srcCol: String, dstCol: String): DataFrame =
     ConnectedComponents.run(pairLog, srcCol, dstCol)

@@ -1,15 +1,21 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Prop.propBoolean
 import graft.operators.ConnectedComponents
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def cc(edges: Seq[(Long, Long)], verts: Option[Seq[Long]] = None): Map[Long, Long] =
-    ConnectedComponents.run(
+  // driver-finish bounds that force each path of ConnectedComponents.run
+  private val Distributed = -1L
+  private val DriverFinish = Long.MaxValue
+
+  private def cc(edges: Seq[(Long, Long)], verts: Option[Seq[Long]] = None,
+                 finishRows: Long = ConnectedComponents.LocalFinishRows): Map[Long, Long] =
+    ConnectedComponents.label(
       edges.toDF("a", "b"), "a", "b",
-      verts.map(_.toDF("doc_id")))
+      verts.map(_.toDF("doc_id")), maxIter = 50, finishRows)
       .as[(Long, Long)].collect().toMap
 
   test("chain collapses to its min id") {
@@ -47,22 +53,34 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("a long path converges within the iteration bound (pointer jumping)") {
     val n = 64L
     val edges = (1L until n).map(i => (i, i + 1))
-    val got = cc(edges)
+    val got = cc(edges, finishRows = Distributed)
     assert(got.size === n)
     assert(got.values.forall(_ == 1L))
   }
 
   test("star graph converges in one round regardless of size") {
     val edges = (2L to 40L).map(i => (1L, i))
-    val got = cc(edges)
+    val got = cc(edges, finishRows = Distributed)
     assert(got.values.forall(_ == 1L))
   }
 
   test("an insufficient iteration bound fails loudly, not silently wrong") {
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
-      ConnectedComponents.run(edges, "a", "b", maxIter = 1)
+      ConnectedComponents.label(edges, "a", "b", None, maxIter = 1, finishRows = Distributed)
     }
+  }
+
+  test("union-find resolves a parent chain deeper than the thread stack") {
+    val n = 200000L
+    val uf = new ConnectedComponents.CompactedUnionFind(_ => None)
+    // descending unions build one chain: n -> n-1 -> ... -> 1
+    (n - 1 to 1L by -1).foreach(i => uf.union(i, i + 1))
+    val root = try uf.find(n) catch {
+      case _: StackOverflowError => fail(s"find took one stack frame per hop of a $n-deep chain")
+    }
+    assert(root === 1L)
+    assert(uf.freshSnapshot.values.forall(_ == 1L))
   }
 
   /** Sequential union-find with path compression — the single-node reference
@@ -93,11 +111,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     // chain hanging off the last spoke: forces multi-round convergence
     val chain = (20002L to 20033L).map(i => (i - 1L, i))
     val tiny = (30000L to 30400L by 2).map(i => (i, i + 1))
-    val got = cc(hub ++ chain ++ tiny)
-    val mega = got.filter(_._2 == 1L)
-    assert(mega.size == 20033, s"mega component mislabeled: ${mega.size} of 20033")
-    tiny.foreach { case (a, b) =>
-      assert(got(a) == a && got(b) == a, s"tiny pair ($a,$b) -> (${got(a)},${got(b)})")
+    Seq(Distributed, DriverFinish).foreach { finishRows =>
+      val got = cc(hub ++ chain ++ tiny, finishRows = finishRows)
+      val mega = got.filter(_._2 == 1L)
+      assert(mega.size == 20033, s"mega component mislabeled: ${mega.size} of 20033")
+      tiny.foreach { case (a, b) =>
+        assert(got(a) == a && got(b) == a, s"tiny pair ($a,$b) -> (${got(a)},${got(b)})")
+      }
     }
   }
 
@@ -124,15 +144,57 @@ class ConnectedComponentsSpec extends SparkSpec {
       s"jump degraded from an equi-join:\n$jumpPlan")
   }
 
+  /** Every case runs through both paths of [[ConnectedComponents.run]] and
+    * the sequential reference, all three equal: NULL endpoints (dropped),
+    * duplicate edges and self-loops over a small id range, plus a vertex
+    * universe that overlaps the endpoints and adds singletons.
+    */
   test("property: labels equal sequential union-find on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    val gen = Gen.listOfN(12,
-      Gen.zip(Gen.chooseNum(0L, 15L), Gen.chooseNum(0L, 15L)))
+    val id = Gen.chooseNum(0L, 15L)
+    val endpoint = Gen.frequency(9 -> id.map(Option(_)), 1 -> Gen.const(Option.empty[Long]))
+    val gen = Gen.zip(
+      Gen.choose(0, 14).flatMap(Gen.listOfN(_, Gen.zip(endpoint, endpoint))),
+      Gen.option(Gen.listOf(Gen.chooseNum(0L, 20L))))
+    def labels(edges: List[(Option[Long], Option[Long])], verts: Option[List[Long]],
+               finishRows: Long): Map[Long, Long] =
+      ConnectedComponents.label(edges.toDF("a", "b"), "a", "b",
+        verts.map(_.toDF("doc_id")), maxIter = 50, finishRows)
+        .as[(Long, Long)].collect().toMap
     val r = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8),
-      Prop.forAll(gen) { edges =>
-        edges.isEmpty || cc(edges) == unionFind(edges)
+      SCTest.Parameters.default.withMinSuccessfulTests(10),
+      Prop.forAll(gen) { case (edges, verts) =>
+        val kept = edges.collect { case (Some(a), Some(b)) => (a, b) }
+        val ref = unionFind(kept)
+        val want = ref ++ verts.getOrElse(Nil).filterNot(ref.contains).map(v => v -> v)
+        val local = labels(edges, verts, DriverFinish)
+        val dist = labels(edges, verts, Distributed)
+        (local == want) :| s"driver finish $local != $want" &&
+          (dist == want) :| s"distributed $dist != $want"
       })
     assert(r.passed, r.status.toString)
+  }
+
+  /** The driver finish is a cut, so audit mode must not take it: under
+    * [[graft.operators.Lineage.withoutCuts]] a CC consumer's optimized plan
+    * still holds the upstream pair plan and no local label frame, while the
+    * same consumer with cuts on finishes on the driver.
+    */
+  test("audit mode runs the distributed path and keeps the upstream pair plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
+    // no local input: any local frame in the plan is the driver finish (the
+    // optimizer folds the consumer's projection into it); the pairs are the
+    // Range of step 2, the universe the Range of step 1
+    def consumer() = ConnectedComponents.run(
+      spark.range(0, 40, 2).select(col("id").as("doc_a"), (col("id") + 1).as("doc_b")),
+      "doc_a", "doc_b", vertices = Some(spark.range(0, 50).toDF("doc_id")))
+      .select(col("id").as("doc_id"), col("comp").as("group_id"))
+    def localLabels(p: LogicalPlan) = p.collect { case l: LocalRelation => l }
+    def pairPlan(p: LogicalPlan) = p.collect { case r: Range if r.step == 2 => r }
+    val audited = graft.operators.Lineage.withoutCuts(consumer()).queryExecution.optimizedPlan
+    assert(localLabels(audited).isEmpty, s"audit plan holds the driver finish:\n$audited")
+    assert(pairPlan(audited).nonEmpty, s"audit plan lost the upstream pair plan:\n$audited")
+    val cut = consumer().queryExecution.optimizedPlan
+    assert(localLabels(cut).nonEmpty, s"cuts-on consumer skipped the driver finish:\n$cut")
   }
 }
