@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.StructType
   * `receipt_id` for receipts/outcomes and `(receipt_id, index_in_action_receipt)`
   * for actions (TokenBalance.java:96-113); the string prefixes the reference adds
   * ("receipts-", …) only exist because all three streams share one store. The
-  * streaming token pipeline keeps that shape without the prefixes: its dedup ×3
-  * and both joins share one state per `receipt_id`, with the topic as part of
-  * each member's id ([[ReceiptState]]). These operators serve every other
-  * stream, and the batch token pipeline.
+  * token pipeline keeps that shape without the prefixes, in batch and on
+  * streams: its dedup ×3 and both joins are one merge per `receipt_id`, with
+  * the topic as part of each member's id ([[ReceiptState]]). These operators
+  * serve every other stream, the per-stage `near_dedup` / `near_roa_join`
+  * queries, and the parity tests' reference for that merge.
   *
   * Spark-first mapping (SURVEY.md §2 #3):
   *   - batch: `dropDuplicates(idCols)` — a hash aggregate, map-side partial.

@@ -15,19 +15,19 @@ import graft.schema.NearSchemas
   * Every stage is a pure `DataFrame => DataFrame`, so the same calls run in
   * batch mode (tests, backfill/replay — the reference's application-reset path,
   * README.md:199-205) and under Structured Streaming (see graft.streaming).
-  * One stage dispatches on `isStreaming`: [[receiptOutcomeActions]] (dedup ×3
-  * and both joins, #3–#5). In batch it is three [[Dedup.exact]] aggregates and
-  * two equi-joins; on three streams it is ONE keyed state per receipt
-  * ([[ReceiptState]]), because a streaming plan pays per stateful operator ×
-  * partition every trigger.
+  * The dedup ×3 and both joins (#3–#5, [[receiptOutcomeActions]]) are ONE
+  * keyed merge per receipt in both modes ([[ReceiptState]]): one shuffle on
+  * `receipt_id` in batch, one stateful operator per trigger on streams. The
+  * per-stage operators ([[dedupReceipts]] … [[joined]]) remain as the bodies
+  * of the per-stage queries and as the parity tests' independent reference.
   *
-  * Scale notes: the joins are equi-joins on `receipt_id` — at 100 TB these are
-  * shuffle hash/sort-merge joins co-partitioned on the key across all three
-  * inputs, with the time predicate applied post-match (no cross product). The
-  * filter and column pruning are pushed below the joins by Catalyst, which the
-  * reference applies only *after* joining (TokenBalance.java:149-151) — our plan
-  * is strictly better. The balance fold is a commutative sum × argmax, so Spark's
-  * partial aggregation (map-side combine) applies; state is O(#accounts).
+  * Scale notes: the merge groups all three inputs on `receipt_id` in one
+  * shuffle, with the time predicate applied per key (no cross product); a
+  * receipt's members are few, so a key's work is small. The filter and column
+  * pruning of [[transfers]] run after the merge, where the reference applies
+  * them too (TokenBalance.java:149-151). The balance fold is a commutative
+  * sum × argmax, so Spark's partial aggregation (map-side combine) applies;
+  * state is O(#accounts).
   */
 object TokenPipeline {
 
@@ -241,19 +241,14 @@ object TokenPipeline {
   // -------------------------------------------------------------- composition
 
   /** Raw CDC frames → the deduplicated, joined receipt⊎outcome⊎action
-    * record: the one stage where batch and streaming plans differ. Batch:
-    * [[Dedup.exact]] per topic and [[joined]]. Three streaming topics:
-    * [[ReceiptState]], one keyed state per receipt for the dedup ×3 and both
-    * joins. Any other mix (e.g. stream-static) keeps the per-stage operators.
+    * record: one [[ReceiptState]] merge per receipt, over three batch frames
+    * or three streams. A mix of the two fails at plan time, naming the
+    * streaming inputs.
     */
   def receiptOutcomeActions(receipts: DataFrame, outcomes: DataFrame,
                             actions: DataFrame, cfg: Config): DataFrame =
-    if (receipts.isStreaming && outcomes.isStreaming && actions.isStreaming)
-      ReceiptState(receiptTime(receipts), outcomeTime(outcomes), actionTime(actions),
-        ReceiptCols, OutcomeCols, ActionCols, cfg)
-    else
-      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
-        dedupActions(actions, cfg), cfg)
+    ReceiptState(receiptTime(receipts), outcomeTime(outcomes), actionTime(actions),
+      ReceiptCols, OutcomeCols, ActionCols, cfg)
 
   /** End-to-end: raw CDC frames → transfer legs. */
   def transfersFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,

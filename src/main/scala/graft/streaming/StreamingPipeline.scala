@@ -11,19 +11,18 @@ import graft.sinks.BalanceUpsert
 /** Structured-Streaming execution of the token pipeline — the reference's
   * actual execution model (reference: TokenBalance.java:92-122,279-333).
   *
-  * The pipeline stages in [[TokenPipeline]] are pure `DataFrame => DataFrame`
-  * and dispatch on `isStreaming` at ONE stage,
-  * [[TokenPipeline.receiptOutcomeActions]], so the same call runs in batch
-  * (backfill/replay) and streaming; the parity suites assert stream ≡ batch.
-  * Under streaming:
+  * The pipeline stages in [[TokenPipeline]] are pure `DataFrame => DataFrame`,
+  * so the same call runs in batch (backfill/replay) and streaming; the parity
+  * suites assert stream ≡ batch against the per-stage batch operators. Under
+  * streaming:
   *
-  *   - dedup ×3 (#3) and the two ±2 s joins (#4, #5) are ONE keyed stateful
-  *     operator ([[graft.operators.ReceiptState]]): the three watermarked
-  *     topics are unioned, keyed by `receipt_id`, and a single
-  *     `flatMapGroupsWithState` keeps the first delivery per (topic, key),
-  *     emits each joined triple once when its last member arrives, and
-  *     evicts a key once the watermark passes its max event time + the
-  *     dedup delay — the reference's one shared window store
+  *   - dedup ×3 (#3) and the two ±2 s joins (#4, #5) are the keyed merge per
+  *     receipt that batch runs too ([[graft.operators.ReceiptState]]), held
+  *     in ONE `flatMapGroupsWithState`: the three watermarked topics are
+  *     unioned, keyed by `receipt_id`, the first delivery per (topic, key)
+  *     is kept, each joined triple is emitted once when its last member
+  *     arrives, and a key is evicted once the watermark passes its max event
+  *     time + the dedup delay — the reference's one shared window store
   *     (TokenBalance.java:82-90). Per-trigger cost scales with stateful
   *     operators × partitions: the per-stage form (dedup ×3 + two interval
   *     joins) committed 44 state stores per trigger at 4 partitions, this
@@ -59,7 +58,7 @@ object StreamingPipeline {
     in.select(from_json(col("value"), schema).as("r")).select("r.*")
   }
 
-  /** The transfer stream: identical call as batch — stages self-dispatch. */
+  /** The transfer stream: the identical call batch makes. */
   def transfers(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
                 cfg: TokenPipeline.Config): DataFrame =
     TokenPipeline.transfersFromRaw(receipts, outcomes, actions, cfg)

@@ -14,13 +14,15 @@ import graft.operators.{ReceiptState, StateCodec, TokenPipeline}
 import graft.schema.NearSchemas
 import graft.streaming.StreamingPipeline
 
-/** The contract of the streaming token pipeline's one keyed state per
-  * receipt ([[graft.operators.ReceiptState]], reached through
+/** The contract of the token pipeline's one keyed merge per receipt
+  * ([[graft.operators.ReceiptState]], reached through
   * [[TokenPipeline.receiptOutcomeActions]]): keep-first dedup per (topic,
   * key), inclusive ±tolerance joins emitted once when the last member
-  * arrives, per-topic watermarks, late-row drops that the progress counts,
-  * eviction after the dedup delay, restart from the checkpoint, a state
-  * that compiles no new code per trigger, and its codec's round trip.
+  * arrives, on batch frames as on streams (where a batch gives the rows of
+  * the per-stage operators), no mix of the two; on streams per-topic
+  * watermarks, late-row drops that the progress counts, eviction after the
+  * dedup delay, restart from the checkpoint, a state that compiles no new
+  * code per trigger, and its codec's round trip.
   */
 class ReceiptStateSpec extends SparkSpec {
   import spark.implicits._
@@ -114,6 +116,35 @@ class ReceiptStateSpec extends SparkSpec {
   private def roa(r: DataFrame, o: DataFrame, a: DataFrame): DataFrame =
     TokenPipeline.receiptOutcomeActions(r, o, a, cfg)
 
+  /** One delivery as three batch frames, through the keyed merge and
+    * through the per-stage operators (dedup ×3, then the two interval
+    * joins), which share no code with it: both must give the same rows.
+    * Returns the merge's (receipt_id, index_in_action_receipt) per row.
+    */
+  private def inBatch(s: Step): Seq[(String, Int)] = {
+    def frame(rows: Seq[String], schema: StructType) =
+      StreamingPipeline.parseJson(rows.toDF("value"), schema)
+    val (r, o, a) = (frame(s.r, NearSchemas.receipts),
+      frame(s.o, NearSchemas.executionOutcomes), frame(s.a, NearSchemas.actionReceiptActions))
+    val merged = roa(r, o, a)
+    assert(!merged.isStreaming)
+    val perStage = TokenPipeline.joined(TokenPipeline.dedupReceipts(r, cfg),
+      TokenPipeline.dedupOutcomes(o, cfg), TokenPipeline.dedupActions(a, cfg), cfg)
+    assert(merged.toJSON.collect().sorted.toSeq === perStage.toJSON.collect().sorted.toSeq)
+    merged.select("receipt_id", "index_in_action_receipt").as[(String, Int)]
+      .collect().toSeq.sorted
+  }
+
+  test("a mix of batch and streaming inputs fails at plan time, naming the streams") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def frame(schema: StructType) = StreamingPipeline.parseJson(Seq.empty[String].toDF("value"), schema)
+    val stream = StreamingPipeline.parseJson(MemoryStream[String].toDF(), NearSchemas.executionOutcomes)
+    val err = intercept[IllegalArgumentException] {
+      roa(frame(NearSchemas.receipts), stream, frame(NearSchemas.actionReceiptActions))
+    }
+    assert(err.getMessage.contains("streaming: outcomes"), err.getMessage)
+  }
+
   test("out-of-order members join once, in the step that delivers the last") {
     val f = new Feed(roa).start()
     try {
@@ -126,33 +157,38 @@ class ReceiptStateSpec extends SparkSpec {
       f.feed(Step(a = Seq(action("k1", 1, sec(2)))))
       assert(f.keys === Seq((3, "k1", 0), (4, "k1", 1)))
     } finally f.stop()
+    assert(inBatch(Step(r = Seq(receipt("k1", sec(1))), o = Seq(outcome("k1", sec(1.5))),
+      a = Seq(action("k1", 0, sec(1)), action("k1", 1, sec(2))))) === Seq(("k1", 0), ("k1", 1)))
   }
 
   test("redelivery of every topic across batch boundaries emits nothing twice") {
+    val again = Step(r = Seq.fill(2)(receipt("k2", sec(1))),
+      o = Seq.fill(2)(outcome("k2", sec(1))), a = Seq.fill(2)(action("k2", 0, sec(1))))
     val f = new Feed(roa).start()
     try {
       f.feed(Step(r = Seq(receipt("k2", sec(1))), a = Seq(action("k2", 0, sec(1)))))
       f.feed(Step(r = Seq(receipt("k2", sec(1))), o = Seq(outcome("k2", sec(1)))))
       f.feed(Step(o = Seq(outcome("k2", sec(1))), a = Seq(action("k2", 0, sec(1)))))
       // redelivery inside one batch too
-      f.feed(Step(r = Seq.fill(2)(receipt("k2", sec(1))),
-        o = Seq.fill(2)(outcome("k2", sec(1))), a = Seq.fill(2)(action("k2", 0, sec(1)))))
+      f.feed(again)
       assert(f.keys === Seq((2, "k2", 0)))
     } finally f.stop()
+    assert(inBatch(again) === Seq(("k2", 0)))
   }
 
   test("the ±2 s bounds are inclusive; 1 µs beyond does not join") {
     val us = 1e-6
+    val step = Step(
+      r = Seq(receipt("edge", sec(5)), receipt("o_out", sec(5)), receipt("a_out", sec(5))),
+      o = Seq(outcome("edge", sec(7)), outcome("o_out", sec(7 + us)), outcome("a_out", sec(3))),
+      a = Seq(action("edge", 0, sec(3)), action("o_out", 0, sec(5)),
+        action("a_out", 0, sec(3 - us))))
     val f = new Feed(roa).start()
     try {
-      f.feed(Step(
-        r = Seq(receipt("edge", sec(5)), receipt("o_out", sec(5)), receipt("a_out", sec(5))),
-        o = Seq(outcome("edge", sec(7)), outcome("o_out", sec(7 + us)),
-          outcome("a_out", sec(3))),
-        a = Seq(action("edge", 0, sec(3)), action("o_out", 0, sec(5)),
-          action("a_out", 0, sec(3 - us)))))
+      f.feed(step)
       assert(f.keys === Seq((1, "edge", 0)))
     } finally f.stop()
+    assert(inBatch(step) === Seq(("edge", 0)))
   }
 
   test("a row behind the watermark is dropped and counted") {
@@ -177,6 +213,8 @@ class ReceiptStateSpec extends SparkSpec {
       assert(f.stateOperators.head.numRowsTotal === 0)
       assert(f.keys.map(_._2) === Seq("k3", "k4"))
     } finally f.stop()
+    // the key-less rows join nothing in a batch either
+    assert(inBatch(triple("k3", 1) ++ tick(1)) === Seq(("k3", 0)))
   }
 
   test("restart from the checkpoint mid-feed equals an uninterrupted run") {
@@ -315,5 +353,7 @@ object ReceiptStateSpec {
     "eb0100000009056bc75e2d630fffff02ffffffffffe17b7e00000000"
 
   /** One delivery: the rows each topic receives in one micro-batch. */
-  final case class Step(r: Seq[String] = Nil, o: Seq[String] = Nil, a: Seq[String] = Nil)
+  final case class Step(r: Seq[String] = Nil, o: Seq[String] = Nil, a: Seq[String] = Nil) {
+    def ++(s: Step): Step = Step(r ++ s.r, o ++ s.o, a ++ s.a)
+  }
 }

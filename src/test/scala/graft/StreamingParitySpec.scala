@@ -16,9 +16,10 @@ import graft.streaming.{EachBatch, StreamingPipeline}
   * the same stages run unchanged under Structured Streaming is proven here,
   * not asserted in comments:
   *
-  *   - the transfer stream (watermarked dedup → two interval joins → fan-out)
-  *     fed in multiple micro-batches, with CDC duplicates crossing the batch
-  *     boundary, must equal the batch result;
+  *   - the transfer stream (one keyed merge per receipt → fan-out) fed in
+  *     multiple micro-batches, with CDC duplicates crossing the batch
+  *     boundary, must equal the batch result of the per-stage operators
+  *     (dedup ×3 → two interval joins → fan-out);
   *   - the balance changelog via per-batch deltas merged into the upsert
   *     store must equal the batch aggregate;
   *   - a full reset + replay (fresh checkpoint, fresh store, same feed) must
@@ -105,9 +106,20 @@ class StreamingParitySpec extends SparkSpec {
 
   private def canonical(df: DataFrame): Set[String] = df.toJSON.collect().toSet
 
+  /** The batch transfer legs from the per-stage operators —
+    * [[graft.operators.Dedup.exact]] per topic, then the two interval
+    * joins — which share no code with the keyed merge the pipeline runs in
+    * both modes, so no parity check here compares that merge with itself.
+    */
+  private def perStageTransfers(receipts: DataFrame, outcomes: DataFrame,
+                                actions: DataFrame): DataFrame =
+    TokenPipeline.transfers(TokenPipeline.joined(TokenPipeline.dedupReceipts(receipts, cfg),
+      TokenPipeline.dedupOutcomes(outcomes, cfg), TokenPipeline.dedupActions(actions, cfg),
+      cfg), cfg)
+
   private lazy val batchTransfers =
-    TokenPipeline.transfersFromRaw(TokenFixture.receipts(spark),
-      TokenFixture.outcomes(spark), TokenFixture.actions(spark), cfg).cache()
+    perStageTransfers(TokenFixture.receipts(spark), TokenFixture.outcomes(spark),
+      TokenFixture.actions(spark)).cache()
 
   test("streaming transfers across 3 micro-batches equal the batch result") {
     val (streamed, _) = runStreaming("tx_parity", nChunks = 3)
@@ -187,9 +199,9 @@ class StreamingParitySpec extends SparkSpec {
       val (legs, store) = runSteps(s"tx_prop_$runs", steps, Some(restartAfter))
       def topic(t: Int, schema: org.apache.spark.sql.types.StructType) =
         StreamingPipeline.parseJson(steps.flatMap(s => Seq(s._1, s._2, s._3)(t)).toDF("value"), schema)
-      val batch = TokenPipeline.transfersFromRaw(topic(0, NearSchemas.receipts),
-        topic(1, NearSchemas.executionOutcomes), topic(2, NearSchemas.actionReceiptActions),
-        cfg).cache()
+      val batch = perStageTransfers(topic(0, NearSchemas.receipts),
+        topic(1, NearSchemas.executionOutcomes), topic(2, NearSchemas.actionReceiptActions))
+        .cache()
       try {
         val balances = TokenPipeline.balances(batch).collect()
           .map(BalanceUpsert.BalanceRow.fromRow).map(b => b.account -> b).toMap
@@ -381,10 +393,10 @@ class StreamingParitySpec extends SparkSpec {
         feed(SyntheticCdc.outcomesWithDups(base), "executed_in_block_timestamp"),
         feed(SyntheticCdc.actionsWithDups(base), "receipt_included_in_block_timestamp"))
       val (streamed, store) = runStreaming("sf_parity", nChunks = 4, feeds)
-      val batch = canonical(TokenPipeline.transfersFromRaw(
+      val batch = canonical(perStageTransfers( // same token address as the fixture cfg
         SyntheticCdc.receiptsWithDups(base),
         SyntheticCdc.outcomesWithDups(base),
-        SyntheticCdc.actionsWithDups(base), cfg)) // same token address as the fixture cfg
+        SyntheticCdc.actionsWithDups(base)))
       assert(streamed.size === batch.size,
         s"streamed ${streamed.size} vs batch ${batch.size}")
       assert(streamed === batch)
