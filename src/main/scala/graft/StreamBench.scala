@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -279,6 +280,31 @@ object StreamBench {
     }
   }
 
+  /** The graph-maintenance benches' start: the corpus rows, its last
+    * quarter held out by id (`fresh`) and the pre-built (store, graph) pair
+    * over the rest. The stream-execution thread writes the pair and the
+    * driver thread reads it, so it sits in an AtomicReference: visibility
+    * doesn't ride on processAllAvailable's internal progress lock.
+    */
+  private final case class HeldOut(rows: Array[(Long, Array[Float])], cutoff: Long,
+    fresh: Array[(Long, Array[Float])], centroids: DataFrame,
+    maintained: AtomicReference[(DataFrame, DataFrame)])
+
+  private def heldOutPair(spark: SparkSession, sfDir: String): HeldOut = {
+    import spark.implicits._
+    import graft.operators.{Embeddings, Lineage}
+    import graft.queries.EmbeddingQueries.{K, NnSeedAssign, NumCentroids}
+    val all = Lineage.cut(spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding"))
+    val centroids = Lineage.cut(all.filter($"vec_id" < NumCentroids))
+    val rows = all.as[(Long, Array[Float])].collect()
+    val cutoff = rows.map(_._1).max - rows.length / 4
+    val store0 = Lineage.cut(all.filter($"vec_id" <= cutoff))
+    HeldOut(rows, cutoff, rows.filter(_._1 > cutoff).sortBy(_._1), centroids,
+      new AtomicReference((store0, Lineage.cut(Embeddings.nnDescentRound(store0,
+        Embeddings.knnGraphSeed(store0, centroids, NnSeedAssign, K), K)))))
+  }
+
   /** Graph-index MAINTENANCE throughput: the corpus minus its last quarter
     * is the pre-built (store, graph); the held-out vectors stream in as
     * micro-batches through [[graft.operators.Embeddings.graphIngestSink]]
@@ -291,22 +317,9 @@ object StreamBench {
   def runGraphIngest(spark: SparkSession, sfDir: String, chunks: Int): Result = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.{Embeddings, Lineage}
-    import graft.queries.EmbeddingQueries.{GsBeam, GsRounds, K, NProbe, NnSeedAssign, NumCentroids}
-    val all = Lineage.cut(spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding"))
-    val centroids = Lineage.cut(all.filter($"vec_id" < NumCentroids))
-    val rows = all.as[(Long, Array[Float])].collect()
-    val cutoff = rows.map(_._1).max - rows.length / 4
-    val fresh = rows.filter(_._1 > cutoff).sortBy(_._1)
-    // the maintained pair is WRITTEN by the stream-execution thread (inside
-    // foreachBatch) and READ here by the driver thread: hold it in an
-    // AtomicReference so visibility doesn't ride on processAllAvailable's
-    // internal progress lock (review catch)
-    val store0 = Lineage.cut(all.filter($"vec_id" <= cutoff))
-    val maintained = new java.util.concurrent.atomic.AtomicReference(
-      (store0, Lineage.cut(Embeddings.nnDescentRound(store0,
-        Embeddings.knnGraphSeed(store0, centroids, NnSeedAssign, K), K))))
+    import graft.operators.Embeddings
+    import graft.queries.EmbeddingQueries.{GsBeam, GsRounds, K, NProbe}
+    val HeldOut(_, _, fresh, centroids, maintained) = heldOutPair(spark, sfDir)
     val chunkSize = math.max(1, math.ceil(fresh.length.toDouble / chunks).toInt)
     val in = MemoryStream[(Long, Array[Float])]
     val q = Embeddings.graphIngestSink(in.toDF().toDF("vec_id", "embedding"),
@@ -343,23 +356,14 @@ object StreamBench {
   def runGraphMaintain(spark: SparkSession, sfDir: String, chunks: Int): Result = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.{Embeddings, Lineage}
-    import graft.queries.EmbeddingQueries.{GsBeam, GsRounds, K, NProbe, NnSeedAssign, NumCentroids}
-    val all = Lineage.cut(spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding"))
-    val centroids = Lineage.cut(all.filter($"vec_id" < NumCentroids))
-    val rows = all.as[(Long, Array[Float])].collect()
-    val cutoff = rows.map(_._1).max - rows.length / 4
-    val fresh = rows.filter(_._1 > cutoff).sortBy(_._1)
+    import graft.operators.Embeddings
+    import graft.queries.EmbeddingQueries.{GsBeam, GsRounds, K, NProbe, NumCentroids}
+    val HeldOut(rows, cutoff, fresh, centroids, maintained) = heldOutPair(spark, sfDir)
     // tombstones: a deterministic ~5% slice of the PRE-BUILT store, never
     // the centroid prefix (entry points stay live — the delete gate's rule)
     val tombs = rows.collect {
       case (id, _) if id <= cutoff && id >= NumCentroids && id % 20 == 7 => id
     }.sorted
-    val store0 = Lineage.cut(all.filter($"vec_id" <= cutoff))
-    val maintained = new java.util.concurrent.atomic.AtomicReference(
-      (store0, Lineage.cut(Embeddings.nnDescentRound(store0,
-        Embeddings.knnGraphSeed(store0, centroids, NnSeedAssign, K), K))))
     val swap = (s: DataFrame, g: DataFrame) => { maintained.set((s, g)); () }
     val inV = MemoryStream[(Long, Array[Float])]
     val inT = MemoryStream[Long]

@@ -736,14 +736,43 @@ object Embeddings {
     * aggregation every whole-corpus recall gate (graph ladder, MRL tiers,
     * two-stage rerank) reports through, so a tie/null-handling change lands
     * in all of them at once (the [[knnRecallOf]] philosophy at totals
-    * granularity).
+    * granularity). A ladder row puts its `label` (name → a String or Long
+    * value) first and each `costs` (name → frame) row count after, as
+    * (label?, hits, total, cost…). [[knnRecallTotalsSql]] is its oracle.
     */
-  def knnRecallTotals(exact: DataFrame, approx: DataFrame): DataFrame =
-    exact.alias("e")
+  def knnRecallTotals(exact: DataFrame, approx: DataFrame,
+                      label: Option[(String, Any)] = None,
+                      costs: Seq[(String, DataFrame)] = Nil): DataFrame = {
+    val totals = exact.alias("e")
       .join(approx.select(col("query_id"), col("neighbor_id")).alias("a"),
         col("e.query_id") === col("a.query_id") &&
           col("e.neighbor_id") === col("a.neighbor_id"), "left")
       .agg(count(col("a.neighbor_id")).as("hits"), count(lit(1)).as("total"))
+    costs.foldLeft(totals) { case (row, (name, f)) =>
+      row.crossJoin(broadcast(f.agg(count(lit(1)).as(name))))
+    }.select(label.map { case (name, v) => lit(v).as(name) }.toSeq ++
+      ("hits" +: "total" +: costs.map(_._1)).map(col): _*)
+  }
+
+  /** The DuckDB oracle of [[knnRecallTotals]] over two (query_id,
+    * neighbor_id) relations (CTE names or parenthesized subqueries); each
+    * cost is the summed row counts of its CTEs.
+    */
+  def knnRecallTotalsSql(exact: String, approx: String,
+                         label: Option[(String, Any)] = None,
+                         costs: Seq[(String, Seq[String])] = Nil): String = {
+    val lab = label.fold("") {
+      case (name, s: String) => s"'$s' AS $name, "
+      case (name, n: Long) => s"CAST($n AS BIGINT) AS $name, "
+      case (name, v) => throw new IllegalArgumentException(s"label $name: $v")
+    }
+    val cost = costs.map { case (name, ctes) =>
+      s", (${ctes.map(c => s"(SELECT count(*) FROM $c)").mkString(" + ")})::BIGINT AS $name"
+    }.mkString
+    s"""SELECT ${lab}count(a.neighbor_id)::BIGINT AS hits, count(*)::BIGINT AS total$cost
+       |FROM $exact e LEFT JOIN $approx a
+       |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id""".stripMargin
+  }
 
   /** Pair recall of a blocked (vec_a, vec_b) pair set vs an exact baseline
     * (usually [[cosineNearDupPairs]]): one row of integers (|blocked ∩
@@ -872,21 +901,10 @@ object Embeddings {
       .union(twoHop).distinct()
   }
 
-  /** Per-stage graph recall vs the exact kNN of a deterministic 1/`mod` node
-    * sample (the [[pairRecallOfSampled]] economics: the brute-force
-    * baseline runs only on sample×corpus while the graph under measurement
-    * covers the full corpus), WITH each stage's price beside its payoff:
-    * `n_scored` = candidate pairs the stage's builder rescored (the cost
-    * driver at scale) and `n_edges` = the resulting graph size. Output: one
-    * (stage, hits, total, n_scored, n_edges) row per stage — integers, so
-    * both the recall ladder and its cost curve are hash-checkable data.
-    */
-  def knnGraphRecall(vectors: DataFrame,
-                     stages: Seq[(String, DataFrame, DataFrame)],
-                     k: Int, mod: Int, rem: Int): DataFrame =
-    knnGraphRecallWith(sampleExact(vectors, k, mod, rem), stages)
-
-  /** The exact baseline [[knnGraphRecall]] ranks against — exposed so a gate
+  /** The exact baseline [[knnGraphRecallWith]] ranks against: the exact kNN
+    * of a deterministic 1/`mod` node sample (the [[pairRecallOfSampled]]
+    * economics: the brute-force baseline runs only on sample×corpus while
+    * the graph under measurement covers the full corpus) — exposed so a gate
     * can materialize it CONCURRENTLY with its build ladder (the baseline
     * shares nothing with the ladder's rounds, so overlapped it hides under
     * them; guide §2.6).
@@ -897,38 +915,27 @@ object Embeddings {
       .select(col("query_id"), col("neighbor_id"))
   }
 
-  /** [[knnGraphRecall]] against a caller-provided exact baseline frame. */
+  /** Per-stage graph recall vs an exact baseline (usually [[sampleExact]]),
+    * WITH each stage's price beside its payoff: `n_scored` = candidate pairs
+    * the stage's builder rescored (the cost driver at scale) and `n_edges` =
+    * the resulting graph size. Output: one (stage, hits, total, n_scored,
+    * n_edges) row per stage — integers, so both the recall ladder and its
+    * cost curve are hash-checkable data.
+    */
   def knnGraphRecallWith(exact: DataFrame,
                          stages: Seq[(String, DataFrame, DataFrame)]): DataFrame =
     stages.map { case (label, g, cands) =>
-      knnRecallTotals(exact, g)
-        .crossJoin(broadcast(cands.agg(count(lit(1)).as("n_scored"))))
-        .crossJoin(broadcast(g.agg(count(lit(1)).as("n_edges"))))
-        .select(lit(label).as("stage"), col("hits"), col("total"),
-          col("n_scored"), col("n_edges"))
+      knnRecallTotals(exact, g, Some("stage" -> label),
+        Seq("n_scored" -> cands, "n_edges" -> g))
     }.reduce(_.unionByName(_))
-
-  /** [[graphSearchSeed]] + [[graphSearchWaves]] for a consumer that reads
-    * ONLY the final visited set (the pure-serve path): per-round `fresh`
-    * frames are left lazy (their
-    * sole consumer is the score join feeding the round's visited cut) and the
-    * last round's visited is left lazy too (its sole consumer is the caller's
-    * one top-k job) — the serve pays `rounds − 1` checkpoint jobs instead of
-    * `2 × rounds`. Identical rows; recall/cost gates, which count each
-    * round's `fresh` as a second consumer, keep the cutting form.
-    */
-  private def graphSearchFinal(vectors: DataFrame, queries: DataFrame,
-                               graph: DataFrame, centroids: DataFrame,
-                               nProbe: Int, beam: Int, rounds: Int): DataFrame = {
-    val (visited0, entries) = graphSearchSeed(vectors, queries, centroids, nProbe)
-    graphSearchWaves(vectors, queries, graph, visited0, entries, beam, rounds,
-      cutFresh = false, cutLast = false).last._2
-  }
 
   /** The beam-INDEPENDENT seed of the search — the IVF entry probe and its
     * exact scores, cut once: (visited₀, entries). Kept apart from
     * [[graphSearchWaves]] so [[graphSearchSweep]] pays it once across all
-    * widths (the oracle hoists its twin, `gsProbeCtes`, identically).
+    * widths (the oracle hoists its twin, `gsProbeCtes`, identically), and
+    * so a gate can compute it concurrently with whatever produces the graph
+    * it serves: the seed depends only on (queries, centroids, entry-node
+    * embeddings).
     */
   private[graft] def graphSearchSeed(vectors: DataFrame, queries: DataFrame,
                                      centroids: DataFrame,
@@ -982,7 +989,9 @@ object Embeddings {
     * visitedSoFar, freshlyScored) triple per stage so
     * the recall gate can price each wave: n_scored = |freshlyScored| is the
     * number of exact distance evaluations the wave paid — the serving-cost
-    * axis of the ladder.
+    * axis of the ladder. Every caller reads the LAST round's visited set
+    * once (one top-k), so it is left lazy: the search pays `rounds − 1`
+    * visited cuts.
     *
     * ENTRY-PATH TRADEOFF (NSW + IVF seed vs HNSW's layer hierarchy): this
     * graph is single-layer, entered through the IVF centroid probe — the
@@ -1002,10 +1011,9 @@ object Embeddings {
     * hard-codes).
     */
   private def graphSearchWaves(vectors: DataFrame, queries: DataFrame,
-                               graph: DataFrame, visited0: DataFrame,
-                               entries: DataFrame, beam: Int, rounds: Int,
-                               cutFresh: Boolean = true,
-                               cutLast: Boolean = true): Seq[(String, DataFrame, DataFrame)] = {
+                               graph: DataFrame, seed: (DataFrame, DataFrame),
+                               beam: Int, rounds: Int,
+                               cutFresh: Boolean): Seq[(String, DataFrame, DataFrame)] = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), l2Norm(col("embedding")).as("q_norm"))
     val v = vectors.select(col("vec_id").as("neighbor_id"),
@@ -1018,8 +1026,8 @@ object Embeddings {
     val edges = graph.select(col("query_id").as("node_id"),
       col("neighbor_id").as("next_id"))
     val stages = Seq.newBuilder[(String, DataFrame, DataFrame)]
-    var visited = visited0
-    stages += (("seed", visited, entries))
+    var visited = seed._1
+    stages += (("seed", visited, seed._2))
     var r = 1
     while (r <= rounds) {
       val frontier = topKPerQuery(visited, beam)
@@ -1036,45 +1044,68 @@ object Embeddings {
       val freshRaw = expand.join(visited.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_anti")
       val fresh = if (cutFresh) Lineage.cut(freshRaw) else freshRaw
-      // intermediate rounds are always cut (round r+1 reads visited three
-      // times — frontier top-k, anti-join, union arm — and the plan would
-      // grow 3^rounds without the truncation); the LAST round's visited has
-      // no successor round, so a single-consumer caller skips its cut
+      // intermediate rounds are cut (round r+1 reads visited three times —
+      // frontier top-k, anti-join, union arm — and the plan would grow
+      // 3^rounds without the truncation); the last round has no successor
       val vis = visited.unionByName(score(fresh))
-      visited = if (r == rounds && !cutLast) vis else Lineage.cut(vis)
+      visited = if (r == rounds) vis else Lineage.cut(vis)
       stages += ((s"round$r", visited, fresh))
       r += 1
     }
     stages.result()
   }
 
-  /** The serving cut of [[graphSearchFinal]]: per-query top-`k` of
-    * everything the search scored, as (query_id, neighbor_id, rank).
+  /** The graph SERVE: per-query top-`k` of everything the beam search
+    * scored, as (query_id, neighbor_id, rank). Only the final visited set is
+    * read, so per-round `fresh` frames stay lazy (their sole consumer is the
+    * score join feeding the round's visited cut) — the serve pays
+    * `rounds − 1` checkpoint jobs instead of `2 × rounds`. `seed` is a
+    * pre-computed [[graphSearchSeed]] ((visited₀, entries)); when given,
+    * `centroids` and `nProbe` are unused. Identical answers either way.
     */
   def graphSearch(vectors: DataFrame, queries: DataFrame, graph: DataFrame,
                   centroids: DataFrame, nProbe: Int, beam: Int, rounds: Int,
-                  k: Int): DataFrame =
+                  k: Int, seed: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+    val s = seed.getOrElse(graphSearchSeed(vectors, queries, centroids, nProbe))
     topKPerQuery(
-      graphSearchFinal(vectors, queries, graph, centroids, nProbe, beam,
-        rounds), k)
+      graphSearchWaves(vectors, queries, graph, s, beam, rounds, cutFresh = false).last._2, k)
+  }
 
-  /** [[graphSearch]] over a pre-computed entry seed — the serve-side twin of
-    * [[graphSearchWithCostFrom]]'s seam: the seed depends only on (queries,
-    * centroids, entry-node embeddings), so a gate can compute it concurrently
-    * with whatever produces the graph it serves. Identical answers.
+  /** One serve's ANSWERS and its COST from a single stages pass, over a
+    * pre-computed [[graphSearchSeed]]: the per-query top-`k` plus every
+    * candidate the search exact-scored (seed probe + each wave's fresh
+    * candidates; its row count is the [[graphSearchSweep]] cost axis,
+    * n_scored). A gate serving SEVERAL graph variants against the SAME query
+    * set pays the IVF entry probe once this way: entry nodes are centroids,
+    * so any arm whose store keeps the centroid prefix live (every
+    * maintenance gate does) shares the identical seed frame.
+    *
+    * `excluded` is the production delete story BEFORE compaction: a
+    * tombstoned vector is anti-joined from the ANSWERS only, while the graph
+    * still ROUTES THROUGH it (its node and edges remain until
+    * [[graphDelete]] compacts) — so search connectivity and the scored cost
+    * equal the plain serve's, and the serve pays one anti-join on the final
+    * visited set (tombstones live beside the index as an id list; at 100 TB
+    * the anti-join is id-keyed and partition-local to the top-k cut).
     */
-  def graphSearchFromSeed(vectors: DataFrame, queries: DataFrame,
-                          graph: DataFrame, visited0: DataFrame,
-                          entries: DataFrame, beam: Int, rounds: Int,
-                          k: Int): DataFrame =
-    topKPerQuery(
-      graphSearchWaves(vectors, queries, graph, visited0, entries, beam,
-        rounds, cutFresh = false, cutLast = false).last._2, k)
+  private[graft] def graphSearchWithCostFrom(vectors: DataFrame, queries: DataFrame,
+                          graph: DataFrame, seed: (DataFrame, DataFrame),
+                          beam: Int, rounds: Int, k: Int,
+                          excluded: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val stages = graphSearchWaves(vectors, queries, graph, seed, beam, rounds,
+      cutFresh = true)
+    val finalVisited = excluded match {
+      case Some(t) => stages.last._2.join(
+        t.select(col("vec_id").as("neighbor_id")), Seq("neighbor_id"), "left_anti")
+      case None => stages.last._2
+    }
+    (topKPerQuery(finalVisited, k), stages.map(_._3).reduce(_.unionByName(_)))
+  }
 
   /** Per-wave recall of the beam search vs the exact top-`k`, with each
     * wave's exact-distance-evaluation count beside it — the (stage, hits,
     * total, n_scored) ladder that prices the beam/rounds choice the way
-    * [[knnGraphRecall]] prices the index build. All integers.
+    * [[knnGraphRecallWith]] prices the index build. All integers.
     */
   def graphSearchRecall(vectors: DataFrame, queries: DataFrame, graph: DataFrame,
                         centroids: DataFrame, nProbe: Int, beam: Int,
@@ -1085,17 +1116,14 @@ object Embeddings {
     // pool thread so it overlaps the serial wave cuts (guide §2.6)
     val fExact = Par.ckpt(knnExact(vectors, queries, k)
       .select(col("query_id"), col("neighbor_id")))
-    val (visited0, entries) = graphSearchSeed(vectors, queries, centroids, nProbe)
-    val stages = graphSearchWaves(vectors, queries, graph, visited0, entries,
-      beam, rounds, cutLast = false)
+    val stages = graphSearchWaves(vectors, queries, graph,
+      graphSearchSeed(vectors, queries, centroids, nProbe), beam, rounds,
+      cutFresh = true)
     val exact = Par.await(fExact)
-    stages
-      .map { case (label, vis, fresh) =>
-        knnRecallTotals(exact, topKPerQuery(vis, k))
-          .crossJoin(broadcast(fresh.agg(count(lit(1)).as("n_scored"))))
-          .select(lit(label).as("stage"), col("hits"), col("total"),
-            col("n_scored"))
-      }.reduce(_.unionByName(_))
+    stages.map { case (label, vis, fresh) =>
+      knnRecallTotals(exact, topKPerQuery(vis, k), Some("stage" -> label),
+        Seq("n_scored" -> fresh))
+    }.reduce(_.unionByName(_))
   }
 
   /** Beam-width SWEEP of the graph search — the [[ivfProbeSweep]] pattern
@@ -1118,19 +1146,15 @@ object Embeddings {
     // per-width wave chains are then independent of each other AND of the
     // exact baseline, so each runs on a pool thread (guide §2.6) — the
     // sweep pays the widest beam's chain, not the sum over widths
-    val (visited0, entries) = graphSearchSeed(vectors, queries, centroids, nProbe)
+    val seed = graphSearchSeed(vectors, queries, centroids, nProbe)
     val perBeam = beams.map { b =>
-      b -> Future(graphSearchWaves(vectors, queries, graph, visited0,
-        entries, b, rounds, cutLast = false))
+      b -> Future(graphSearchWithCostFrom(vectors, queries, graph, seed, b, rounds, k))
     }
     val exact = Par.await(fExact)
-    perBeam.map { case (b, fStages) =>
-      val stages = Par.await(fStages)
-      val scoredAll = stages.map(_._3).reduce(_.unionByName(_))
-      knnRecallTotals(exact, topKPerQuery(stages.last._2, k))
-        .crossJoin(broadcast(scoredAll.agg(count(lit(1)).as("n_scored"))))
-        .select(lit(b.toLong).as("beam"), col("hits"), col("total"),
-          col("n_scored"))
+    perBeam.map { case (b, fServe) =>
+      val (answers, scored) = Par.await(fServe)
+      knnRecallTotals(exact, answers, Some("beam" -> b.toLong),
+        Seq("n_scored" -> scored))
     }.reduce(_.unionByName(_))
   }
 
@@ -1155,17 +1179,14 @@ object Embeddings {
   def graphInsert(store: DataFrame, graph: DataFrame, newVectors: DataFrame,
                   centroids: DataFrame, nProbe: Int, beam: Int, rounds: Int,
                   k: Int, seed: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // `seed` is the batch's IVF entry probe ((visited₀, entries), the
-    // [[graphSearchSeed]] frames): it depends only on (store, batch,
-    // centroids) — NOT on the graph — so a gate that builds the graph on the
-    // same chain can compute it concurrently with the build and hand it in,
-    // taking the probe job off the build→insert critical path (the
-    // graphDeleteRecallQ shared-seed pattern). Identical frames either way.
-    val (vis0, ent) = seed.getOrElse(
-      graphSearchSeed(store, newVectors, centroids, nProbe))
-    val out = Lineage.cut(topKPerQuery(
-      graphSearchWaves(store, newVectors, graph, vis0, ent, beam, rounds,
-        cutFresh = false, cutLast = false).last._2, k))
+    // `seed` is the batch's IVF entry probe, handed to [[graphSearch]]: it
+    // depends only on (store, batch, centroids) — NOT on the graph — so a
+    // gate that builds the graph on the same chain can compute it
+    // concurrently with the build and hand it in, taking the probe job off
+    // the build→insert critical path (the graphDeleteRecallQ shared-seed
+    // pattern). Identical frames either way.
+    val out = Lineage.cut(graphSearch(store, newVectors, graph, centroids,
+      nProbe, beam, rounds, k, seed))
     val backCands = out.select(col("neighbor_id").as("query_id"),
       col("query_id").as("neighbor_id"))
     val affected = backCands.select("query_id").distinct()
@@ -1181,63 +1202,6 @@ object Embeddings {
       .unionByName(repruned.select(col("query_id"), col("neighbor_id"), col("rank")))
       .unionByName(out.select(col("query_id"), col("neighbor_id"), col("rank")))
   }
-
-  /** One serve's ANSWERS and its COST from a single stages pass: the
-    * per-query top-`k` plus the total exact-distance evaluations paid (seed
-    * probe + every wave's newly-scored candidates, the [[graphSearchSweep]]
-    * cost axis) as a 1-row (n_scored) frame. `excluded` applies the
-    * serve-time tombstone anti-join ([[graphSearchExcluding]] semantics) to
-    * the answers only — routing and therefore cost still pass through
-    * deleted nodes, which is exactly the overhead this pairing lets a gate
-    * put beside each variant's recall.
-    */
-  def graphSearchWithCost(vectors: DataFrame, queries: DataFrame,
-                          graph: DataFrame, centroids: DataFrame, nProbe: Int,
-                          beam: Int, rounds: Int, k: Int,
-                          excluded: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val (visited0, entries) = graphSearchSeed(vectors, queries, centroids, nProbe)
-    graphSearchWithCostFrom(vectors, queries, graph, visited0, entries, beam,
-      rounds, k, excluded)
-  }
-
-  /** [[graphSearchWithCost]] over a pre-computed entry seed — the seam that
-    * lets a gate serving SEVERAL graph variants against the SAME query set
-    * pay the IVF entry probe (and its exact entry scores) once: the seed
-    * depends only on (queries, centroids) plus the entry nodes' embeddings,
-    * and entry nodes ARE centroids, so any arm whose store keeps the
-    * centroid prefix live (every maintenance gate does — tombstones exclude
-    * the prefix by construction) shares the identical seed frame.
-    */
-  private[graft] def graphSearchWithCostFrom(vectors: DataFrame, queries: DataFrame,
-                          graph: DataFrame, visited0: DataFrame, entries: DataFrame,
-                          beam: Int, rounds: Int, k: Int,
-                          excluded: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val stages = graphSearchWaves(vectors, queries, graph, visited0, entries,
-      beam, rounds, cutLast = false)
-    val finalVisited = excluded match {
-      case Some(t) => stages.last._2.join(
-        t.select(col("vec_id").as("neighbor_id")), Seq("neighbor_id"), "left_anti")
-      case None => stages.last._2
-    }
-    (topKPerQuery(finalVisited, k),
-     stages.map(_._3).reduce(_.unionByName(_))
-       .agg(count(lit(1)).as("n_scored")))
-  }
-
-  /** [[graphSearch]] with a tombstone set excluded from the ANSWER — the
-    * production delete story BEFORE compaction: a deleted vector cannot be
-    * returned, but the graph still ROUTES THROUGH it (its node and edges
-    * remain until [[graphDelete]] compacts), so search connectivity is
-    * unchanged and the serve pays only one anti-join on the final visited
-    * set (tombstones live beside the index as an id list; at 100 TB the
-    * anti-join is id-keyed and partition-local to the top-k cut).
-    */
-  def graphSearchExcluding(vectors: DataFrame, queries: DataFrame,
-                           graph: DataFrame, centroids: DataFrame, nProbe: Int,
-                           beam: Int, rounds: Int, k: Int,
-                           tombstones: DataFrame): DataFrame =
-    graphSearchWithCost(vectors, queries, graph, centroids, nProbe, beam,
-      rounds, k, Some(tombstones))._1
 
   /** DELETE a tombstone batch from an existing kNN graph — [[graphInsert]]'s
     * counterpart, the compaction half of index freshness: deleted nodes'
@@ -1361,7 +1325,8 @@ object Embeddings {
     * rescore; with it the batch is provably empty. A production deployment
     * interleaves this sink with the insert sink on one maintained pair and
     * schedules [[graphDelete]]-style full compaction off the serving path;
-    * between compactions serves go through [[graphSearchExcluding]].
+    * between compactions serves go through [[graphSearchWithCostFrom]]'s
+    * tombstone anti-join.
     */
   def graphTombstoneSink(idStream: DataFrame, k: Int, checkpointDir: String)
                         (current: () => (DataFrame, DataFrame))

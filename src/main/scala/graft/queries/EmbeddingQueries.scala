@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, floor, lit, max, min, row_number, size, sum, when}
 import graft.operators.Embeddings
+import graft.operators.Embeddings.knnRecallTotalsSql
 import graft.sources.Tables
 
 /** Similarity search over `embeddings.parquet` (64-dim float vectors).
@@ -784,25 +785,20 @@ object EmbeddingQueries {
     val fExactQ = Future(graft.operators.Lineage.cut(
       Embeddings.knnExact(v, q, K).select(col("query_id"), col("neighbor_id"))))
     val fServedTopK = for { updated <- fUpdated; seedQ <- fSeedQ } yield
-      Embeddings.graphSearchFromSeed(v, q, updated, seedQ._1, seedQ._2,
-        GsBeam, GsRounds, K).select(col("query_id"), col("neighbor_id"))
+      Embeddings.graphSearch(v, q, updated, cents, NProbe, GsBeam, GsRounds, K,
+        seed = Some(seedQ)).select(col("query_id"), col("neighbor_id"))
     val (rebuilt, _) = gsIndex(spark, dir)
     val updated = Par.await(fUpdated)
     val exact = Par.await(fExact)
-    def stageRow(label: String, g: DataFrame): DataFrame =
-      Embeddings.knnRecallTotals(exact,
-          g.filter(col("query_id") > cutoff)
-            .select(col("query_id"), col("neighbor_id")))
-        .crossJoin(broadcast(g.agg(count(lit(1)).as("n_edges"))))
-        .select(lit(label).as("stage"), col("hits"), col("total"),
-          col("n_edges"))
-    val served = Embeddings.knnRecallTotals(Par.await(fExactQ),
-        Par.await(fServedTopK))
-      .crossJoin(broadcast(updated.agg(count(lit(1)).as("n_edges"))))
-      .select(lit("serve").as("stage"), col("hits"), col("total"),
-        col("n_edges"))
-    stageRow("insert", updated).unionByName(stageRow("rebuild", rebuilt))
-      .unionByName(served)
+    def inserted(g: DataFrame): DataFrame =
+      g.filter(col("query_id") > cutoff).select(col("query_id"), col("neighbor_id"))
+    Seq(("insert", exact, inserted(updated), updated),
+        ("rebuild", exact, inserted(rebuilt), rebuilt),
+        ("serve", Par.await(fExactQ), Par.await(fServedTopK), updated))
+      .map { case (label, e, answers, g) =>
+        Embeddings.knnRecallTotals(e, answers, Some("stage" -> label),
+          Seq("n_edges" -> g))
+      }.reduce(_.unionByName(_))
   }
 
   /** Deterministic tombstone predicate of the index-DELETE gate: ids
@@ -824,7 +820,7 @@ object EmbeddingQueries {
     * n_scored, n_edges) rows:
     *
     *   - `tombstoned`: the persisted full-corpus index [[gsIndex]] served
-    *     with the serve-time anti-join ([[Embeddings.graphSearchExcluding]])
+    *     with the serve-time anti-join ([[Embeddings.graphSearchWithCostFrom]])
     *     — deleted vectors can't be answers but still route; zero index
     *     maintenance paid, edge count unchanged;
     *   - `compacted`: [[Embeddings.graphDelete]]'s connect-around compaction
@@ -871,38 +867,34 @@ object EmbeddingQueries {
     // consume it
     val fExact = Future(graft.operators.Lineage.cut(
       Embeddings.knnExact(live, q, K).select(col("query_id"), col("neighbor_id"))))
-    val fTomb = fSeed.map { case (vis0, ent) =>
-      Embeddings.graphSearchWithCostFrom(v, q, graph, vis0, ent,
+    val fTomb = fSeed.map { seed =>
+      Embeddings.graphSearchWithCostFrom(v, q, graph, seed,
         GsBeam, GsRounds, K, Some(tomb))
     }
     val fComp = Future(graft.operators.Lineage.cut(
         Embeddings.graphDelete(v, graph, tomb, K)))
-      .flatMap { compacted => fSeed.map { case (vis0, ent) =>
+      .flatMap { compacted => fSeed.map { seed =>
         (compacted, Embeddings.graphSearchWithCostFrom(live, q, compacted,
-          vis0, ent, GsBeam, GsRounds, K))
+          seed, GsBeam, GsRounds, K))
       } }
     val fReb = Future(graft.operators.Lineage.cut(
         Embeddings.nnDescentRound(live,
           graft.operators.Lineage.cut(
             Embeddings.knnGraphSeed(live, cents, NnSeedAssign, K)), K)))
-      .flatMap { rebuilt => fSeed.map { case (vis0, ent) =>
+      .flatMap { rebuilt => fSeed.map { seed =>
         (rebuilt, Embeddings.graphSearchWithCostFrom(live, q, rebuilt,
-          vis0, ent, GsBeam, GsRounds, K))
+          seed, GsBeam, GsRounds, K))
       } }
     val exact = Par.await(fExact)
-    def stageRow(label: String, served: DataFrame, scored: DataFrame,
-                 g: DataFrame): DataFrame =
-      Embeddings.knnRecallTotals(exact, served)
-        .crossJoin(broadcast(scored))
-        .crossJoin(broadcast(g.agg(count(lit(1)).as("n_edges"))))
-        .select(lit(label).as("stage"), col("hits"), col("total"),
-          col("n_scored"), col("n_edges"))
-    val (servedTomb, scoredTomb) = Par.await(fTomb)
-    val (compacted, (servedComp, scoredComp)) = Par.await(fComp)
-    val (rebuilt, (servedReb, scoredReb)) = Par.await(fReb)
-    stageRow("tombstoned", servedTomb, scoredTomb, graph)
-      .unionByName(stageRow("compacted", servedComp, scoredComp, compacted))
-      .unionByName(stageRow("rebuilt", servedReb, scoredReb, rebuilt))
+    val tombServe = Par.await(fTomb)
+    val (compacted, compServe) = Par.await(fComp)
+    val (rebuilt, rebServe) = Par.await(fReb)
+    Seq(("tombstoned", tombServe, graph), ("compacted", compServe, compacted),
+        ("rebuilt", rebServe, rebuilt))
+      .map { case (label, (served, scored), g) =>
+        Embeddings.knnRecallTotals(exact, served, Some("stage" -> label),
+          Seq("n_scored" -> scored, "n_edges" -> g))
+      }.reduce(_.unionByName(_))
   }
 
   /** Candidate-pool depth of the binary-quantization serve (the full-dim
@@ -950,8 +942,8 @@ object EmbeddingQueries {
     val v = vectors(spark, dir); val q = queryVectors(spark, dir)
     val exact = Embeddings.knnExact(v, q, K).select(col("query_id"), col("neighbor_id"))
     MrlDims.map { d =>
-      Embeddings.knnRecallTotals(exact, Embeddings.knnExactPrefix(v, q, K, d))
-        .select(lit(d.toLong).as("dim"), col("hits"), col("total"))
+      Embeddings.knnRecallTotals(exact, Embeddings.knnExactPrefix(v, q, K, d),
+        Some("dim" -> d.toLong))
     }.reduce(_.unionByName(_))
   }
 
@@ -1769,7 +1761,8 @@ object EmbeddingQueries {
   /** The delete-gate oracle's chain: the deterministic tombstone set, the
     * live corpus and the exact baseline over it, then the three stages —
     * the full-graph search's visited set anti-filtered
-    * ([[Embeddings.graphSearchExcluding]]'s replay over `vis2`),
+    * ([[Embeddings.graphSearchWithCostFrom]]'s tombstone anti-join replayed
+    * over `vis2`),
     * [[Embeddings.graphDelete]]'s connect-around compaction replayed edge
     * for edge (kept minus broken, patch candidates through the deleted
     * node's list, re-prune by the shared cosine) with a serve over the
@@ -2105,130 +2098,66 @@ object EmbeddingQueries {
             JOIN nrm nv ON nv.vec_id = p.neighbor_id)
           WHERE rank <= $K)"""
 
+  /** A node_id-keyed graph CTE (with an optional WHERE) as the (query_id,
+    * neighbor_id) relation [[Embeddings.knnRecallTotalsSql]] joins.
+    */
+  private def byNode(from: String): String =
+    s"(SELECT node_id AS query_id, neighbor_id FROM $from)"
+
   val oracleSql: Map[String, String] =
     RecallTwins.knnOracle(knnTwins) ++ RecallTwins.pairOracle(pairTwins) ++ Map(
     "q_mrl_rerank" -> (base + mrlServeCtes +
       "SELECT query_id, neighbor_id, rank FROM mrlrr"),
-    "q_mrl_rerank_recall" -> (base + mrlServeCtes +
-      """SELECT count(m.neighbor_id)::BIGINT AS hits, count(*)::BIGINT AS total
-         FROM exact e LEFT JOIN mrlrr m
-           ON m.query_id = e.query_id AND m.neighbor_id = e.neighbor_id"""),
+    "q_mrl_rerank_recall" -> (base + mrlServeCtes + knnRecallTotalsSql("exact", "mrlrr")),
     "q_mrl_recall" -> (base + mrlCtes + MrlDims.map(d =>
-      s"""SELECT CAST($d AS BIGINT) AS dim, count(m.neighbor_id)::BIGINT AS hits,
-                 count(*)::BIGINT AS total
-          FROM exact e LEFT JOIN mrl$d m
-            ON m.query_id = e.query_id AND m.neighbor_id = e.neighbor_id""")
-      .mkString(" UNION ALL ")),
+      knnRecallTotalsSql("exact", s"mrl$d", Some("dim" -> d.toLong))).mkString(" UNION ALL ")),
     "q_bq_rerank" -> (base + bqCtes +
       "SELECT query_id, neighbor_id, rank FROM bqrr"),
-    "q_bq_recall" -> (base + bqCtes +
-      """SELECT count(m.neighbor_id)::BIGINT AS hits, count(*)::BIGINT AS total
-         FROM exact e LEFT JOIN bqrr m
-           ON m.query_id = e.query_id AND m.neighbor_id = e.neighbor_id"""),
+    "q_bq_recall" -> (base + bqCtes + knnRecallTotalsSql("exact", "bqrr")),
     "q_graph_sweep" -> (base + nnGraphCtes + gsProbeCtes +
       GsSweepBeams.map(b => gsWaveCtes(b, s"_b$b")).mkString +
       GsSweepBeams.map { b =>
         s""", ${gsTopCte(s"top_b$b", s"vis2_b$b", K.toString)}"""
       }.mkString + " " +
       GsSweepBeams.map { b =>
-        s"""SELECT CAST($b AS BIGINT) AS beam, count(t.neighbor_id)::BIGINT AS hits,
-                  count(*)::BIGINT AS total,
-                  ((SELECT count(*) FROM gs0) + (SELECT count(*) FROM sc1_b$b)
-                    + (SELECT count(*) FROM sc2_b$b))::BIGINT AS n_scored
-           FROM exact e LEFT JOIN top_b$b t
-             ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id"""
+        knnRecallTotalsSql("exact", s"top_b$b", Some("beam" -> b.toLong),
+          Seq("n_scored" -> Seq("gs0", s"sc1_b$b", s"sc2_b$b")))
       }.mkString(" UNION ALL ")),
-    "q_graph_insert_recall" -> (base + nnGraphCtes + gsInsertCtes +
-      s""" SELECT 'insert' AS stage, count(m.neighbor_id)::BIGINT AS hits,
-                  count(*)::BIGINT AS total,
-                  (SELECT count(*) FROM upedges)::BIGINT AS n_edges
-          FROM nbx e LEFT JOIN (SELECT node_id, neighbor_id FROM upedges
-                                WHERE node_id > (SELECT cut FROM icut)) m
-            ON m.node_id = e.query_id AND m.neighbor_id = e.neighbor_id
-          UNION ALL
-          SELECT 'rebuild' AS stage, count(m.neighbor_id)::BIGINT AS hits,
-                 count(*)::BIGINT AS total,
-                 (SELECT count(*) FROM round1)::BIGINT AS n_edges
-          FROM nbx e LEFT JOIN (SELECT node_id, neighbor_id FROM round1
-                                WHERE node_id > (SELECT cut FROM icut)) m
-            ON m.node_id = e.query_id AND m.neighbor_id = e.neighbor_id
-          UNION ALL
-          SELECT 'serve' AS stage, count(m.neighbor_id)::BIGINT AS hits,
-                 count(*)::BIGINT AS total,
-                 (SELECT count(*) FROM upedges)::BIGINT AS n_edges
-          FROM exact e LEFT JOIN serve_m m
-            ON m.query_id = e.query_id AND m.neighbor_id = e.neighbor_id"""),
-    "q_graph_delete_recall" -> (base + nnGraphCtes + gsCtes + gsDeleteCtes +
-      s""" SELECT 'tombstoned' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                  count(*)::BIGINT AS total,
-                  ((SELECT count(*) FROM gs0) + (SELECT count(*) FROM sc1)
-                    + (SELECT count(*) FROM sc2))::BIGINT AS n_scored,
-                  (SELECT count(*) FROM round1)::BIGINT AS n_edges
-          FROM dexact e LEFT JOIN tomb_serve t
-            ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id
-          UNION ALL
-          SELECT 'compacted' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                 count(*)::BIGINT AS total,
-                 ((SELECT count(*) FROM gs0) + (SELECT count(*) FROM sc1_d)
-                   + (SELECT count(*) FROM sc2_d))::BIGINT AS n_scored,
-                 (SELECT count(*) FROM compd)::BIGINT AS n_edges
-          FROM dexact e LEFT JOIN serve_d t
-            ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id
-          UNION ALL
-          SELECT 'rebuilt' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                 count(*)::BIGINT AS total,
-                 ((SELECT count(*) FROM gs0) + (SELECT count(*) FROM sc1_r)
-                   + (SELECT count(*) FROM sc2_r))::BIGINT AS n_scored,
-                 (SELECT count(*) FROM round1_r)::BIGINT AS n_edges
-          FROM dexact e LEFT JOIN serve_r t
-            ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id"""),
+    "q_graph_insert_recall" -> (base + nnGraphCtes + gsInsertCtes + " " + Seq(
+      knnRecallTotalsSql("nbx", byNode("upedges WHERE node_id > (SELECT cut FROM icut)"),
+        Some("stage" -> "insert"), Seq("n_edges" -> Seq("upedges"))),
+      knnRecallTotalsSql("nbx", byNode("round1 WHERE node_id > (SELECT cut FROM icut)"),
+        Some("stage" -> "rebuild"), Seq("n_edges" -> Seq("round1"))),
+      knnRecallTotalsSql("exact", "serve_m", Some("stage" -> "serve"),
+        Seq("n_edges" -> Seq("upedges")))).mkString(" UNION ALL ")),
+    "q_graph_delete_recall" -> (base + nnGraphCtes + gsCtes + gsDeleteCtes + " " +
+      Seq(("tombstoned", "tomb_serve", "", "round1"),
+          ("compacted", "serve_d", "_d", "compd"),
+          ("rebuilt", "serve_r", "_r", "round1_r")).map { case (stage, served, sfx, g) =>
+        knnRecallTotalsSql("dexact", served, Some("stage" -> stage),
+          Seq("n_scored" -> Seq("gs0", s"sc1$sfx", s"sc2$sfx"), "n_edges" -> Seq(g)))
+      }.mkString(" UNION ALL ")),
     "q_graph_search_indexed" -> (base + nnGraphCtes + gsCtes +
       s""", ${gsTopCte("gsfinal", "vis2", K.toString)}
          SELECT query_id, neighbor_id, rn::BIGINT AS rank FROM gsfinal"""),
-    "q_graph_search_recall" -> (base + nnGraphCtes + gsCtes +
-      s""", ${gsTopCte("top0", "gs0", K.toString)},
-          ${gsTopCte("top1", "vis1", K.toString)},
-          ${gsTopCte("top2", "vis2", K.toString)}
-         SELECT 'seed' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM gs0)::BIGINT AS n_scored
-         FROM exact e LEFT JOIN top0 t
-           ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id
-         UNION ALL
-         SELECT 'round1' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM sc1)::BIGINT AS n_scored
-         FROM exact e LEFT JOIN top1 t
-           ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id
-         UNION ALL
-         SELECT 'round2' AS stage, count(t.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM sc2)::BIGINT AS n_scored
-         FROM exact e LEFT JOIN top2 t
-           ON t.query_id = e.query_id AND t.neighbor_id = e.neighbor_id"""),
+    "q_graph_search_recall" -> {
+      val stages = Seq(("seed", "gs0", "gs0"), ("round1", "vis1", "sc1"),
+        ("round2", "vis2", "sc2"))
+      base + nnGraphCtes + gsCtes + stages.map { case (stage, vis, _) =>
+        s", ${gsTopCte(s"top_$stage", vis, K.toString)}"
+      }.mkString + " " + stages.map { case (stage, _, scored) =>
+        knnRecallTotalsSql("exact", s"top_$stage", Some("stage" -> stage),
+          Seq("n_scored" -> Seq(scored)))
+      }.mkString(" UNION ALL ")
+    },
     "q_nndescent_graph" -> (base + nnCtes +
       "SELECT node_id, neighbor_id, rank::BIGINT AS rank FROM round1"),
     "q_nndescent_recall" -> (base + nnCtes +
-      """SELECT 'seed' AS stage, count(s.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM scand)::BIGINT AS n_scored,
-                (SELECT count(*) FROM seed)::BIGINT AS n_edges
-         FROM nn_exact e LEFT JOIN seed s
-           ON s.node_id = e.query_id AND s.neighbor_id = e.neighbor_id
-         UNION ALL
-         SELECT 'round1' AS stage, count(r.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM cand)::BIGINT AS n_scored,
-                (SELECT count(*) FROM round1)::BIGINT AS n_edges
-         FROM nn_exact e LEFT JOIN round1 r
-           ON r.node_id = e.query_id AND r.neighbor_id = e.neighbor_id
-         UNION ALL
-         SELECT 'round2' AS stage, count(r2.neighbor_id)::BIGINT AS hits,
-                count(*)::BIGINT AS total,
-                (SELECT count(*) FROM cand2)::BIGINT AS n_scored,
-                (SELECT count(*) FROM round2)::BIGINT AS n_edges
-         FROM nn_exact e LEFT JOIN round2 r2
-           ON r2.node_id = e.query_id AND r2.neighbor_id = e.neighbor_id"""),
+      Seq(("seed", "seed", "scand"), ("round1", "round1", "cand"),
+          ("round2", "round2", "cand2")).map { case (stage, g, cands) =>
+        knnRecallTotalsSql("nn_exact", byNode(g), Some("stage" -> stage),
+          Seq("n_scored" -> Seq(cands), "n_edges" -> Seq(g)))
+      }.mkString(" UNION ALL ")),
     "q_srp_stats" -> (srpBase +
       """SELECT band, sg AS sig, count(*)::BIGINT AS n_vecs,
                 (count(*) * 1000000) // (SELECT count(*) FROM v) AS share_e6

@@ -11,11 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AnnKernelSpec extends AnyFunSuite {
 
-  private def codeLinesOf(literal: String): Seq[String] = {
-    val re = new Regex(Regex.quote(literal))
+  private def codeLinesOf(literal: String): Seq[String] =
+    codeLinesMatching(new Regex(Regex.quote(literal)))
+
+  private def codeLinesMatching(re: Regex): Seq[String] =
     SourceScan.scalaFiles("src/main/scala")
       .flatMap(f => SourceScan.codeLines(f, re).map(n => s"$f:$n"))
-  }
 
   test("the centroid-probe ranking appears on exactly one code line of src/main") {
     val hits = codeLinesOf("""orderBy(col("c_score").desc, col("cent_id").asc)""")
@@ -26,5 +27,20 @@ class AnnKernelSpec extends AnyFunSuite {
   test("the assignment argmax appears on exactly one code line of src/main") {
     val hits = codeLinesOf("""max_by(struct(col("cent_id"), col("score"))""")
     assert(hits.size == 1, s"assignment argmax must be defined once, found at: ${hits.mkString(", ")}")
+  }
+
+  /** Every global recall row's oracle is written by
+    * `Embeddings.knnRecallTotalsSql`; a gate that pastes its own totals
+    * SELECT can drift from the Spark row on ties or NULLs. `total\b` keeps
+    * unrelated `total_*` columns out of the match.
+    */
+  test("the totals-row oracle SELECT appears on exactly one code line of src/main") {
+    val hits = codeLinesMatching(raw"count\(\*\)::BIGINT AS total\b".r)
+    assert(hits.size == 1, s"totals SELECT must be written once, found at: ${hits.mkString(", ")}")
+  }
+
+  test("the Spark recall-row cost column appears on exactly one code line of src/main") {
+    val hits = codeLinesMatching(raw"crossJoin\(broadcast\(.*count\(lit\(1\)\)\.as\(".r)
+    assert(hits.size == 1, s"recall-row cost column must be built once, found at: ${hits.mkString(", ")}")
   }
 }

@@ -155,6 +155,27 @@ class GraphSearchSpec extends SparkSpec {
     assert(seededForm === defaultForm)
   }
 
+  /** The serve-side twin of the seed seam: a gate may compute the queries'
+    * IVF entry seed concurrently with whatever produces the graph and hand
+    * it to [[Embeddings.graphSearch]] — the answers must equal the default
+    * (internally-seeded) form's.
+    */
+  test("graphSearch with an explicit pre-computed seed equals the default form") {
+    val queries = vectors.filter(col("vec_id") < EmbeddingQueries.NumQueries)
+    val g = graph
+    val seed = Embeddings.graphSearchSeed(vectors, queries, centroids,
+      EmbeddingQueries.NProbe)
+    def rows(df: DataFrame): Set[(Long, Long, Int)] =
+      df.as[(Long, Long, Int)].collect().toSet
+    val defaultForm = rows(Embeddings.graphSearch(vectors, queries, g, centroids,
+      EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K))
+    val seededForm = rows(Embeddings.graphSearch(vectors, queries, g, centroids,
+      EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K,
+      seed = Some(seed)))
+    assert(defaultForm.nonEmpty)
+    assert(seededForm === defaultForm)
+  }
+
   /** Streaming ingest parity ([[Embeddings.graphIngestSink]]): vectors
     * inserted across micro-batches must leave exactly the (store, graph)
     * that the same batched [[Embeddings.graphInsert]] sequence produces.
@@ -308,33 +329,56 @@ class GraphSearchSpec extends SparkSpec {
     ()
   }
 
-  /** Serve-time tombstoning ([[Embeddings.graphSearchExcluding]]): with an
-    * empty tombstone set the serve IS [[Embeddings.graphSearch]]; with one,
-    * no tombstoned id is ever an answer while the search still routes
-    * through deleted nodes (results stay ranked and bounded).
+  /** Serve-time tombstoning ([[Embeddings.graphSearchWithCostFrom]] with a
+    * tombstone set): with an empty tombstone set the answers ARE
+    * [[Embeddings.graphSearch]]'s; with one, no tombstoned id is ever an
+    * answer while the search still routes through deleted nodes (results
+    * stay ranked and bounded).
     */
-  test("graphSearchExcluding: anti-joins answers, identity on empty tombstones") {
+  test("tombstoned serve: anti-joins answers, identity on empty tombstones") {
     val queries = vectors.filter(col("vec_id") < EmbeddingQueries.NumQueries)
     val g = graph
     val none = Seq.empty[Long].toDF("vec_id")
     val plain = Embeddings.graphSearch(vectors, queries, g, centroids,
         EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K)
       .as[(Long, Long, Int)].collect().toSet
-    val id = Embeddings.graphSearchExcluding(vectors, queries, g, centroids,
-        EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K,
-        none)
-      .as[(Long, Long, Int)].collect().toSet
+    def excluding(tombstones: DataFrame): DataFrame =
+      Embeddings.graphSearchWithCostFrom(vectors, queries, g,
+        Embeddings.graphSearchSeed(vectors, queries, centroids, EmbeddingQueries.NProbe),
+        EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K, Some(tombstones))._1
+    val id = excluding(none).as[(Long, Long, Int)].collect().toSet
     assert(id === plain, "empty tombstone set changed the serve")
     val tombIds = plain.map(_._2).take(3)
-    val served = Embeddings.graphSearchExcluding(vectors, queries, g, centroids,
-        EmbeddingQueries.NProbe, EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K,
-        tombIds.toSeq.toDF("vec_id"))
-      .as[(Long, Long, Int)].collect()
+    val served = excluding(tombIds.toSeq.toDF("vec_id")).as[(Long, Long, Int)].collect()
     assert(!served.exists(r => tombIds(r._2)), "a tombstoned id was served")
     served.groupBy(_._1).foreach { case (q, rows) =>
       assert(rows.length <= K)
       assert(rows.map(_._3).sorted.toSeq === (1 to rows.length), s"ranks broken for $q")
     }
+  }
+
+  /** The route-through cost contract: tombstones are anti-joined from the
+    * answers only, so the search still expands through deleted nodes and
+    * exact-scores exactly the candidates the plain serve scores —
+    * `q_graph_delete_recall`'s tombstoned-vs-compacted n_scored gap is only
+    * meaningful if this holds.
+    */
+  test("tombstoned serve scores exactly what the plain serve scores") {
+    val queries = vectors.filter(col("vec_id") < EmbeddingQueries.NumQueries)
+    val g = graph
+    val seed = Embeddings.graphSearchSeed(vectors, queries, centroids,
+      EmbeddingQueries.NProbe)
+    def serve(tombstones: Option[DataFrame]): (DataFrame, DataFrame) =
+      Embeddings.graphSearchWithCostFrom(vectors, queries, g, seed,
+        EmbeddingQueries.GsBeam, EmbeddingQueries.GsRounds, K, tombstones)
+    val (plainAnswers, plainScored) = serve(None)
+    // tombstone nodes the search certainly reaches: the plain serve's answers
+    val tombIds = plainAnswers.select("neighbor_id").distinct().as[Long].collect()
+      .sorted.take(10)
+    val (answers, scoredCost) = serve(Some(tombIds.toSeq.toDF("vec_id")))
+    assert(tombIds.nonEmpty && answers.count() > 0)
+    assert(scoredCost.count() === plainScored.count(),
+      "tombstones changed the scored cost: routing no longer passes through them")
   }
 
   /** Streaming delete parity ([[Embeddings.graphTombstoneSink]]): tombstone

@@ -18,8 +18,8 @@ class NnDescentSpec extends SparkSpec {
   private val K = EmbeddingQueries.K
 
   private def recallMap(stages: Seq[(String, DataFrame, DataFrame)]): Map[String, Long] =
-    Embeddings.knnGraphRecall(vectors, stages, K,
-        EmbeddingQueries.NnSampleMod, EmbeddingQueries.NnSampleRem)
+    Embeddings.knnGraphRecallWith(Embeddings.sampleExact(vectors, K,
+        EmbeddingQueries.NnSampleMod, EmbeddingQueries.NnSampleRem), stages)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("one NN-Descent round strictly improves sampled recall over the multi-probe seed") {
