@@ -301,8 +301,8 @@ object StreamBench {
     val cutoff = rows.map(_._1).max - rows.length / 4
     val store0 = Lineage.cut(all.filter($"vec_id" <= cutoff))
     HeldOut(rows, cutoff, rows.filter(_._1 > cutoff).sortBy(_._1), centroids,
-      new AtomicReference((store0, Lineage.cut(Embeddings.nnDescentRound(store0,
-        Embeddings.knnGraphSeed(store0, centroids, NnSeedAssign, K), K)))))
+      new AtomicReference((store0, Embeddings.nnDescent(store0,
+        Embeddings.knnGraphSeed(store0, centroids, NnSeedAssign, K), K, 1).graph)))
   }
 
   /** Graph-index MAINTENANCE throughput: the corpus minus its last quarter

@@ -25,18 +25,9 @@ case class DotProductExpression(left: Expression, right: Expression)
   // covariant return: AbstractDataType is private[sql], DataType suffices
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProductExpression.dot(a.asInstanceOf[ArrayData].toFloatArray(),
+      b.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -61,6 +52,20 @@ case class DotProductExpression(left: Expression, right: Expression)
 }
 
 object DotProductExpression {
+  /** The dot-product kernel every Scala caller shares — the interpreted
+    * path above, NN-Descent's driver rounds, MMR selection: each float
+    * widens to double, products and the running sum in array order, over
+    * the shorter array. The codegen template in `doGenCode` is its only
+    * other spelling.
+    */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
   /** Column API: `dotF($"a", $"b")` — double dot product of float arrays. */
   def dotF(a: Column, b: Column): Column =
     ColumnBridge.column(

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import graft.functions.DotProductExpression.dot
 
 /** Similarity search over an `Array[Float]` embedding column.
   *
@@ -737,22 +739,32 @@ object Embeddings {
     * two-stage rerank) reports through, so a tie/null-handling change lands
     * in all of them at once (the [[knnRecallOf]] philosophy at totals
     * granularity). A ladder row puts its `label` (name → a String or Long
-    * value) first and each `costs` (name → frame) row count after, as
+    * value) first and each `costs` (name → [[Cost]]) after, as
     * (label?, hits, total, cost…). [[knnRecallTotalsSql]] is its oracle.
     */
   def knnRecallTotals(exact: DataFrame, approx: DataFrame,
                       label: Option[(String, Any)] = None,
-                      costs: Seq[(String, DataFrame)] = Nil): DataFrame = {
+                      costs: Seq[(String, Cost)] = Nil): DataFrame = {
     val totals = exact.alias("e")
       .join(approx.select(col("query_id"), col("neighbor_id")).alias("a"),
         col("e.query_id") === col("a.query_id") &&
           col("e.neighbor_id") === col("a.neighbor_id"), "left")
       .agg(count(col("a.neighbor_id")).as("hits"), count(lit(1)).as("total"))
-    costs.foldLeft(totals) { case (row, (name, f)) =>
-      row.crossJoin(broadcast(f.agg(count(lit(1)).as(name))))
+    costs.foldLeft(totals) {
+      case (row, (name, Rows(f))) => row.crossJoin(broadcast(f.agg(count(lit(1)).as(name))))
+      case (row, (name, Count(n))) => row.withColumn(name, lit(n))
     }.select(label.map { case (name, v) => lit(v).as(name) }.toSeq ++
       ("hits" +: "total" +: costs.map(_._1)).map(col): _*)
   }
+
+  /** A cost column of a recall row ([[knnRecallTotals]]): a BIGINT count. */
+  sealed trait Cost
+  /** The rows of a frame, counted inside the gate's own job. */
+  final case class Rows(df: DataFrame) extends Cost
+  /** A count already known on the driver — a stage finished there has no
+    * frame of what it paid for.
+    */
+  final case class Count(n: Long) extends Cost
 
   /** The DuckDB oracle of [[knnRecallTotals]] over two (query_id,
     * neighbor_id) relations (CTE names or parenthesized subqueries); each
@@ -882,8 +894,9 @@ object Embeddings {
     * shuffles of O(n·k²) rows. Skew: a graph hub's degree is capped at 2k by
     * construction, so the pivot join cannot hot-spot beyond 4k² rows/node.
     * Convergence in practice is 3-5 rounds from an LSH/IVF seed; each round
-    * is this same plan, so rounds chain with a [[Lineage]] cut per round like
-    * ConnectedComponents.
+    * is this same plan. [[nnDescent]] chains rounds: over a small graph it
+    * runs them on the driver, otherwise it cuts each round's candidates and
+    * graph once.
     */
   def nnDescentRound(vectors: DataFrame, graph: DataFrame, k: Int): DataFrame =
     scoreCandidatesTopK(vectors, descentCandidates(graph), k)
@@ -899,6 +912,171 @@ object Embeddings {
       .filter(col("query_id") =!= col("neighbor_id"))
     edges.select(col("u").as("query_id"), col("v").as("neighbor_id"))
       .union(twoHop).distinct()
+  }
+
+  /** Largest vector count [[nnDescent]] descends on the driver.
+    *
+    * Priced by `graft.NnDescentBench` at `SPARK_GRAFT_CPUS=4` (4 vCPUs, 3 GB
+    * heap, K = 10, dimension 64, two rounds, one run per rung), distributed
+    * vs driver seconds and the heap the driver path's result holds:
+    * {{{
+    *   seed     nodes   scored (round 1)   distributed   driver   held B/node
+    *   ring     10^3          40,000           1.7 s      0.14 s      (noise)
+    *   random   10^3         328,849           2.3 s      0.19 s      (noise)
+    *   ring     10^4         400,000           4.2 s      0.50 s       1,374
+    *   random   10^4       3,915,431           8.2 s      1.26 s       2,055
+    *   ring     10^5       4,000,000          26.1 s      6.82 s       3,074
+    * }}}
+    * The driver wins on every rung and seed shape, so the bound is the
+    * driver's memory, not time. The result (the local seed and one local
+    * frame per round, K rows per node each) holds about 3 KB per node, and
+    * the rounds allocate a further 28-53 KB per node of short-lived
+    * garbage. 2¹⁵ nodes then hold about 100 MB, a twentieth of a 2 GB
+    * driver heap. Every graph in the registry (500 vectors at sf0.001 and
+    * sf0.01, 2,000 at sf0.1) is far below it.
+    */
+  val LocalDescentNodes: Long = 1L << 15
+
+  /** The (query_id, neighbor_id, rank) schema of a graph the distributed
+    * rounds produce, which a round finished on the driver returns too.
+    */
+  private val GraphSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("neighbor_id", LongType),
+    StructField("rank", IntegerType, nullable = false)))
+
+  /** [[nnDescent]]'s result: the seed as the rounds read it, materialized
+    * once (a cut or a local frame), and each round's graph beside the count
+    * of candidate pairs the round scored.
+    */
+  final case class Descent(seed: DataFrame, rounds: Seq[(DataFrame, Cost)]) {
+    /** The last round's graph (the seed when no round ran). */
+    def graph: DataFrame = rounds.lastOption.fold(seed)(_._1)
+  }
+
+  /** `rounds` NN-Descent rounds ([[nnDescentRound]]) over `seed` — the build
+    * entry of every graph-index builder. `vec_id` is a key of `vectors`.
+    *
+    * '''Driver finish.''' A distributed round is a candidate cut and a
+    * graph cut, chains of small stages whose cost over a small graph is
+    * scheduling, not work. When `vectors` has at most `localNodes` rows, the
+    * vectors and the seed are collected through [[Lineage.collect]] (one job
+    * each; the vector collect stops at `localNodes` + 1 rows, so it is also
+    * the size probe) and the rounds run on the calling thread
+    * ([[driverRounds]]) with the same candidates, the same
+    * [[graft.functions.DotProductExpression.dot]] kernel and the same
+    * [[graft.functions.TopK]] tie-break: every graph is row-identical to the
+    * distributed one, and each round's scored count comes back as a
+    * [[Count]]. Above the bound, and always under [[Lineage.withoutCuts]]
+    * (plan audits see the two-hop join), the rounds run distributed: the
+    * seed, then each round's candidates and graph, are cut once, and the
+    * scored count is the [[Rows]] of the candidate cut.
+    *
+    * @param localNodes the driver-finish bound: -1 always runs the
+    *                   distributed rounds, `Long.MaxValue` always finishes on
+    *                   the driver
+    */
+  def nnDescent(vectors: DataFrame, seed: DataFrame, k: Int, rounds: Int,
+                localNodes: Long = LocalDescentNodes): Descent = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val vecs = vectors.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    val local = for {
+      vs <- if (localNodes < 0) None
+            else Lineage.collect(
+              if (localNodes < Int.MaxValue) vecs.limit(localNodes.toInt + 1) else vecs)
+      if vs.length <= localNodes
+      es <- Lineage.collect(seed)
+    } yield (vs, es)
+    local match {
+      case Some((vs, es)) =>
+        val qi = seed.schema.fieldIndex("query_id")
+        val ni = seed.schema.fieldIndex("neighbor_id")
+        Descent(spark.createDataFrame(java.util.Arrays.asList(es: _*), seed.schema),
+          driverRounds(spark, vs, es.map(r => (r.getLong(qi), r.getLong(ni))), k, rounds))
+      case None =>
+        val g0 = Lineage.cut(seed)
+        var g = g0
+        Descent(g0, (1 to rounds).map { _ =>
+          val c = Lineage.cut(descentCandidates(g))
+          g = Lineage.cut(scoreCandidatesTopK(vectors, c, k))
+          (g, Rows(c))
+        })
+    }
+  }
+
+  /** [[nnDescent]]'s rounds on the driver over collected `vectors` and
+    * `seed` edges. A round's candidates of node u are its forward neighbors
+    * plus every w ≠ u two hops away over the undirected edge set
+    * ([[descentCandidates]]). They are counted before a candidate without a
+    * vector row drops out of scoring, as the distributed count is taken
+    * before the inner join.
+    */
+  private def driverRounds(spark: SparkSession, vectors: Array[(Long, Array[Float])],
+                           seed: Array[(Long, Long)], k: Int,
+                           rounds: Int): Seq[(DataFrame, Cost)] = {
+    // dense indices over every vector and every graph endpoint, in id order;
+    // a round ranks existing candidates, so the endpoints never grow
+    val ids = (vectors.iterator.map(_._1) ++ seed.iterator.flatMap(e => Iterator(e._1, e._2)))
+      .toArray.distinct.sorted
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val emb = new Array[Array[Float]](ids.length)
+    vectors.foreach { case (id, e) => emb(at(id)) = e }
+    val norm = emb.map(e => if (e == null) 0.0 else math.sqrt(dot(e, e)))
+    // the edges' targets grouped by source: node u's are out(off(u) until off(u + 1))
+    def adjacency(src: Array[Int], dst: Array[Int]): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](ids.length + 1)
+      src.foreach(u => off(u + 1) += 1)
+      for (i <- 0 until ids.length) off(i + 1) += off(i)
+      val fill = off.clone()
+      val out = new Array[Int](dst.length)
+      for (i <- src.indices) { out(fill(src(i))) = dst(i); fill(src(i)) += 1 }
+      (off, out)
+    }
+    val top = new graft.functions.TopK(k)
+    val cands = new Array[Int](ids.length)
+    var src = seed.map(e => at(e._1))
+    var dst = seed.map(e => at(e._2))
+    (1 to rounds).map { _ =>
+      val seen = Array.fill(ids.length)(-1) // seen(w) == u: w is already u's candidate
+      val (fo, fwd) = adjacency(src, dst)
+      val (uo, und) = adjacency(src ++ dst, dst ++ src)
+      val (nextSrc, nextDst) = (Array.newBuilder[Int], Array.newBuilder[Int])
+      val rows = new java.util.ArrayList[Row]()
+      var scored = 0L
+      var u = 0
+      while (u < ids.length) {
+        var m = 0
+        def add(w: Int): Unit = if (seen(w) != u) { seen(w) = u; cands(m) = w; m += 1 }
+        var i = fo(u)
+        while (i < fo(u + 1)) { add(fwd(i)); i += 1 }
+        i = uo(u)
+        while (i < uo(u + 1)) {
+          val p = und(i)
+          var j = uo(p)
+          while (j < uo(p + 1)) { if (und(j) != u) add(und(j)); j += 1 }
+          i += 1
+        }
+        scored += m
+        if (emb(u) != null) {
+          var buf = top.zero
+          i = 0
+          while (i < m) {
+            val w = cands(i)
+            if (emb(w) != null)
+              buf = top.reduce(buf, (dot(emb(u), emb(w)) / (norm(u) * norm(w)), ids(w)))
+            i += 1
+          }
+          for (((_, w), r) <- buf.zipWithIndex) {
+            nextSrc += u; nextDst += at(w)
+            rows.add(Row(ids(u), w, r + 1))
+          }
+        }
+        u += 1
+      }
+      src = nextSrc.result(); dst = nextDst.result()
+      (spark.createDataFrame(rows, GraphSchema), Count(scored))
+    }
   }
 
   /** The exact baseline [[knnGraphRecallWith]] ranks against: the exact kNN
@@ -923,10 +1101,10 @@ object Embeddings {
     * cost curve are hash-checkable data.
     */
   def knnGraphRecallWith(exact: DataFrame,
-                         stages: Seq[(String, DataFrame, DataFrame)]): DataFrame =
-    stages.map { case (label, g, cands) =>
+                         stages: Seq[(String, DataFrame, Cost)]): DataFrame =
+    stages.map { case (label, g, scored) =>
       knnRecallTotals(exact, g, Some("stage" -> label),
-        Seq("n_scored" -> cands, "n_edges" -> g))
+        Seq("n_scored" -> scored, "n_edges" -> Rows(g)))
     }.reduce(_.unionByName(_))
 
   /** The beam-INDEPENDENT seed of the search — the IVF entry probe and its
@@ -982,7 +1160,8 @@ object Embeddings {
     * stage touches all vectors except the id-keyed score join's build side;
     * nothing is quadratic in the corpus. Per-wave [[Lineage]] cuts
     * materialize the visited set once (it is read by the next beam, the
-    * anti-join, and the union — the [[nnDescentRound]] chaining pattern).
+    * anti-join, and the union — as [[nnDescent]]'s distributed rounds cut
+    * theirs).
     *
     * [[graphSearchSeed]] makes the entry probe; this runs the per-width
     * expansion waves over its visited set. Returns one (label,
@@ -1122,7 +1301,7 @@ object Embeddings {
     val exact = Par.await(fExact)
     stages.map { case (label, vis, fresh) =>
       knnRecallTotals(exact, topKPerQuery(vis, k), Some("stage" -> label),
-        Seq("n_scored" -> fresh))
+        Seq("n_scored" -> Rows(fresh)))
     }.reduce(_.unionByName(_))
   }
 
@@ -1154,7 +1333,7 @@ object Embeddings {
     perBeam.map { case (b, fServe) =>
       val (answers, scored) = Par.await(fServe)
       knnRecallTotals(exact, answers, Some("beam" -> b.toLong),
-        Seq("n_scored" -> scored))
+        Seq("n_scored" -> Rows(scored)))
     }.reduce(_.unionByName(_))
   }
 
@@ -1997,11 +2176,6 @@ object Embeddings {
       // NOT list_contains exclusion drops every copy after the first, and
       // per-index selection state would otherwise emit the id twice
       val cs = it.toArray.distinctBy(_._2)
-      def dot(a: Array[Float], b: Array[Float]): Double = {
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        s
-      }
       val qe = cs.head._4
       val qn = math.sqrt(dot(qe, qe))
       val ids = cs.map(_._2)

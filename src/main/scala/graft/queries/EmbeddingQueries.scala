@@ -415,11 +415,7 @@ object EmbeddingQueries {
     * O(n·k²) equi-join plan).
     */
   def nnDescentGraph(spark: SparkSession, dir: String): DataFrame =
-    // cut the seed: the round consumes the graph ~5x (forward ∪ reverse
-    // edges self-joined + the candidate union), so the uncut plan replays
-    // the bucket self-join per consumer (measured 2.9 -> 1.9 s at sf0.1)
-    Embeddings.nnDescentRound(vectors(spark, dir),
-        graft.operators.Lineage.cut(nnSeed(spark, dir)), K)
+    Embeddings.nnDescent(vectors(spark, dir), nnSeed(spark, dir), K, 1).graph
       .select(col("query_id").as("node_id"), col("neighbor_id"),
         col("rank").cast("long").as("rank"))
 
@@ -442,29 +438,15 @@ object EmbeddingQueries {
     // previously a lazy 3-consumer frame relying on AQE stage reuse)
     val fExact = Future(graft.operators.Lineage.cut(
       Embeddings.sampleExact(v, K, NnSampleMod, NnSampleRem)))
-    // per-round cuts (the ConnectedComponents chaining pattern): each round
-    // consumes its input graph ~5x and the next round replays the previous
-    // one multiplicatively — uncut, the 3-stage ladder measured 7.3 s warm
-    // at sf0.1; cut, each graph materializes once
     // the seed candidate frame is cut ONCE and both consumers (the scored
-    // seed graph and the n_scored count) read the materialization — the
-    // uncut form paid the bucket self-join twice (review catch)
+    // seed graph and the n_scored count) read the materialization; uncut,
+    // the bucket self-join ran twice. The descent collects or cuts the seed.
     val seedCands = graft.operators.Lineage.cut(Embeddings.seedCandidates(v,
       v.filter(col("vec_id") < NumCentroids), NnSeedAssign))
-    val seed = graft.operators.Lineage.cut(
-      Embeddings.knnGraphSeedFrom(v, seedCands, K))
-    val c1 = Embeddings.descentCandidates(seed)
-    val r1 = graft.operators.Lineage.cut(Embeddings.nnDescentRound(v, seed, K))
-    // round 2 follows the seed's cut-candidates-then-score pattern: c2 is
-    // cut once and read by BOTH consumers (round-2 scoring and the n_scored
-    // count), and r2 is cut because the unioned gate consumes it twice (the
-    // recall left-join and the n_edges count) — uncut, both relied on AQE
-    // stage reuse (review catch; measured at sf0.1: cut 5.5-5.8 s vs
-    // uncut 6.0-6.3 s warm, so the explicit cut pattern is also faster)
-    val c2 = graft.operators.Lineage.cut(Embeddings.descentCandidates(r1))
-    val r2 = graft.operators.Lineage.cut(Embeddings.knnGraphSeedFrom(v, c2, K))
+    val d = Embeddings.nnDescent(v, Embeddings.knnGraphSeedFrom(v, seedCands, K), K, 2)
     Embeddings.knnGraphRecallWith(Par.await(fExact),
-      Seq(("seed", seed, seedCands), ("round1", r1, c1), ("round2", r2, c2)))
+      ("seed", d.seed, Embeddings.Rows(seedCands)) +:
+        d.rounds.zipWithIndex.map { case ((g, scored), i) => (s"round${i + 1}", g, scored) })
   }
 
   /** Beam width and expansion rounds for the graph-ANN SERVING search
@@ -769,11 +751,9 @@ object EmbeddingQueries {
     val fSeedQ = Future(Embeddings.graphSearchSeed(v, q, cents, NProbe))
     val fUpdated = Future {
       // pre-insert index over the store (the persisted index's exact recipe,
-      // seeded within the store); cut per stage — the nnDescentRecall pattern
-      val graph0 = graft.operators.Lineage.cut(
-        Embeddings.nnDescentRound(store,
-          graft.operators.Lineage.cut(
-            Embeddings.knnGraphSeed(store, cents, NnSeedAssign, K)), K))
+      // seeded within the store)
+      val graph0 = Embeddings.nnDescent(store,
+        Embeddings.knnGraphSeed(store, cents, NnSeedAssign, K), K, 1).graph
       // the batch seed materialized while the build ran; await it only here
       graft.operators.Lineage.cut(
         Embeddings.graphInsert(store, graph0, batch, cents,
@@ -797,7 +777,7 @@ object EmbeddingQueries {
         ("serve", Par.await(fExactQ), Par.await(fServedTopK), updated))
       .map { case (label, e, answers, g) =>
         Embeddings.knnRecallTotals(e, answers, Some("stage" -> label),
-          Seq("n_edges" -> g))
+          Seq("n_edges" -> Embeddings.Rows(g)))
       }.reduce(_.unionByName(_))
   }
 
@@ -877,10 +857,8 @@ object EmbeddingQueries {
         (compacted, Embeddings.graphSearchWithCostFrom(live, q, compacted,
           seed, GsBeam, GsRounds, K))
       } }
-    val fReb = Future(graft.operators.Lineage.cut(
-        Embeddings.nnDescentRound(live,
-          graft.operators.Lineage.cut(
-            Embeddings.knnGraphSeed(live, cents, NnSeedAssign, K)), K)))
+    val fReb = Future(Embeddings.nnDescent(live,
+        Embeddings.knnGraphSeed(live, cents, NnSeedAssign, K), K, 1).graph)
       .flatMap { rebuilt => fSeed.map { seed =>
         (rebuilt, Embeddings.graphSearchWithCostFrom(live, q, rebuilt,
           seed, GsBeam, GsRounds, K))
@@ -893,7 +871,7 @@ object EmbeddingQueries {
         ("rebuilt", rebServe, rebuilt))
       .map { case (label, (served, scored), g) =>
         Embeddings.knnRecallTotals(exact, served, Some("stage" -> label),
-          Seq("n_scored" -> scored, "n_edges" -> g))
+          Seq("n_scored" -> Embeddings.Rows(scored), "n_edges" -> Embeddings.Rows(g)))
       }.reduce(_.unionByName(_))
   }
 

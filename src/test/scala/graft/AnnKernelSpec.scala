@@ -43,4 +43,15 @@ class AnnKernelSpec extends AnyFunSuite {
     val hits = codeLinesMatching(raw"crossJoin\(broadcast\(.*count\(lit\(1\)\)\.as\(".r)
     assert(hits.size == 1, s"recall-row cost column must be built once, found at: ${hits.mkString(", ")}")
   }
+
+  /** Every Scala dot product — the expression's interpreted path, the
+    * NN-Descent driver rounds, MMR selection — calls
+    * `DotProductExpression.dot`, so a driver-side score cannot drift from
+    * the distributed one. The codegen template (`(double) $a.getFloat`) is
+    * the kernel's only other spelling and does not match.
+    */
+  test("the float dot-product loop appears on exactly one code line of src/main") {
+    val hits = codeLinesMatching(raw"[\w.]+\(\w+\)\.toDouble \* [\w.]+\(\w+\)\.toDouble".r)
+    assert(hits.size == 1, s"dot kernel must be written once, found at: ${hits.mkString(", ")}")
+  }
 }
